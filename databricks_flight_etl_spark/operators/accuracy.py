@@ -650,11 +650,22 @@ def chi_square_independence(
     obs = df.groupBy(col_a, col_b).agg(F.count(F.lit(1)).alias("o"))
     ra = df.groupBy(col_a).agg(F.count(F.lit(1)).alias("ra"))
     rb = df.groupBy(col_b).agg(F.count(F.lit(1)).alias("rb"))
-    tot = df.agg(F.count(F.lit(1)).alias("n"))
+    # Category counts ride the total's aggregate over the RAW df (r15
+    # folded the two marginal count() actions away — guide §1.2 step 1,
+    # every action is a pass at scale). They cannot be taken over
+    # ``cells``: its marginal equi-joins are null-unsafe, so a NULL
+    # category's cells never reach it. Over df, the struct wrapper
+    # makes a NULL category count as one distinct value, matching the
+    # groupBy's null group (and the oracle's count(*) over ra / rb).
+    tot = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_distinct(F.struct(col_a)).alias("__ka"),
+        F.count_distinct(F.struct(col_b)).alias("__kb"),
+    )
     cells = (
         obs.join(F.broadcast(ra), col_a)
         .join(F.broadcast(rb), col_b)
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(F.broadcast(tot.select("n")))
         .select(
             col_a,
             col_b,
@@ -664,20 +675,12 @@ def chi_square_independence(
             "n",
         )
     )
-    # dof rides the stat aggregate (r15: two fewer eager count() jobs —
-    # guide §1.2 step 1, every action is a pass at scale). Every df row
-    # lands in some observed cell, so distinct col_a/col_b over ``cells``
-    # equals ra.count()/rb.count() exactly; the struct wrapper makes a
-    # NULL category count as a distinct value, matching the groupBy's
-    # null group. Cast pins dof to the certified int type (count_distinct
-    # returns long).
     stat = cells.agg(
         F.sum((F.col("o") - F.col("e")) * (F.col("o") - F.col("e"))
               / F.col("e")).alias("chi2"),
         F.first("n").alias("n"),
-        F.count_distinct(F.struct(col_a)).alias("__ka"),
-        F.count_distinct(F.struct(col_b)).alias("__kb"),
-    )
+    ).crossJoin(F.broadcast(tot.select("__ka", "__kb")))
+    # cast pins dof to the certified int type (count_distinct is long)
     return stat.select(
         F.round("chi2", decimals).alias("chi2"),
         ((F.col("__ka") - 1) * (F.col("__kb") - 1))

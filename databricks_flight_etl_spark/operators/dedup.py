@@ -20,10 +20,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..partitioning import spread
+from ..partitioning import spread, under_parallel
 
 
-def _pin(df: DataFrame, persist: bool) -> DataFrame:
+def _pin(df: DataFrame) -> DataFrame:
     """Persist a subplan that downstream code references more than once.
 
     Without this, every reference to a self-joined side re-executes the
@@ -32,7 +32,7 @@ def _pin(df: DataFrame, persist: bool) -> DataFrame:
     instead of failing; callers running many one-shot jobs can
     ``spark.catalog.clearCache()`` between them, and long-lived 100 TB
     pipelines should checkpoint these tables to parquet instead."""
-    return df.persist(StorageLevel.MEMORY_AND_DISK) if persist else df
+    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 __all__ = [
     "normalize_text",
@@ -157,8 +157,8 @@ def _shingle_arrays(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFr
 
 
 def _staged_shingles(
-    df: DataFrame, text_col: str, id_col: str, k: int, persist: bool,
-) -> tuple[DataFrame | None, DataFrame | None]:
+    df: DataFrame, text_col: str, id_col: str, k: int,
+) -> tuple[DataFrame, DataFrame]:
     """ONE pinned normalize+shingle pass shared by every stage of a
     near-dup entry point — the guard's entropy aggregate, the stop-list
     document-frequency pass, the signature aggregate, and the verify's
@@ -176,16 +176,10 @@ def _staged_shingles(
     shingle transform. Aggregate consumers (min / count / sum) are
     order-insensitive, so sharing cannot perturb any certified value.
 
-    ``persist=False`` returns ``(None, None)``: the unpinned flow keeps
-    the documented streaming-pass shapes — pinning a corpus-scale
-    table to MEMORY_AND_DISK is exactly the disk-pressure hazard the
-    guard's docstring describes, so opting out of caching opts out of
-    staging too. Memory note for the pinned path: callers previously
-    pinned the exploded long table (stop-list path) AND the verify's
-    array table; one array-form pin is strictly smaller than either."""
-    if not persist:
-        return None, None
-    arrs = _pin(_shingle_arrays(df, text_col, id_col, k), True)
+    Memory note: callers previously pinned the exploded long table
+    (stop-list path) AND the verify's array table; one array-form pin
+    is strictly smaller than either."""
+    arrs = _pin(_shingle_arrays(df, text_col, id_col, k))
     st = arrs.select("__id", F.explode("__shs").alias("__sh"))
     return arrs, st
 
@@ -326,21 +320,20 @@ def last_guard_profile() -> dict | None:
 
 
 def _bg_jaccard_guard(
-    df: DataFrame, text_col: str, st: DataFrame,
+    arrs: DataFrame, st: DataFrame,
     guard: str, threshold: float = BG_JACCARD_GUARD,
     caller: str = "LSH",
-    arrs: DataFrame | None = None,
 ) -> None:
     """Default-on pre-flight entropy guard for the LSH entry points:
     computes the sums-only core of :func:`shingle_df_profile` (the
-    quantile columns are skipped) over ``st`` and warns or raises when
-    the closed-form background Jaccard estimate predicts a quadratic
-    candidate self-join and no stop-shingle mitigation was requested.
-    Callers pass an UN-pinned shingle table on purpose: the guard is
-    one streaming shingling+aggregate pass with ZERO cache footprint —
-    pinning the corpus-scale table to MEMORY_AND_DISK just for the
-    guard would create the very disk-pressure failure mode it exists
-    to prevent (the cost is that the signature pass re-shingles).
+    quantile columns are skipped) over the caller's staged shingle
+    table ``st`` and warns or raises when the closed-form background
+    Jaccard estimate predicts a quadratic candidate self-join and no
+    stop-shingle mitigation was requested. ``arrs`` is the pinned
+    per-doc array frame ``st`` explodes (see :func:`_staged_shingles`):
+    the guard's collect materializes that cache, and the signature and
+    verify passes then reuse it, so the guard's marginal cost is one
+    aggregate.
 
     Why it exists: the round-8 scale probe showed that running banded
     LSH on a low-entropy corpus WITHOUT ``max_df`` produces |bucket|²
@@ -352,10 +345,7 @@ def _bg_jaccard_guard(
     NOTE this makes the entry points EAGER (ONE small Spark action — the
     df-distribution aggregate with the doc count riding along as a
     broadcast 1-row agg — runs at call time rather than at the first
-    action; r14 folded the former separate pruned-scan count job into
-    it, and ``arrs`` lets a pinned caller take the count from the staged
-    per-doc arrays instead of re-scanning the raw corpus). Pass
-    ``guard='off'`` to keep them fully lazy, or supply
+    action). Pass ``guard='off'`` to keep them fully lazy, or supply
     ``max_df``/``max_df_frac``/``stops`` — a mitigated call never runs
     the guard. Whenever the guard DOES run, its measurement is retained
     for logging — read it back via :func:`last_guard_profile` (round-9
@@ -377,15 +367,10 @@ def _bg_jaccard_guard(
     )
     # ONE action for the whole measurement (guide §1.2/§2.4: every eager
     # driver action is a full pass at corpus scale). n_docs rides along
-    # as a broadcast 1-row agg instead of a second count job; with the
-    # caller's pinned staging (``arrs``: one row per non-null-text doc,
-    # by construction of _shingle_arrays) the doc count reads the
-    # about-to-be-cached arrays instead of RE-SCANNING the raw corpus.
-    ndocs_src = (
-        arrs if arrs is not None
-        else df.where(F.col(text_col).isNotNull())
-    )
-    nd = ndocs_src.agg(F.count(F.lit(1)).alias("__n_docs"))
+    # as a broadcast 1-row agg over the staged arrays (one row per
+    # non-null-text doc, by construction of _shingle_arrays) instead of
+    # a second job re-scanning the raw corpus.
+    nd = arrs.agg(F.count(F.lit(1)).alias("__n_docs"))
     row = stats.crossJoin(F.broadcast(nd)).collect()[0]
     n = int(row["__n_docs"])
     global _LAST_GUARD_PROFILE
@@ -468,8 +453,8 @@ def shingle_stop_list(
 
     At the 100 TB regime, run THIS function once over a checkpointed
     shingle table, persist its (tiny) output, and pass it to the LSH
-    entry points via their ``stops=`` parameter — that path never
-    caches the corpus-scale shingle table (see the footprint note on
+    entry points via their ``stops=`` parameter — that path skips the
+    in-line df pass (see the footprint note on
     :func:`minhash_dedup_pairs`).
     """
     max_df = resolve_max_df(df, text_col, max_df, max_df_frac)
@@ -525,7 +510,6 @@ def shingle_df_profile(
     dfreq = _pin(
         shingle_stop_list(df, text_col, id_col, shingle_k, max_df=0,
                           table=table),
-        persist=True,
     )  # max_df=0 → every shingle with its df
     n_docs = df.where(F.col(text_col).isNotNull()).select(
         F.count(F.lit(1)).alias("n_docs")
@@ -751,9 +735,7 @@ def minhash_probe(
     id_col: str,
     threshold: float = 0.8,
     num_perm: int = 32, bands: int = 4, shingle_k: int = 5,
-    persist: bool = True,
     hash_family: str = "xxhash64",
-    verify: str = "intersect",
     stops: DataFrame | None = None,
 ) -> DataFrame:
     """INCREMENTAL near-dup: which new documents near-duplicate the
@@ -783,7 +765,6 @@ def minhash_probe(
             new_df, text_col, id_col, num_perm, bands, shingle_k,
             hash_family, stops=stops,
         ).select(F.col(id_col).alias("id_a"), "band", "band_hash"),
-        persist,
     )
     idx = index_bands.select(
         F.col(id_col).alias("id_b"), "band", "band_hash"
@@ -793,14 +774,12 @@ def minhash_probe(
         .where(F.col("id_a") != F.col("id_b"))
         .select("id_a", "id_b")
         .distinct(),
-        persist,
     )
     both = new_df.select(F.col(id_col), F.col(text_col)).unionByName(
         corpus_df.select(F.col(id_col), F.col(text_col))
     )
     out = _jaccard_verified(
-        both, text_col, id_col, cands, threshold, shingle_k, persist,
-        strategy=verify, stops=stops,
+        both, text_col, id_col, cands, threshold, shingle_k, stops=stops,
     )
     return out.select(
         F.col("id_a").alias("new_id"),
@@ -833,7 +812,6 @@ def auto_bands(num_perm: int, threshold: float) -> int:
 def minhash_candidate_pairs(
     df: DataFrame, text_col: str, id_col: str,
     num_perm: int = 32, bands: int = 4, shingle_k: int = 5,
-    persist: bool = True,
     hash_family: str = "xxhash64",
     stops: DataFrame | None = None,
     table: DataFrame | None = None,
@@ -857,7 +835,6 @@ def minhash_candidate_pairs(
             df, text_col, id_col, num_perm, bands, shingle_k, hash_family,
             stops=stops, table=table,
         ).select(F.col(id_col).alias("__id"), "band", "band_hash"),
-        persist,
     )
     left = long.select(
         F.col("__id").alias("id_a"), "band", "band_hash"
@@ -875,30 +852,20 @@ def minhash_candidate_pairs(
 
 def _jaccard_verified(
     df: DataFrame, text_col: str, id_col: str, pairs: DataFrame,
-    threshold: float, shingle_k: int, persist: bool = True,
-    strategy: str = "intersect",
+    threshold: float, shingle_k: int,
     stops: DataFrame | None = None,
     arrs: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs. Two physical
-    strategies, identical results (both compute |A∩B| over DISTINCT
-    shingles exactly — pinned equal by test):
-
-    - ``intersect`` (default): join each pair to its two per-doc
-      shingle arrays and take ``size(array_intersect(a, b))`` per row —
-      two equi-joins, no explode/agg, and EXACT string intersection (no
-      hash step at all). Measured 5.5 s → 2.3 s cold at sf0.1 (the
-      inverted-index plan pays 3 extra shuffles + their codegen
-      compiles on kilobyte inputs — the r4 q_textprep_pipeline
-      regression's real cost). Per-pair work/memory is O(|A|+|B|),
-      the same arrays `_shingle_arrays` materializes anyway; the
-      shuffle payload is the candidate docs' shingle arrays (≈ text
-      size).
-    - ``index``: explode to (id, shingle-hash) rows and count matches
-      per pair via the inverted index — the join payload is 8 fixed
-      bytes per shingle, never the text, so prefer it when candidate
-      docs are huge (≫ MB) or a hot doc appears in very many pairs
-      (its array would be duplicated per pair under ``intersect``).
+    """Exact shingle-set Jaccard for candidate pairs: join each pair to
+    its two per-doc shingle arrays and take
+    ``size(array_intersect(a, b))`` per row — two equi-joins, no
+    explode/agg, and EXACT string intersection (no hash step at all).
+    Measured 5.5 s → 2.3 s cold at sf0.1 against the inverted-index
+    plan this replaced (3 extra shuffles + their codegen compiles on
+    kilobyte inputs — the r4 q_textprep_pipeline regression's real
+    cost). Per-pair work/memory is O(|A|+|B|), the same arrays
+    `_shingle_arrays` materializes anyway; the shuffle payload is the
+    candidate docs' shingle arrays (≈ text size).
 
     Only docs that appear in some candidate pair are even SHINGLED
     (left-semi prune on the raw docs, before the shingle projection) —
@@ -908,12 +875,7 @@ def _jaccard_verified(
     from the caller's shared staging (see :func:`_staged_shingles`) —
     the semi prune then runs over the materialized arrays instead of
     re-normalizing + re-shingling the pruned raw docs, and the
-    narrow-scan probe (a full physical planning of the corpus
-    projection) is skipped entirely."""
-    if strategy not in ("intersect", "index"):
-        raise ValueError(
-            f"strategy must be 'intersect' or 'index', got {strategy!r}"
-        )
+    narrowness decision is skipped entirely."""
     ids = (
         pairs.select(F.col("id_a").alias("__id"))
         .unionByName(pairs.select(F.col("id_b").alias("__id")))
@@ -925,28 +887,28 @@ def _jaccard_verified(
         # already taken when the staging was built
         arrs = arrs.join(ids, "__id", "left_semi")
     else:
-        # prune + canonicalize BEFORE the semi join so the narrow-scan
-        # probe below plans ONLY the corpus projection (null filter
-        # still pushes to the scan; filter and semi join commute)
+        # prune + canonicalize BEFORE the semi join so the narrowness
+        # decision below looks ONLY at the corpus projection (null
+        # filter still pushes to the scan; filter and semi join commute)
         base = df.where(F.col(text_col).isNotNull()).select(
             F.col(id_col).alias("__id"), F.col(text_col).alias("__raw")
         )
         docs = base.join(ids, "__id", "left_semi")  # AQE broadcasts ids
-        # Narrow-scan detection runs on the CORPUS plan, not the joined
-        # plan: probing docs.rdd here forced full physical planning of
-        # the entire candidate lineage — measured ~8 s of cold driver
-        # time at sf0.1, the q_minhash_clusters fixed-overhead floor
-        # (round-11) — while a broadcast semi join preserves base's
-        # partitioning anyway, so base's split count IS the joined
-        # side's in exactly the case the spread matters (few-split scan
-        # + small candidate set). When the ids side is instead
-        # shuffle-joined, the output is already target-partitioned and
-        # the extra keyed repartition of the (small, candidates-only)
-        # doc set is one cheap exchange.
-        sc_ = df.sparkSession.sparkContext
-        if (not df.isStreaming
-                and base.rdd.getNumPartitions() < sc_.defaultParallelism):
-            docs = docs.repartition(sc_.defaultParallelism, "__id")
+        # Narrowness is decided on the CORPUS plan, not the joined plan
+        # (planning the whole candidate lineage cost ~8 s of cold driver
+        # time at sf0.1 — round 11), and through partitioning's zero-job
+        # estimate, never an .rdd probe (under AQE that executes the
+        # corpus lineage's query stages at construction time). A
+        # broadcast semi join preserves base's partitioning, so base's
+        # split count IS the joined side's in exactly the case the
+        # spread matters (few-split scan + small candidate set). When
+        # the ids side is instead shuffle-joined, the output is already
+        # target-partitioned and the extra keyed repartition of the
+        # (small, candidates-only) doc set is one cheap exchange.
+        if under_parallel(base):
+            docs = docs.repartition(
+                df.sparkSession.sparkContext.defaultParallelism, "__id"
+            )
         arrs = _shingle_arrays_pre(docs, shingle_k)
     if stops is not None:
         # Jaccard over the FILTERED sets — the same exclusion the
@@ -967,7 +929,7 @@ def _jaccard_verified(
         # boundary makes those inferred filters cheap array ops on the
         # cached rows instead.
         arrs = (
-            _pin(arrs, persist)
+            _pin(arrs)
             .select("__id", F.explode("__shs").alias("__sh"))
             .join(
                 stops.select(F.col("shingle").alias("__sh")), "__sh",
@@ -976,50 +938,22 @@ def _jaccard_verified(
             .groupBy("__id")
             .agg(F.collect_list("__sh").alias("__shs"))
         )
-    arrs = _pin(arrs, persist)
-    if strategy == "intersect":
-        a = arrs.select(
-            F.col("__id").alias("id_a"), F.col("__shs").alias("__sa")
-        )
-        b = arrs.select(
-            F.col("__id").alias("id_b"), F.col("__shs").alias("__sb")
-        )
-        out = (
-            pairs.join(a, "id_a").join(b, "id_b")
-            .withColumn(
-                "__shared", F.size(F.array_intersect("__sa", "__sb"))
-            )
-            .withColumn(
-                "jaccard",
-                F.col("__shared")
-                / (F.size("__sa") + F.size("__sb") - F.col("__shared")),
-            )
-        )
-        return out.where(F.col("jaccard") >= threshold).select(
-            "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
-        )
-    # per-row set size — no groupBy over the exploded table needed
-    sizes = arrs.select("__id", F.size("__shs").alias("__sz"))
-    # join key is the shingle HASH — 8 fixed bytes through the shuffle
-    sh = arrs.select("__id", F.explode("__shs").alias("__sh")).select(
-        "__id", F.xxhash64("__sh").alias("__sh")
+    arrs = _pin(arrs)
+    a = arrs.select(
+        F.col("__id").alias("id_a"), F.col("__shs").alias("__sa")
     )
-    a = sh.select(F.col("__id").alias("id_a"), F.col("__sh"))
-    b = sh.select(F.col("__id").alias("id_b"), F.col("__sh"))
-    shared = (
-        a.join(pairs, "id_a").join(b, ["id_b", "__sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__shared"))
+    b = arrs.select(
+        F.col("__id").alias("id_b"), F.col("__shs").alias("__sb")
     )
     out = (
-        shared.join(sizes.withColumnRenamed("__id", "id_a")
-                    .withColumnRenamed("__sz", "__sza"), "id_a")
-        .join(sizes.withColumnRenamed("__id", "id_b")
-              .withColumnRenamed("__sz", "__szb"), "id_b")
+        pairs.join(a, "id_a").join(b, "id_b")
+        .withColumn(
+            "__shared", F.size(F.array_intersect("__sa", "__sb"))
+        )
         .withColumn(
             "jaccard",
             F.col("__shared")
-            / (F.col("__sza") + F.col("__szb") - F.col("__shared")),
+            / (F.size("__sa") + F.size("__sb") - F.col("__shared")),
         )
     )
     return out.where(F.col("jaccard") >= threshold).select(
@@ -1031,9 +965,8 @@ def minhash_dedup_pairs(
     df: DataFrame, text_col: str, id_col: str,
     threshold: float = 0.8, num_perm: int = 32,
     bands: int | None = 4,
-    shingle_k: int = 5, persist: bool = True,
+    shingle_k: int = 5,
     hash_family: str = "xxhash64",
-    verify: str = "intersect",
     max_df: int | None = None,
     max_df_frac: float | None = None,
     stops: DataFrame | None = None,
@@ -1042,22 +975,17 @@ def minhash_dedup_pairs(
     output: str = "pairs",
 ) -> DataFrame:
     """Near-duplicate pairs: MinHash-LSH candidates → exact Jaccard ≥
-    threshold. Output (id_a, id_b, jaccard), id_a < id_b.
-
-    ``verify`` picks the exact-Jaccard physical strategy (identical
-    results): 'intersect' (default — per-pair array_intersect, fewest
-    shuffles) or 'index' (inverted 8-byte-hash join — prefer for
-    huge documents / extremely hot candidate ids; see
-    ``_jaccard_verified``).
+    threshold. Output (id_a, id_b, jaccard), id_a < id_b. The verify
+    is the per-pair array_intersect join (see ``_jaccard_verified``).
 
     ``bands=None`` derives the band count from ``threshold`` via
     :func:`auto_bands` (recall-safe for any threshold); the explicit
     default stays 4 so oracle-certified configurations — whose SQL
     replays a pinned band shape — are unaffected.
 
-    ``persist`` pins the multiply-referenced intermediates (banded
-    signatures, candidate pairs, verify shingles) so each is computed
-    once instead of once per plan reference — see ``_pin``.
+    The multiply-referenced intermediates (staged shingles, banded
+    signatures, candidate pairs, verify arrays) are pinned so each is
+    computed once instead of once per plan reference — see ``_pin``.
 
     ``hash_family='md5'`` makes every stage engine-portable (see
     ``_base_hash``) at ~md5-vs-xxhash64 cost — the certification
@@ -1077,15 +1005,14 @@ def minhash_dedup_pairs(
     survives scale changes (see :func:`resolve_max_df`); pass one or
     the other, not both.
 
-    FOOTPRINT of the in-line df pass: with ``max_df``/``max_df_frac``
-    the full exploded shingle table (≈ shingle_k × corpus text bytes)
-    is pinned MEMORY_AND_DISK so the df pass and the signature pass
-    share one shingling — at the 100 TB regime that spill can itself
-    exhaust local disk. For corpora anywhere near that size, compute
-    the (tiny) stop list ONCE with :func:`shingle_stop_list` over a
-    checkpointed shingle table, persist it, and pass it here via
-    ``stops=`` — that path never caches the corpus-scale table and
-    the list is reusable across minhash/simhash/funnel runs.
+    FOOTPRINT: the per-doc shingle arrays (≈ shingle_k × corpus text
+    bytes) are pinned MEMORY_AND_DISK so the guard, the df pass, the
+    signatures and the verify share one shingling (see
+    :func:`_staged_shingles`) — at the 100 TB regime that spill can
+    itself exhaust local disk. Compute the (tiny) stop list ONCE with
+    :func:`shingle_stop_list` over a checkpointed shingle table,
+    persist it, and pass it here via ``stops=`` — the list is reusable
+    across minhash/simhash/funnel runs and skips the in-line df pass.
 
     ``guard`` ('warn' default | 'raise' | 'off'): when NO stop-shingle
     mitigation is requested, a cheap pre-flight aggregate estimates
@@ -1127,47 +1054,32 @@ def minhash_dedup_pairs(
         )
     max_df = resolve_max_df(df, text_col, max_df, max_df_frac)
     # One pinned shingle pass feeds the guard, the stop-list df pass,
-    # the signatures AND the verify arrays (see _staged_shingles);
-    # persist=False keeps the historical unpinned streaming passes.
-    arrs, st = _staged_shingles(df, text_col, id_col, shingle_k, persist)
+    # the signatures AND the verify arrays (see _staged_shingles).
+    arrs, st = _staged_shingles(df, text_col, id_col, shingle_k)
     if stops is not None:
         stops = stops.select("shingle")  # caller-supplied, never cached
     elif max_df is not None:
-        # the document-frequency pass reads the shared staging; with
-        # persist=False it builds (and does not cache) its own table —
-        # the pre-staging shape (review finding, round 8)
-        if st is None:
-            st = _shingle_table(df, text_col, id_col, shingle_k)
         stops = _pin(
             shingle_stop_list(df, text_col, id_col, shingle_k, max_df,
                               table=st),
-            persist,
         )
     elif guard != "off":
-        # pre-flight entropy check. Unpinned (persist=False) runs keep
-        # the ONE-STREAMING-PASS shape — materializing a corpus-scale
-        # table just for the guard would create the disk-pressure
-        # failure mode it exists to prevent; pinned runs aggregate over
-        # the shared staging instead (the cache is materialized by this
-        # eager collect and then reused by the signature + verify
-        # passes, so the guard's marginal cost drops to one aggregate).
+        # pre-flight entropy check over the shared staging: its eager
+        # collect materializes the cache the signature + verify passes
+        # then reuse, so the guard's marginal cost is one aggregate
         _bg_jaccard_guard(
-            df, text_col,
-            st if st is not None
-            else _shingle_table(df, text_col, id_col, shingle_k),
-            guard, guard_threshold, caller="minhash_dedup_pairs",
-            arrs=arrs,
+            arrs, st, guard, guard_threshold,
+            caller="minhash_dedup_pairs",
         )
     cands = _pin(
         minhash_candidate_pairs(
-            df, text_col, id_col, num_perm, bands, shingle_k, persist,
+            df, text_col, id_col, num_perm, bands, shingle_k,
             hash_family, stops=stops, table=st,
         ),
-        persist,
     )
     out = _jaccard_verified(
-        df, text_col, id_col, cands, threshold, shingle_k, persist,
-        strategy=verify, stops=stops, arrs=arrs,
+        df, text_col, id_col, cands, threshold, shingle_k,
+        stops=stops, arrs=arrs,
     )
     if output == "clusters":
         from .graph import connected_components
@@ -1255,7 +1167,7 @@ def simhash64(df: DataFrame, text_col: str, id_col: str,
 
 def simhash_near_dup_pairs(
     df: DataFrame, text_col: str, id_col: str,
-    max_hamming: int = 3, shingle_k: int = 5, persist: bool = True,
+    max_hamming: int = 3, shingle_k: int = 5,
     hash_family: str = "xxhash64",
     max_df: int | None = None,
     max_df_frac: float | None = None,
@@ -1308,32 +1220,24 @@ def simhash_near_dup_pairs(
         stops = stops.select("shingle")  # never cached
     elif max_df is not None:
         # one shared shingle pass for both the df pass and the
-        # signature sums (see minhash_dedup_pairs / _staged_shingles;
-        # persist=False keeps the historical unpinned table)
-        _, st = _staged_shingles(df, text_col, id_col, shingle_k, persist)
-        if st is None:
-            st = _shingle_table(df, text_col, id_col, shingle_k)
+        # signature sums (see minhash_dedup_pairs / _staged_shingles)
+        _, st = _staged_shingles(df, text_col, id_col, shingle_k)
         stops = _pin(
             shingle_stop_list(df, text_col, id_col, shingle_k, max_df,
                               table=st),
-            persist,
         )
     elif guard != "off":
-        # guard + signature sums share one staged pass when pinned;
-        # un-pinned runs keep the streaming pass — footprint rationale
-        # on minhash_dedup_pairs
-        arrs, st = _staged_shingles(df, text_col, id_col, shingle_k, persist)
+        # guard + signature sums share one staged pass — see
+        # minhash_dedup_pairs
+        arrs, st = _staged_shingles(df, text_col, id_col, shingle_k)
         _bg_jaccard_guard(
-            df, text_col,
-            st if st is not None
-            else _shingle_table(df, text_col, id_col, shingle_k),
-            guard, guard_threshold, caller="simhash_near_dup_pairs",
-            arrs=arrs,
+            arrs, st, guard, guard_threshold,
+            caller="simhash_near_dup_pairs",
         )
     sig = simhash64(df, text_col, id_col, shingle_k, hash_family,
                     stops=stops, table=st)
     out = hamming_near_dup_pairs(
-        sig, "simhash", id_col, max_hamming=max_hamming, persist=persist
+        sig, "simhash", id_col, max_hamming=max_hamming
     )
     if output == "clusters":
         from .graph import connected_components
@@ -1346,7 +1250,7 @@ def simhash_near_dup_pairs(
 
 def hamming_near_dup_pairs(
     df: DataFrame, sig_col: str, id_col: str,
-    max_hamming: int = 3, persist: bool = True,
+    max_hamming: int = 3,
 ) -> DataFrame:
     """Near-dup pairs over ANY 64-bit fingerprint column with
     Hamming(sig) ≤ max_hamming: the signature-agnostic core of
@@ -1377,7 +1281,7 @@ def hamming_near_dup_pairs(
     stack = "stack({n}, {args}) as (chunk_idx, chunk_val)".format(
         n=nchunks, args=", ".join(f"{i}, c_{i}" for i in range(nchunks))
     )
-    long = _pin(wide.select("__id", "__sig", F.expr(stack)), persist)
+    long = _pin(wide.select("__id", "__sig", F.expr(stack)))
     a = long.select(
         F.col("__id").alias("id_a"), F.col("__sig").alias("sh_a"),
         "chunk_idx", "chunk_val",
@@ -1411,7 +1315,6 @@ def ngram_jaccard_pairs(
     df: DataFrame, text_col: str, id_col: str,
     threshold: float = 0.5, shingle_k: int = 5,
     max_df: int | None = _NGRAM_MAX_DF_UNSET,  # type: ignore[assignment]
-    persist: bool = True,
     max_df_frac: float | None = None,
 ) -> DataFrame:
     """All pairs with shingle-Jaccard ≥ threshold via the inverted
@@ -1454,7 +1357,7 @@ def ngram_jaccard_pairs(
             .select("__sh")
         )
         sh = sh.join(rare, "__sh", "left_semi")
-    sh = _pin(sh, persist)  # referenced by sizes + both join sides
+    sh = _pin(sh)  # referenced by sizes + both join sides
     sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("__sz"))
     a = sh.select(F.col("__id").alias("id_a"), "__sh")
     b = sh.select(F.col("__id").alias("id_b"), "__sh")
@@ -1544,25 +1447,11 @@ def _hash_injective(tok_stats: DataFrame) -> bool:
     return tok_stats.where(F.col("__nt") > 1).isEmpty()
 
 
-# Injectivity verdicts keyed by the token-stats plan's semantic hash
-# (r15): repeated constructions over the SAME source plan — plan
-# audits dumping every registry query, the containment twin sharing a
-# query's tokenizer lineage, re-built pipelines in one process — reuse
-# the probe's verdict instead of re-running its job. Sources are
-# treated as immutable within a process (the same assumption _pin's
-# caching already makes); frames built from in-memory rows get a fresh
-# LogicalRDD — and so a fresh semantic hash — per creation, so tests
-# and ad-hoc frames never share stale verdicts.
-_INJECTIVITY_MEMO: dict[int, bool] = {}
-
-
 def _ordered_prefixes(
     df: DataFrame,
     set_col: str,
     id_col: str,
     threshold: float,
-    persist: bool,
-    mode: str = "auto",
 ) -> tuple[DataFrame, bool]:
     """Shared PPJoin staging for set_similarity_join / containment_join:
     returns ((__id, __sorted, __prefix), hashed) where __sorted is the
@@ -1577,8 +1466,8 @@ def _ordered_prefixes(
     Extracted (r13) so both joins share one staging and tests can
     assert the staged positions directly instead of re-deriving them.
 
-    HASHED MODE (r14 — the 100x probe's verify stage was byte-bound on
-    ~30-byte shingle strings: 20M candidates × two ~3.5 KB string
+    HASHED STAGING (r14 — the 100x probe's verify stage was byte-bound
+    on ~30-byte shingle strings: 20M candidates × two ~3.5 KB string
     arrays ≈ 140 GB of verify shuffle): when xxhash64 is INJECTIVE on
     this corpus's distinct tokens — checked exactly via the per-hash
     (df, distinct-token-count) aggregate the df-count consumer reuses
@@ -1595,19 +1484,10 @@ def _ordered_prefixes(
     collision (needs ~2³² distinct tokens for even coin-flip odds) the
     staging falls back to the string pipeline, preserving exactness;
     ``hashed`` tells callers which element type the arrays hold. The
-    injectivity probe makes this function EAGER (one bounded action at
-    build time) — the same bounded-driver-action budget as the graph
-    module's edge gate — MEMOIZED per source plan (r15, see
-    ``_INJECTIVITY_MEMO``) so repeated constructions run zero jobs.
-
-    ``mode`` (r15) picks the staging explicitly: ``'auto'`` (default)
-    probes as above; ``'strings'`` skips the probe AND the hashed
-    staging — always exact, zero construction jobs, token-string-sized
-    shuffles; ``'hashed'`` skips the probe and TRUSTS the caller that
-    the corpus vocabulary is collision-free under xxhash64 — zero
-    construction jobs, long-sized shuffles, but an actual collision
-    would merge tokens inside the verify counts, so certified callers
-    must keep ``'auto'``.
+    injectivity probe makes this function EAGER: one bounded action on
+    EVERY construction — the same bounded-driver-action budget as the
+    graph module's edge gate. The verdict is never cached across
+    constructions, so a source rewritten in place is always re-probed.
 
     Float-boundary note (audited r13, after the overlap-bound fix):
     the ceil in the prefix-length formula is SAFE, unlike the removed
@@ -1621,62 +1501,34 @@ def _ordered_prefixes(
     lossless. The removed bound failed in the opposite direction
     because its result was COMPARED AGAINST an integer count, where
     rounding up by one ulp flips the comparison."""
-    if mode not in ("auto", "hashed", "strings"):
-        raise ValueError(
-            f"mode must be 'auto', 'hashed' or 'strings', got {mode!r}"
-        )
     toks = _pin(
         df.select(
             F.col(id_col).alias("__id"),
             F.array_distinct(F.col(set_col)).alias("__s"),
         ).where(F.size("__s") > 0),
-        persist,
     )
     tok = F.explode("__s").alias("__t")
-    if mode == "strings":
-        # probe-free exact path: the string total order needs no
-        # injectivity evidence, so construction runs ZERO Spark jobs
-        hashed = False
-        tok_stats = None
-    else:
-        # ONE explode pass serves both the injectivity probe and the
-        # df-count: per-hash (document frequency, distinct-token count)
-        # — the probe is then a bounded emptiness action on the pinned
-        # aggregate the df-join reuses, not a second corpus pass (r14).
-        # Pinned UNCONDITIONALLY (r15): the table is VOCABULARY-bounded
-        # — two longs per distinct token, never corpus-scale — and in
-        # the persist=False flow the probe plus the df-count consumer
-        # would otherwise each replay the full tokenizer lineage (the
-        # r14 advice finding).
-        tok_stats = _pin(
-            toks.select(tok)
-            .groupBy(F.xxhash64("__t").alias("__h"))
-            .agg(
-                F.count(F.lit(1)).alias("__df"),
-                F.countDistinct("__t").alias("__nt"),
-            ),
-            True,
-        )
-        if mode == "hashed":
-            # caller-asserted injectivity: zero construction jobs, but
-            # a real 64-bit collision would MERGE tokens in the verify
-            # counts — exactness is the caller's claim, not checked
-            hashed = True
-        else:
-            memo_key = (
-                tok_stats._jdf.queryExecution().analyzed().semanticHash()
-            )
-            hashed = _INJECTIVITY_MEMO.get(memo_key)
-            if hashed is None:
-                hashed = _hash_injective(tok_stats)
-                _INJECTIVITY_MEMO[memo_key] = hashed
+    # ONE explode pass serves both the injectivity probe and the
+    # df-count: per-hash (document frequency, distinct-token count) —
+    # the probe is then a bounded emptiness action on the pinned
+    # aggregate the df-join reuses, not a second corpus pass (r14). The
+    # table is VOCABULARY-bounded: two longs per distinct token, never
+    # corpus-scale.
+    tok_stats = _pin(
+        toks.select(tok)
+        .groupBy(F.xxhash64("__t").alias("__h"))
+        .agg(
+            F.count(F.lit(1)).alias("__df"),
+            F.countDistinct("__t").alias("__nt"),
+        ),
+    )
+    hashed = _hash_injective(tok_stats)
     t = F.xxhash64("__t") if hashed else F.col("__t")
     if hashed:
         tok_df = tok_stats.select(F.col("__h").alias("__t"), "__df")
     else:
-        # collision fallback (and the 'strings' path): document
-        # frequency on the raw token strings (a collided hashed table
-        # would have merged ≥2 tokens)
+        # collision fallback: document frequency on the raw token
+        # strings (a collided hashed table would have merged ≥2 tokens)
         tok_df = (
             toks.select(tok)
             .groupBy("__t")
@@ -1703,7 +1555,6 @@ def _ordered_prefixes(
             "__id", "__sorted",
             F.slice("__sorted", 1, prefix_len).alias("__prefix"),
         ),
-        persist,
     ), hashed
 
 
@@ -1712,8 +1563,6 @@ def set_similarity_join(
     set_col: str,
     id_col: str,
     threshold: float = 0.6,
-    persist: bool = True,
-    mode: str = "auto",
 ) -> DataFrame:
     """EXACT all-pairs Jaccard join over token SETS via prefix
     filtering (PPJoin family, Xiao et al. WWW'08): provably LOSSLESS,
@@ -1740,15 +1589,11 @@ def set_similarity_join(
     the TRUE answer is O(n²) pairs and no exact algorithm beats
     that — cap the input or raise the threshold there.
 
-    ``mode``: staging selection — 'auto' (probed hashed staging,
-    exact), 'strings' (probe-free, exact, zero construction jobs) or
-    'hashed' (probe-free, trusts xxhash64 injectivity on this corpus);
-    see :func:`_ordered_prefixes`."""
+    Construction runs one bounded injectivity probe to pick hashed or
+    string staging (exact either way); see :func:`_ordered_prefixes`."""
     if not 0 < threshold <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    pref, hashed = _ordered_prefixes(
-        df, set_col, id_col, threshold, persist, mode
-    )
+    pref, hashed = _ordered_prefixes(df, set_col, id_col, threshold)
     # candidates meet on BARE IDS + two ints (set size, prefix token
     # position): dedupe (id_a, id_b) while the rows are narrow, then
     # re-join the pinned per-doc arrays for the verify — shuffling the
@@ -1773,7 +1618,7 @@ def set_similarity_join(
     #     ceil(t·(na+nb)/(1+t)) overlap form would round UP at exact
     #     rational boundaries (0.6·16/1.6 floats to 6.000…001 → ceil 7)
     #     and silently drop a pair whose exact Jaccard equals t.
-    # In hashed staging mode the prefix elements already ARE 8-byte
+    # Under hashed staging the prefix elements already ARE 8-byte
     # longs (exact under the checked bijection), so they join as-is;
     # in the string fallback the join key is xxhash64(token) — shingle
     # tokens are tens of bytes and the candidate join's shuffle+sort is
@@ -1869,8 +1714,6 @@ def containment_join(
     set_col: str,
     id_col: str,
     threshold: float = 0.9,
-    persist: bool = True,
-    mode: str = "auto",
 ) -> DataFrame:
     """ASYMMETRIC near-subset detection: pairs where
     |A∩B| / |A| ≥ threshold — A's content is (almost) contained in B.
@@ -1884,21 +1727,19 @@ def containment_join(
     candidates meet in an equi-join between A-prefix tokens and B's
     full token index. Exact verify within candidates. Lossless — the
     oracle is the brute-force scan. Output: (id_a, id_b, containment)
-    for a ≠ b, both directions reported independently. ``mode`` as in
-    :func:`set_similarity_join`."""
+    for a ≠ b, both directions reported independently. Staging (and
+    its injectivity probe) as in :func:`set_similarity_join`."""
     if not 0 < threshold <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     # NOTE: containment's prefix bound is one-sided (|A∩B| >= ⌈t·|A|⌉,
     # no B-side restriction), but the PER-DOC prefix length formula is
     # the same |s| − ⌈t·|s|⌉ + 1, so the staging is shared verbatim.
-    # In hashed staging mode (see _ordered_prefixes) the token arrays
+    # Under hashed staging (see _ordered_prefixes) the token arrays
     # hold 8-byte longs under a CHECKED bijection, so the candidate
     # equi-join and the intersect/size verify below are exact on
     # either element type — containment's counts, like Jaccard's,
     # depend only on token identity.
-    pref, _ = _ordered_prefixes(
-        df, set_col, id_col, threshold, persist, mode
-    )
+    pref, _ = _ordered_prefixes(df, set_col, id_col, threshold)
     # same narrow-dedupe-then-fetch shape as set_similarity_join:
     # pair ids meet and dedupe as two longs, arrays re-attach after
     a = pref.select(

@@ -17,7 +17,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
 
-__all__ = ["spread", "local_df"]
+__all__ = ["under_parallel", "spread", "local_df"]
 
 
 def _file_leaf_stats(df: DataFrame) -> tuple[int, int]:
@@ -71,6 +71,28 @@ def _estimated_scan_splits(df: DataFrame, target: int) -> int | None:
     return max(1, math.ceil(padded / max(1, max_split)))
 
 
+def under_parallel(df: DataFrame) -> bool:
+    """True when the plan's source arrives narrower than
+    ``sparkContext.defaultParallelism`` — the one narrowness decision
+    every repartition-if-narrow site shares (:func:`spread`, and the
+    dedup verify's candidate-doc repartition).
+
+    The estimate comes from the file-leaf sizes
+    (:func:`_estimated_scan_splits`) and runs zero Spark jobs; plans
+    with no file leaves (driver-local frames, cheap to plan by
+    construction) fall back to the exact ``rdd.getNumPartitions()``
+    probe. Streaming plans are never narrow: they have no ``.rdd``,
+    and micro-batch parallelism is the source's concern
+    (maxFilesPerTrigger / kafka partitions)."""
+    if df.isStreaming:
+        return False
+    target = df.sparkSession.sparkContext.defaultParallelism
+    est = _estimated_scan_splits(df, target)
+    if est is None:
+        est = df.rdd.getNumPartitions()
+    return est < target
+
+
 def spread(df: DataFrame, *keys: Column | str) -> DataFrame:
     """Raise map-side parallelism when (and only when) the plan's
     source arrives narrower than ``sparkContext.defaultParallelism``.
@@ -99,17 +121,9 @@ def spread(df: DataFrame, *keys: Column | str) -> DataFrame:
     core. Plans with no file leaves (driver-local frames) keep the
     exact probe — those lineages are cheap to plan by construction.
     """
-    if df.isStreaming:
-        # no .rdd on a streaming plan; micro-batch parallelism is the
-        # source's concern (maxFilesPerTrigger / kafka partitions)
+    if not under_parallel(df):
         return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    est = _estimated_scan_splits(df, target)
-    if est is None:
-        est = df.rdd.getNumPartitions()
-    if est >= target:
-        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if keys:
         return df.repartition(target, *keys)
     return df.repartition(target)

@@ -145,7 +145,6 @@ def run_textprep_pipeline(
     chunk_tokens: int = 64,
     overlap: int = 16,
     near_dup: bool = True,
-    persist: bool = True,
     hash_family: str = "xxhash64",
     bands: int | None = None,
     url_col: str | None = None,
@@ -206,19 +205,18 @@ def run_textprep_pipeline(
         & (F.col("n_tokens") <= max_tokens)
         & (F.col("stopword_ratio") <= max_stopword_ratio)
     )
-    lang_kept = quality_kept.where(F.col("lang_guess").isin(*langs))
-    if persist:
-        # exact_dedup's survivor semi-join references its input TWICE
-        # (digest-agg side + probe side); unpinned, the whole quality +
-        # lang expression chain re-executes for each — measured 2.4×
-        # the funnel's cold wall-clock at sf0.1. At 100 TB substitute a
-        # parquet checkpoint (module docstring).
-        lang_kept = lang_kept.persist(StorageLevel.MEMORY_AND_DISK)
+    # exact_dedup's survivor semi-join references its input TWICE
+    # (digest-agg side + probe side); unpinned, the whole quality + lang
+    # expression chain re-executes for each — measured 2.4× the funnel's
+    # cold wall-clock at sf0.1. At 100 TB substitute a parquet
+    # checkpoint (module docstring).
+    lang_kept = quality_kept.where(
+        F.col("lang_guess").isin(*langs)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
     exact_unique = dedup.exact_dedup(lang_kept, text_col, id_col)
     if near_dup:
-        if persist:
-            exact_unique = exact_unique.persist(StorageLevel.MEMORY_AND_DISK)
+        exact_unique = exact_unique.persist(StorageLevel.MEMORY_AND_DISK)
         # bands default to the threshold-derived shape (auto_bands):
         # the pipeline takes an arbitrary threshold, and a fixed
         # bands=4 under-recalls below its j~=0.84 midpoint; certified
@@ -229,7 +227,7 @@ def run_textprep_pipeline(
         # common shingle mass
         pairs = dedup.minhash_dedup_pairs(
             exact_unique, text_col, id_col,
-            threshold=near_dup_threshold, shingle_k=shingle_k, persist=persist,
+            threshold=near_dup_threshold, shingle_k=shingle_k,
             hash_family=hash_family,
             bands=bands if bands is not None
             else dedup.auto_bands(32, near_dup_threshold),
@@ -326,15 +324,13 @@ def run_corpus_release(
         "clean",
         F.size(text.tokens(F.col("clean"))).alias("n_tokens"),
     )
-    if textprep_kwargs.get("persist", True):
-        # FOUR consumers read this frame (the packer's two eager
-        # actions — id bounds and per-bucket sums — plus the window
-        # input and the final join-back), and its lineage holds the
-        # 6-regex PII pass: unpinned, that pass re-ran once per
-        # consumer (guide §5 — persist exactly the reused-and-expensive
-        # intermediates). Same persist knob as the funnel's own pins;
-        # at 100 TB substitute a parquet checkpoint (module docstring).
-        with_tokens = with_tokens.persist(StorageLevel.MEMORY_AND_DISK)
+    # FOUR consumers read this frame (the packer's two eager actions —
+    # id bounds and per-bucket sums — plus the window input and the
+    # final join-back), and its lineage holds the 6-regex PII pass:
+    # unpinned, that pass re-ran once per consumer (guide §5 — persist
+    # exactly the reused-and-expensive intermediates). At 100 TB
+    # substitute a parquet checkpoint (module docstring).
+    with_tokens = with_tokens.persist(StorageLevel.MEMORY_AND_DISK)
     packed = pack_by_token_budget(with_tokens, id_col, "n_tokens", budget)
     released = packed.join(
         with_tokens.select(F.col(id_col), "clean"), id_col

@@ -61,11 +61,11 @@ def test_minhash_near_dup(spark, docs):
 
 
 def test_jaccard_verify_strategies_identical(spark):
-    """r5: the verify stage's two physical strategies — per-pair
-    array_intersect (default; fewest shuffles, the q_textprep_pipeline
-    regression fix) and the inverted 8-byte-hash index (mega-doc
-    regime) — must return IDENTICAL (id_a, id_b, jaccard) rows on a
-    corpus with exact dups, near dups, and non-dups."""
+    """The verify's two input routes — the shared staged arrays
+    (minhash_dedup_pairs) and its own candidate-only shingling
+    (minhash_probe's route) — must return IDENTICAL (id_a, id_b,
+    jaccard) rows on a corpus with exact dups, near dups, and
+    non-dups."""
     base = "the quick brown fox jumps over the lazy dog " * 6
     rows = [
         (0, base),
@@ -76,20 +76,18 @@ def test_jaccard_verify_strategies_identical(spark):
         (4, base[:-30]),                             # truncated near dup
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    kw = dict(threshold=0.5, bands=8, shingle_k=7)
     a = sorted(map(tuple, dedup.minhash_dedup_pairs(
-        df, "text", "doc_id", verify="intersect", **kw).collect()))
-    b = sorted(map(tuple, dedup.minhash_dedup_pairs(
-        df, "text", "doc_id", verify="index", **kw).collect()))
-    assert a == b and len(a) >= 3
-    import pytest
-
-    with pytest.raises(ValueError, match="strategy"):
-        dedup._jaccard_verified(
-            df, "text", "doc_id",
-            spark.createDataFrame([], "id_a long, id_b long"),
-            0.5, 7, strategy="bogus",
-        )
+        df, "text", "doc_id", threshold=0.5, bands=8, shingle_k=7,
+    ).collect()))
+    assert len(a) >= 3 and all(3 not in p[:2] for p in a)
+    assert (0, 1, 1.0) in a
+    cands = dedup.minhash_candidate_pairs(
+        df, "text", "doc_id", bands=8, shingle_k=7,
+    )
+    b = sorted(map(tuple, dedup._jaccard_verified(
+        df, "text", "doc_id", cands, 0.5, 7,
+    ).collect()))
+    assert a == b
 
 
 def test_simhash_near_dup(spark, docs):
@@ -1737,7 +1735,7 @@ def test_set_similarity_join_exact_rational_boundary(spark):
         ordered = [h[t] for t in sorted(s, key=lambda t: (dfreq[t], h[t]))]
         plen = len(ordered) - math.ceil(2 / 3 * len(ordered)) + 1
         expect[rid] = (ordered, ordered[:plen])
-    pref_df, hashed = _ordered_prefixes(df, "s", "id", 2 / 3, False)
+    pref_df, hashed = _ordered_prefixes(df, "s", "id", 2 / 3)
     assert hashed
     pref = {
         r["__id"]: (list(r["__sorted"]), list(r["__prefix"]))
@@ -1769,15 +1767,11 @@ def test_set_similarity_string_fallback_identical(spark, monkeypatch):
 
     def run_both(fn, *args):
         hashed = {tuple(r) for r in fn(df, "s", "id", *args).collect()}
-        # the r15 memo caches the probe's verdict per source plan —
-        # clear it so the forced-collision hook is actually consulted
-        dedup._INJECTIVITY_MEMO.clear()
         monkeypatch.setattr(dedup, "_hash_injective", lambda toks: False)
         try:
             fell_back = {tuple(r) for r in fn(df, "s", "id", *args).collect()}
         finally:
             monkeypatch.undo()
-            dedup._INJECTIVITY_MEMO.clear()
         return hashed, fell_back
 
     h, s = run_both(dedup.set_similarity_join, 0.6)
@@ -1785,9 +1779,8 @@ def test_set_similarity_string_fallback_identical(spark, monkeypatch):
     h, s = run_both(dedup.containment_join, 0.8)
     assert h == s and h
     # the fallback staging really does hold strings
-    dedup._INJECTIVITY_MEMO.clear()
     monkeypatch.setattr(dedup, "_hash_injective", lambda toks: False)
-    pref, hashed = dedup._ordered_prefixes(df, "s", "id", 0.6, False)
+    pref, hashed = dedup._ordered_prefixes(df, "s", "id", 0.6)
     assert not hashed
     assert isinstance(pref.first()["__sorted"][0], str)
 

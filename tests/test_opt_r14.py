@@ -27,26 +27,26 @@ def docs(spark):
 
 def test_guard_profile_identical_pinned_vs_unpinned(spark, docs):
     """The merged one-action guard (doc count riding the distribution
-    aggregate, read from the staged arrays when pinned) must measure
-    exactly what the two-job form measured — same n_docs, same sums,
-    same estimate — in BOTH the pinned (arrs-count) and unpinned
-    (raw-scan-count) paths."""
-    profiles = {}
-    for persist in (True, False):
-        dedup.minhash_dedup_pairs(
-            docs, "text", "doc_id", shingle_k=5, persist=persist,
-            guard="warn",
-        )
-        profiles[persist] = dedup.last_guard_profile()
-        spark.catalog.clearCache()
-    a, b = profiles[True], profiles[False]
+    aggregate, read from the pinned staged arrays) must measure exactly
+    what the unpinned diagnostic measures over a raw-scan doc count —
+    same n_docs, same sums, same estimate — on a corpus with a
+    null-text row and a shorter-than-k text."""
+    dedup.minhash_dedup_pairs(
+        docs, "text", "doc_id", shingle_k=5, guard="warn",
+    )
+    got = dedup.last_guard_profile()
+    spark.catalog.clearCache()
+    ref = dedup.shingle_df_profile(
+        docs, "text", "doc_id", shingle_k=5, decimals=9
+    ).collect()[0]
     # n_docs = non-null-text docs (41 here: 40 lorem + 'tiny'; the
-    # null-text row must NOT count) — the staged-arrays count and the
-    # pruned raw-scan count must agree exactly
-    assert a["n_docs"] == b["n_docs"] == 41
-    for key in ("total_occurrences", "pair_mass", "bg_jaccard_est",
-                "triggered"):
-        assert a[key] == b[key], key
+    # null-text row must NOT count)
+    assert got["n_docs"] == ref["n_docs"] == 41
+    assert got["total_occurrences"] == ref["total_occurrences"]
+    assert got["bg_jaccard_est"] == pytest.approx(
+        float(ref["bg_jaccard_est"]), abs=1e-9
+    )
+    assert got["triggered"] is (got["bg_jaccard_est"] > got["threshold"])
 
 
 def test_union_find_stashes_exact_drop_count(spark):

@@ -3,9 +3,12 @@
 Like round 14's pins, these lock the equalities each optimization
 depends on — here, that the zero-job spread() decision (file-leaf size
 estimate) reproduces the old physical-plan probe's decision on both
-sides of the narrowness boundary, and that spread() no longer runs
-Spark jobs at DataFrame-construction time (under AQE, ``df.rdd`` on a
-plan with exchanges *executes its query stages* — the r15 finding).
+sides of the narrowness boundary, and that spread() and the dedup
+verify no longer run Spark jobs at DataFrame-construction time (under
+AQE, ``df.rdd`` on a plan with exchanges *executes its query stages* —
+the r15 finding). They also pin two r15 folds against regressions the
+fold introduced: PPJoin's injectivity verdict is re-probed on every
+construction, and chi-square's dof counts a NULL category.
 """
 
 from __future__ import annotations
@@ -67,23 +70,34 @@ def test_spread_runs_zero_jobs_on_exchange_bearing_plans(spark, tmp_path):
     assert n == 0
 
 
-def test_ppjoin_modes_agree_and_skip_the_probe(spark, tmp_path):
-    """'strings' and 'hashed' staging must produce the same pairs as
-    the probed 'auto' path on a collision-free corpus, and both
-    probe-free modes must run ZERO jobs at construction time."""
+def test_ppjoin_reprobes_a_rewritten_source(spark, tmp_path, monkeypatch):
+    """The injectivity verdict must never outlive the construction that
+    probed it: re-reading a path that was rewritten in place (same
+    analyzed plan, different files) must re-probe. A forced probe
+    failure stands in for the rewritten, now-colliding corpus — the
+    rebuilt join must fall back to string staging, not reuse the
+    earlier hashed verdict."""
     from databricks_flight_etl_spark.operators import dedup
 
-    path = str(tmp_path / "sets.parquet")
-    rows = [
-        (i, [f"tok{i % 9}_{j}" for j in range(6)] + ["shared"])
-        for i in range(30)
-    ]
-    spark.createDataFrame(rows, "doc_id long, toks array<string>").write.parquet(path)
-    df = spark.read.parquet(path)
+    path = str(tmp_path / "sets_rewritten.parquet")
+    spark.createDataFrame(
+        [(i, [f"w{i % 5}_{j}" for j in range(4)] + ["shared"])
+         for i in range(20)],
+        "doc_id long, toks array<string>",
+    ).write.parquet(path)
+    staged = []
+    real = dedup._ordered_prefixes
 
-    def pairs(mode):
+    def spy(*args, **kwargs):
+        pref, hashed = real(*args, **kwargs)
+        staged.append((pref, hashed))
+        return pref, hashed
+
+    monkeypatch.setattr(dedup, "_ordered_prefixes", spy)
+
+    def build():
         out = dedup.set_similarity_join(
-            df, "toks", "doc_id", threshold=0.6, mode=mode
+            spark.read.parquet(path), "toks", "doc_id", threshold=0.7
         )
         got = sorted(
             (r["id_a"], r["id_b"], r["jaccard"]) for r in out.collect()
@@ -91,47 +105,86 @@ def test_ppjoin_modes_agree_and_skip_the_probe(spark, tmp_path):
         spark.catalog.clearCache()
         return got
 
-    auto = pairs("auto")
-    assert auto  # the corpus must actually produce pairs
-    assert pairs("strings") == auto
-    assert pairs("hashed") == auto
-    # probe-free construction: zero jobs
-    for mode in ("strings", "hashed"):
-        n = _jobs_run_during(
-            spark,
-            lambda: dedup.set_similarity_join(
-                df, "toks", "doc_id", threshold=0.6, mode=mode
-            ),
-        )
-        assert n == 0, mode
-        spark.catalog.clearCache()
-    with pytest.raises(ValueError):
-        dedup.set_similarity_join(df, "toks", "doc_id", mode="bogus")
+    first = build()
+    assert first and staged[-1][1]  # collision-free: hashed staging
+    monkeypatch.setattr(dedup, "_hash_injective", lambda tok_stats: False)
+    second = build()
+    pref, hashed = staged[-1]
+    assert not hashed
+    assert isinstance(pref.first()["__sorted"][0], str)
+    spark.catalog.clearCache()
+    assert second == first  # exact under either staging
 
 
-def test_ppjoin_injectivity_probe_memoized(spark, tmp_path):
-    """Re-constructing the join over the same source plan must reuse
-    the probe's verdict (zero jobs) — plan audits construct every
-    registry query and previously paid the probe each time."""
+def test_minhash_probe_runs_zero_jobs_at_construction(spark, tmp_path):
+    """The verify's narrowness decision goes through partitioning's
+    zero-job estimate: building minhash_probe over a corpus lineage
+    that contains an exchange must not execute that lineage (an
+    ``.rdd`` partition probe under AQE runs its query stages)."""
     from databricks_flight_etl_spark.operators import dedup
 
-    path = str(tmp_path / "sets2.parquet")
+    corpus_path = str(tmp_path / "corpus.parquet")
+    new_path = str(tmp_path / "increment.parquet")
     spark.createDataFrame(
-        [(i, [f"w{i}_{j}" for j in range(4)]) for i in range(20)],
-        "doc_id long, toks array<string>",
-    ).write.parquet(path)
-    df = spark.read.parquet(path)
-    dedup.set_similarity_join(df, "toks", "doc_id", threshold=0.7)
-    spark.catalog.clearCache()
-    df2 = spark.read.parquet(path)  # fresh read, same source plan
+        [(i, f"corpus document body {i % 7} with words {i}")
+         for i in range(60)],
+        "doc_id long, text string",
+    ).write.parquet(corpus_path)
+    spark.createDataFrame(
+        [(1000 + i, f"corpus document body {i % 7} with words {i}")
+         for i in range(5)],
+        "doc_id long, text string",
+    ).write.parquet(new_path)
+    raw = spark.read.parquet(corpus_path)
+    keep = raw.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
+    corpus = raw.join(keep.select("doc_id"), "doc_id", "left_semi")
+    index = dedup.minhash_bands(corpus, "text", "doc_id")
+    new = spark.read.parquet(new_path)
+    built = []
     n = _jobs_run_during(
         spark,
-        lambda: dedup.set_similarity_join(
-            df2, "toks", "doc_id", threshold=0.7
-        ),
+        lambda: built.append(dedup.minhash_probe(
+            new, corpus, index, "text", "doc_id", threshold=0.8,
+        )),
     )
     assert n == 0
+    got = {(r["new_id"], r["corpus_id"]) for r in built[0].collect()}
     spark.catalog.clearCache()
+    assert {(1000 + i, i) for i in range(5)} <= got
+
+
+def test_chi_square_dof_counts_null_category(spark):
+    """dof = (|groups_a| − 1)(|groups_b| − 1) with a NULL category
+    counted as a group, as the q_chi_square oracle counts ra / rb. The
+    marginal equi-joins drop NULL-keyed cells, so the category counts
+    must come from the raw frame; chi2 keeps the oracle's non-null
+    cells."""
+    from databricks_flight_etl_spark.operators.accuracy import (
+        chi_square_independence,
+    )
+
+    rows = (
+        [("x", 0)] * 3 + [("x", 1)] * 2 + [("y", 0)] * 1 + [("y", 1)] * 4
+        + [(None, 0)] * 2 + [(None, 1)] * 1 + [("z", None)] * 2
+    )
+    df = spark.createDataFrame(rows, "c string, b int")
+    got = chi_square_independence(df, "c", "b").collect()[0]
+    n = len(rows)
+    ka = len({a for a, _ in rows})  # x, y, z, NULL
+    kb = len({b for _, b in rows})  # 0, 1, NULL
+    assert got["dof"] == (ka - 1) * (kb - 1) == 6
+    assert got["n"] == n
+    ra = {a: sum(1 for x, _ in rows if x == a) for a, _ in rows}
+    rb = {b: sum(1 for _, y in rows if y == b) for _, b in rows}
+    cells = {}
+    for a, b in rows:
+        if a is not None and b is not None:
+            cells[(a, b)] = cells.get((a, b), 0) + 1
+    chi2 = 0.0
+    for (a, b), o in cells.items():
+        e = ra[a] * rb[b] / n
+        chi2 += (o - e) * (o - e) / e
+    assert got["chi2"] == pytest.approx(round(chi2, 6), abs=1e-6)
 
 
 def test_spread_estimate_formula_scale_adaptive(spark, monkeypatch):

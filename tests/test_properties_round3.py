@@ -146,7 +146,7 @@ def test_set_similarity_join_lossless_property(spark, sets, thr):
     rows = [(i, sorted(s)) for i, s in enumerate(sets)]
     df = spark.createDataFrame(rows, "id long, s array<string>")
     got = {(r["id_a"], r["id_b"]) for r in
-           set_similarity_join(df, "s", "id", thr, persist=False).collect()}
+           set_similarity_join(df, "s", "id", thr).collect()}
     want = set()
     for i, a in enumerate(sets):
         for j, b in enumerate(sets):

@@ -304,11 +304,10 @@ def test_minhash_max_df_collapses_boilerplate_buckets(spark):
     assert stops.count() > 50  # the boilerplate's shingles
 
     cand_raw = minhash_candidate_pairs(
-        df, "text", "doc_id", shingle_k=7, persist=False
+        df, "text", "doc_id", shingle_k=7
     ).count()
     cand_filtered = minhash_candidate_pairs(
-        df, "text", "doc_id", shingle_k=7, persist=False,
-        stops=stops,
+        df, "text", "doc_id", shingle_k=7, stops=stops,
     ).count()
     assert cand_filtered < cand_raw  # the collapse
     assert cand_filtered >= 1        # the planted pair survives
@@ -484,28 +483,39 @@ def test_shingle_profile_flags_boilerplate(spark):
 def test_lambda_filter_tripwire(spark):
     """plans.lambda_filters flags Catalyst re-running a computed-array
     expression inside an inferred filter. Positive control: the
-    stop-shingle verify WITHOUT the cache boundary (persist=False)
-    carries the pathological plan; with the pin (persist=True) the
-    inferred filters land on the InMemoryRelation and the count is 0."""
+    stop-shingle explode + anti-join + regroup built WITHOUT the cache
+    boundary carries the pathological plan; the verify (which pins the
+    arrays before exploding) lands the inferred filters on the
+    InMemoryRelation, so its count is 0."""
+    from pyspark.sql import functions as F
+
     from databricks_flight_etl_spark import plans
     from databricks_flight_etl_spark.operators.dedup import (
-        _jaccard_verified, shingle_stop_list,
+        _jaccard_verified, _shingle_arrays, shingle_stop_list,
     )
 
     df = _boiler_corpus(spark, n=20)
     stops = shingle_stop_list(df, "text", "doc_id", shingle_k=7,
                               max_df=10)
-    pairs = spark.createDataFrame([(20, 21)], "id_a long, id_b long")
-    slow = _jaccard_verified(df, "text", "doc_id", pairs, 0.8, 7,
-                             persist=False, stops=stops)
+    slow = (
+        _shingle_arrays(df, "text", "doc_id", 7)
+        .select("__id", F.explode("__shs").alias("__sh"))
+        .join(stops.select(F.col("shingle").alias("__sh")), "__sh",
+              "left_anti")
+        .groupBy("__id")
+        .agg(F.collect_list("__sh").alias("__shs"))
+    )
     assert plans.lambda_filters(slow) > 0  # the pathology, visible
+    pairs = spark.createDataFrame([(20, 21)], "id_a long, id_b long")
     fast = _jaccard_verified(df, "text", "doc_id", pairs, 0.8, 7,
-                             persist=True, stops=stops)
+                             stops=stops)
     assert plans.lambda_filters(fast) == 0  # pinned boundary absorbs it
-    # both shapes produce identical answers
-    a = sorted(map(tuple, slow.collect()))
-    b = sorted(map(tuple, fast.collect()))
-    assert a == b and len(a) == 1
+    # both shapes see the same filtered sets: the unpinned arrays give
+    # the verify's Jaccard for the planted pair
+    sets = {r["__id"]: set(r["__shs"]) for r in slow.collect()}
+    a, b = sets[20], sets[21]
+    got = [tuple(r) for r in fast.collect()]
+    assert got == [(20, 21, round(len(a & b) / len(a | b), 6))]
 
 
 # ---------------------------------------------------------------- #
@@ -561,12 +571,10 @@ def test_max_df_results_unchanged_by_shared_table(spark):
     )
     assert (25, 26) in {(a, b) for a, b, _ in mh}
     cands_shared = minhash_candidate_pairs(
-        df, "text", "doc_id", shingle_k=7, persist=False,
-        stops=stops_own, table=st,
+        df, "text", "doc_id", shingle_k=7, stops=stops_own, table=st,
     )
     cands_own = minhash_candidate_pairs(
-        df, "text", "doc_id", shingle_k=7, persist=False,
-        stops=stops_own,
+        df, "text", "doc_id", shingle_k=7, stops=stops_own,
     )
     assert sorted(map(tuple, cands_shared.collect())) == sorted(
         map(tuple, cands_own.collect())
@@ -578,26 +586,31 @@ def test_max_df_results_unchanged_by_shared_table(spark):
 
 
 def test_max_df_verify_strategies_agree(spark):
-    """The two exact-Jaccard verify strategies must stay bit-identical
-    under the stop-shingle filter too — both consume the same FILTERED
-    shingle sets."""
+    """The verify's two input routes — the shared staged arrays
+    (minhash_dedup_pairs) and its own candidate-only shingling
+    (minhash_probe's route) — must stay bit-identical under the
+    stop-shingle filter too: both consume the same FILTERED shingle
+    sets."""
     from databricks_flight_etl_spark.operators.dedup import (
-        minhash_dedup_pairs,
+        _jaccard_verified, minhash_candidate_pairs, minhash_dedup_pairs,
+        shingle_stop_list,
     )
 
     df = _boiler_corpus(spark, n=25)
     a = sorted(
         (r.id_a, r.id_b, r.jaccard)
         for r in minhash_dedup_pairs(
-            df, "text", "doc_id", threshold=0.8, shingle_k=7,
-            max_df=12, verify="intersect",
+            df, "text", "doc_id", threshold=0.8, shingle_k=7, max_df=12,
         ).collect()
+    )
+    stops = shingle_stop_list(df, "text", "doc_id", 7, 12)
+    cands = minhash_candidate_pairs(
+        df, "text", "doc_id", shingle_k=7, stops=stops,
     )
     b = sorted(
         (r.id_a, r.id_b, r.jaccard)
-        for r in minhash_dedup_pairs(
-            df, "text", "doc_id", threshold=0.8, shingle_k=7,
-            max_df=12, verify="index",
+        for r in _jaccard_verified(
+            df, "text", "doc_id", cands, 0.8, 7, stops=stops,
         ).collect()
     )
     assert a == b and (25, 26) in {(x, y) for x, y, _ in a}
