@@ -61,7 +61,7 @@ from databricks_flight_etl_spark.operators.dedup import (
     simhash_near_dup_pairs,
 )
 from databricks_flight_etl_spark.operators.similarity import (
-    ann_topk_ivf,
+    ann_topk_ivf_batch,
     ann_topk_lsh,
     cosine_near_dup_pairs,
     cosine_topk,
@@ -3339,14 +3339,11 @@ def q_stratified_sample(spark, sf_dir):
 
 def q_ann_ivf_batch(spark, sf_dir):
     """X2 batched IVF ANN: 4 probes share one pruned corpus pass — each
-    probe's nearest n_probe inverted lists ranked engine-side
-    (array_sort over (−dot, idx)), exploded + broadcast, equi-joined on
-    list_id. Approximate by construction → rows-only; pinned equal to
-    per-probe ann_topk_ivf by unit test."""
-    from databricks_flight_etl_spark.operators.similarity import (
-        ann_topk_ivf_batch,
-    )
-
+    probe's nearest n_probe inverted lists ranked engine-side (numpy
+    matmul + stable argsort per Arrow batch), exploded + broadcast,
+    equi-joined on list_id. Approximate by construction → rows-only;
+    a probe's hits are pinned independent of the rest of the batch by
+    unit test."""
     emb = _t(spark, sf_dir, "embeddings")
     return ann_topk_ivf_batch(emb, probe_ids=[0, 1, 2, 3], k=5)
 
@@ -4285,9 +4282,12 @@ def q_range_join_time(spark, sf_dir):
 def q_ann_ivf(spark, sf_dir):
     """X2 IVF ANN: coarse k-means quantizer (deterministic seeds, 2
     Lloyd steps) → probe the 4 nearest of 16 lists → exact re-rank.
-    Approximate recall by construction → rows-only."""
+    Approximate recall by construction → rows-only. A single probe is
+    a batch of one."""
     emb = _t(spark, sf_dir, "embeddings")
-    return ann_topk_ivf(emb, probe_id=0, k=10, n_lists=16, n_probe=4, iters=1)
+    return ann_topk_ivf_batch(
+        emb, probe_ids=[0], k=10, n_lists=16, n_probe=4, iters=1
+    ).select("vec_id", "cosine")
 
 
 def q_ann_ivf_exhaustive(spark, sf_dir):
@@ -4297,9 +4297,9 @@ def q_ann_ivf_exhaustive(spark, sf_dir):
     training, assignment, candidate scan, re-rank) against the
     q_cosine_topk oracle."""
     emb = _t(spark, sf_dir, "embeddings")
-    return ann_topk_ivf(
-        emb, probe_id=0, k=10, n_lists=16, n_probe=16, iters=1
-    )
+    return ann_topk_ivf_batch(
+        emb, probe_ids=[0], k=10, n_lists=16, n_probe=16, iters=1
+    ).select("vec_id", "cosine")
 
 
 def q_dedup_survivors(spark, sf_dir):

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import math
 import random
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -29,7 +30,7 @@ __all__ = ["dot", "l2_norm", "cosine", "cosine_topk", "cosine_topk_batch",
            "hyperplane_bucket", "ann_topk_lsh", "ann_topk_lsh_multiprobe",
            "cosine_near_dup_pairs",
            "ivf_centroids", "ivf_assign", "ivf_assign_pandas",
-           "ann_topk_ivf", "ann_topk_ivf_batch",
+           "ann_topk_ivf_batch",
            "quantize_embeddings", "dequantize_embeddings",
            "semantic_dedup",
            "group_vector_mean", "centroid_outlier_scores",
@@ -134,7 +135,6 @@ def cosine_near_dup_pairs(
     vec_col: str = "embedding",
     block_col: str | None = None,
     decimals: int = 6,
-    persist: bool = True,
     salt: int = 1,
 ) -> DataFrame:
     """Embedding near-duplicate pairs: (id_a, id_b, cosine) with
@@ -205,12 +205,11 @@ def cosine_near_dup_pairs(
         )
     else:
         v = v.withColumn("__n", l2_norm(F.col("__v")))
-    if persist:
-        # both self-join sides read v: pin it so the spread exchange,
-        # the banding dots, and the norm compute ONCE
-        from pyspark.storagelevel import StorageLevel
+    # both self-join sides read v: pin it so the spread exchange,
+    # the banding dots, and the norm compute ONCE
+    from pyspark.storagelevel import StorageLevel
 
-        v = v.persist(StorageLevel.MEMORY_AND_DISK)
+    v = v.persist(StorageLevel.MEMORY_AND_DISK)
     a = v.select(
         F.col(id_col).alias("id_a"), F.col("__v").alias("__va"),
         F.col("__n").alias("__na"), "__blk",
@@ -264,7 +263,7 @@ def cosine_topk_batch(
     The retrieval shape that matters in practice — per-query jobs waste
     a full scan per probe; this amortizes one scan across the batch.
     For probe batches too large to broadcast, switch to the IVF index
-    (ann_topk_ivf) and join probes to their lists instead.
+    (ann_topk_ivf_batch) and join probes to their lists instead.
     """
     probes = df.filter(F.col(id_col).isin(*probe_ids)).select(
         F.col(id_col).alias("probe_id"), _as_double(vec_col).alias("__pv")
@@ -360,10 +359,6 @@ def cosine_topk_pandas(
 # at 100 TB the corpus is written partitioned by list_id, so a query scans
 # n_probe/n_lists of the data with partition pruning doing the skipping.
 
-def _lit_vec(v: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in v])
-
-
 def _unit(v: list[float]) -> list[float]:
     import math
 
@@ -375,7 +370,9 @@ def _nearest_list(vec: Column, centroids: list[list[float]]) -> Column:
     """0-based index of the max-cosine centroid. Centroids are unit
     vectors, so argmax dot == argmax cosine; array_position finds the
     max's index (exact double equality — same computed value)."""
-    dots = F.array(*[dot(vec, _lit_vec(c)) for c in centroids])
+    dots = F.array(*[
+        dot(vec, F.array(*[F.lit(float(x)) for x in c])) for c in centroids
+    ])
     return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
 
 
@@ -386,8 +383,11 @@ def _nearest_list(vec: Column, centroids: list[list[float]]) -> Column:
 # sf0.1, dim=64: 16 lists = ~5.5 s cold compile vs ~0.6 s Arrow;
 # 8 lists compiles in <1 s and then beats Arrow on per-row cost).
 # Above the crossover the numpy matmul kernel is compile-free and
-# assignment-identical (pinned by test).
+# assignment-identical (pinned by test). Below it the fold also skips
+# the Arrow pass's fixed Python-stage cost (~0.35 s per call at 1
+# list, sf0.1, 4-core host).
 _ASSIGN_ARROW_MIN_LISTS = 9
+
 
 # JL auto-dispatch crossover: above this many sign-matrix terms
 # (dim × out_dim) the expression form's per-row interpreted HOF fold
@@ -412,6 +412,51 @@ def _assign_lists(
         return ivf_assign_pandas(df, centroids, vec_col, out_col)
     return ivf_assign(df, centroids, vec_col, out_col)
 
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The IVF corpus: (``id_col``, __v array<double>) with NULL
+    embeddings dropped — a null vector can't be a neighbor, and
+    np.asarray(None) isn't stackable in the Arrow kernels."""
+    return spread(
+        df.where(F.col(vec_col).isNotNull())
+        .select(F.col(id_col), _as_double(vec_col).alias("__v"))
+    )
+
+
+@contextmanager
+def _pinned(df: DataFrame):
+    """Persist ``df`` (MEMORY_AND_DISK) for the ``with`` body and
+    unpersist it on every exit, raise included. The Lloyd rounds and
+    the final assignment all re-execute down to this cache instead of
+    the source scan; a frame returned past the block must already be
+    materialized (localCheckpoint or an eager result), or its action
+    would recompute the corpus from the source."""
+    from pyspark import StorageLevel
+
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def _centroid_dots(centroids: list[list[float]]):
+    """``dots(vs)``: stack a pandas column of vectors into a (batch ×
+    dim) float64 matrix ``m`` and return ``(m, m @ C)`` against the
+    (dim × n_lists) centroid matrix. The one numpy step the Lloyd,
+    assignment and probe kernels share, so the fit counts each vector
+    in the same list the Arrow assignment puts it in. A closure, so
+    cloudpickle ships it to the Python workers by value instead of
+    making each worker import this package."""
+    import numpy as np
+
+    cmat = np.asarray(centroids, dtype=np.float64).T  # (dim, n_lists)
+
+    def dots(vs):
+        m = np.stack(vs.map(lambda v: np.asarray(v, dtype=np.float64)))
+        return m, m @ cmat
+
+    return dots
+
 
 def _ivf_fit(
     pruned: DataFrame,
@@ -420,7 +465,7 @@ def _ivf_fit(
     iters: int,
 ) -> list[list[float]]:
     """Lloyd fit over an already-projected (``id_col``, __v) frame the
-    CALLER persists — every round re-executes the lineage down to the
+    CALLER pins — every round re-executes the lineage down to the
     cache, not to the source scan. Seeds: the ``n_lists`` vectors of
     smallest xxhash64(id) (seeded 'random' sample without an RNG)."""
     seeds = (
@@ -449,17 +494,14 @@ def _ivf_fit(
         # assignment pass feeding a dim-wide avg hash agg — paid a
         # janino compile of dim aggregate expressions per fit plus a
         # shuffle per round.)
-        cmat = np.asarray(cents, dtype=np.float64).T  # (dim, n_lists)
+        dots = _centroid_dots(cents)
 
         def kernel(batches):
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                m = np.stack(
-                    pdf["__v"].map(
-                        lambda v: np.asarray(v, dtype=np.float64))
-                )
-                lists = (m @ cmat).argmax(axis=1)
+                m, d = dots(pdf["__v"])
+                lists = d.argmax(axis=1)
                 out_l, out_n, out_s = [], [], []
                 for li in np.unique(lists):
                     sel = m[lists == li]
@@ -496,25 +538,12 @@ def ivf_centroids(
 ) -> list[list[float]]:
     """Deterministic coarse quantizer: seed with the ``n_lists`` vectors
     of smallest xxhash64(id) (seeded 'random' sample without an RNG),
-    then ``iters`` distributed Lloyd steps — assign (narrow map) +
-    per-list elementwise mean in one hash agg. Only the
-    (n_lists × dim) centroid table ever reaches the driver."""
-    pruned = spread(
-        df.where(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), _as_double(vec_col).alias("__v"))
-    )
-    if iters > 0:
-        # each Lloyd round collects a mean table, which re-executes the
-        # whole lineage — pin the projected vectors once instead of
-        # rescanning/recasting the source per round
-        from pyspark import StorageLevel
-
-        pruned = pruned.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    then ``iters`` distributed Lloyd steps — each one ``mapInPandas``
+    pass that assigns every vector and emits per-batch, per-list
+    partial sums, which the driver combines into the new means. Only
+    the (n_lists × dim) centroid table ever reaches the driver."""
+    with _pinned(_vectors(df, id_col, vec_col)) as pruned:
         return _ivf_fit(pruned, id_col, n_lists, iters)
-    finally:
-        if iters > 0:
-            pruned.unpersist()
 
 
 def ivf_assign(
@@ -524,91 +553,11 @@ def ivf_assign(
     out_col: str = "list_id",
 ) -> DataFrame:
     """Attach the IVF list id (nearest-centroid index) — the column to
-    partition/cluster the stored index by."""
+    partition/cluster the stored index by. A NULL embedding gets a NULL
+    list id."""
     return df.withColumn(
         out_col, _nearest_list(_as_double(vec_col), centroids)
     )
-
-
-def ann_topk_ivf(
-    df: DataFrame,
-    probe_id: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_lists: int = 16,
-    n_probe: int = 4,
-    iters: int = 2,
-    decimals: int = 6,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """IVF ANN top-k: rank centroids by cosine to the probe, scan only
-    the ``n_probe`` nearest lists, exact cosine re-rank within them.
-    Recall misses only when a true neighbor's list ranks below n_probe.
-    (In production, centroids are trained once and the assignment is a
-    stored partition column — per-query work is just the pruned scan.)
-
-    ``checkpoint=False`` returns the lazy plan and leaves the pruned
-    cache pinned (plan-audit path); see :func:`ann_topk_ivf_batch`."""
-    from pyspark import StorageLevel
-
-    # prune to (id, vec) ONCE (nulls out — np.asarray(None) isn't
-    # stackable in the Arrow Lloyd kernel, and a null vector can't be a
-    # neighbor anyway); the Lloyd rounds and the final index assignment
-    # all re-execute down to this cache, not the source scan
-    pruned = spread(
-        df.where(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), _as_double(vec_col).alias("__v"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        cents = _ivf_fit(pruned, id_col, n_lists, iters)
-        probe_row = (
-            df.filter(F.col(id_col) == probe_id)
-            .select(_as_double(vec_col)).first()
-        )
-        if probe_row is None or probe_row[0] is None:
-            raise ValueError(
-                f"probe {id_col}={probe_id} not found in corpus "
-                "(or has a null embedding)"
-            )
-        probe_vec = list(probe_row[0])
-        pu = _unit(probe_vec)
-        ranked = sorted(
-            range(len(cents)),
-            key=lambda i: -sum(a * b for a, b in zip(pu, cents[i])),
-        )
-        lists = ranked[:n_probe]
-        assigned = _assign_lists(pruned, cents, "__v", "__list")
-        cand = assigned.filter(F.col("__list").isin(*lists)).select(
-            F.col(id_col), F.col("__v")
-        )
-        cos = cosine(F.col("__v"), _lit_vec(probe_vec))
-        # materialize the k-row answer (localCheckpoint, eager) so the
-        # cache can be freed without the caller's later action
-        # re-executing the fit lineage — no leaked persisted corpus per
-        # call in long-lived sessions
-        out = (
-            cand.select(F.col(id_col), cos.alias("__cos"))
-            .orderBy(F.desc("__cos"), F.asc(id_col))
-            .limit(k)
-            .select(
-                F.col(id_col),
-                F.round(F.col("__cos"), decimals).alias("cosine"),
-            )
-        )
-        if not checkpoint:
-            return out
-        return out.localCheckpoint()
-    except BaseException:
-        # checkpoint=False promises the cache stays pinned only for a
-        # SUCCESSFUL lazy return — on any raise (e.g. probe not found)
-        # the caller gets no handle to free it, so free it here
-        # (unpersist is idempotent; the finally below may repeat it)
-        pruned.unpersist()
-        raise
-    finally:
-        if checkpoint:
-            pruned.unpersist()
 
 
 def ivf_assign_pandas(
@@ -628,21 +577,16 @@ def ivf_assign_pandas(
     (pinned by test: argmax of the same dot products; ties go to the
     lower index in both, numpy argmax returns the first maximum).
     """
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
-    cmat = np.asarray(centroids, dtype=np.float64).T  # (dim, n_lists)
+    dots = _centroid_dots(centroids)
     fields = [f for f in df.schema.fields]
     out_schema = T.StructType(fields + [T.StructField(out_col, T.IntegerType())])
     cols = [f.name for f in fields]
 
     def kernel(batches):
         for pdf in batches:
-            m = np.stack(
-                pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64))
-            )
-            lists = (m @ cmat).argmax(axis=1).astype("int32")
+            lists = dots(pdf[vec_col])[1].argmax(axis=1).astype("int32")
             out = pdf[cols].copy()
             out[out_col] = lists
             yield out
@@ -661,7 +605,7 @@ def _probe_lists_pandas(
     import pandas as pd
     from pyspark.sql import types as T
 
-    cmat = np.asarray(centroids, dtype=np.float64).T  # (dim, n_lists)
+    dots = _centroid_dots(centroids)
     out_schema = T.StructType([
         probes.schema["probe_id"],
         probes.schema["__pv"],
@@ -672,12 +616,9 @@ def _probe_lists_pandas(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            m = np.stack(
-                pdf["__pv"].map(lambda v: np.asarray(v, dtype=np.float64))
-            )
             # stable argsort of −dot: ties keep the LOWER list index,
-            # bit-matching the (negdot, idx) struct sort it replaced
-            order = np.argsort(-(m @ cmat), axis=1, kind="stable")
+            # the same tie rule as the assignment's argmax
+            order = np.argsort(-dots(pdf["__pv"])[1], axis=1, kind="stable")
             top = order[:, :n_probe].astype("int32")
             k = top.shape[1]
             yield pd.DataFrame({
@@ -687,6 +628,60 @@ def _probe_lists_pandas(
             })
 
     return probes.mapInPandas(kernel, out_schema)
+
+
+def _ivf_probe_plan(
+    df: DataFrame,
+    pruned: DataFrame,
+    probe_ids: list[int],
+    k: int,
+    id_col: str,
+    vec_col: str,
+    n_lists: int,
+    n_probe: int,
+    iters: int,
+    decimals: int,
+) -> DataFrame:
+    """The lazy plan behind :func:`ann_topk_ivf_batch` over the pinned
+    corpus ``pruned`` (:func:`_vectors` of ``df``). Runs the fit
+    eagerly; the returned frame still reads the pin."""
+    from pyspark.sql import Window
+
+    # one pinned (id, vec) corpus feeds BOTH the Lloyd rounds and the
+    # final index assignment; the assignment dispatches across the
+    # Arrow/codegen crossover (``_ASSIGN_ARROW_MIN_LISTS``)
+    cents = _ivf_fit(pruned, id_col, n_lists, iters)
+    assigned = _assign_lists(pruned, cents, "__v", "__list")
+
+    # probes come from the RAW df, not the spread corpus: the isin
+    # filter pushes to the scan, instead of paying the corpus-wide
+    # repartition just to extract a handful of probe rows
+    probes = df.filter(
+        F.col(id_col).isin(*probe_ids) & F.col(vec_col).isNotNull()
+    ).select(
+        F.col(id_col).alias("probe_id"),
+        _as_double(vec_col).alias("__pv"),
+    )
+    probe_lists = _probe_lists_pandas(probes, cents, n_probe)
+    cands = assigned.join(F.broadcast(probe_lists), "__list")
+    w = Window.partitionBy("probe_id").orderBy(
+        F.desc("__cos"), F.asc(id_col)
+    )
+    return (
+        cands.select(
+            "probe_id",
+            F.col(id_col),
+            cosine(F.col("__v"), F.col("__pv")).alias("__cos"),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            "probe_id",
+            id_col,
+            "rank",
+            F.round("__cos", decimals).alias("cosine"),
+        )
+    )
 
 
 def ann_topk_ivf_batch(
@@ -699,92 +694,32 @@ def ann_topk_ivf_batch(
     n_probe: int = 4,
     iters: int = 2,
     decimals: int = 6,
-    checkpoint: bool = True,
 ) -> DataFrame:
-    """IVF ANN for MANY probes in one job: each probe scans only its
-    ``n_probe`` nearest inverted lists; one corpus pass serves the whole
-    batch. Output (probe_id, vec_id, rank, cosine), total order per
-    probe — the batched twin of ann_topk_ivf, the way retrieval actually
-    runs in production (per-query jobs waste a scan per probe).
+    """IVF ANN top-k: each probe scans only its ``n_probe`` nearest
+    inverted lists, exact cosine re-rank within them; one corpus pass
+    serves the whole batch, and a single probe is a batch of one.
+    Output (probe_id, vec_id, rank, cosine), total order per probe. A
+    probe id missing from ``df`` (or with a NULL embedding) yields no
+    rows. Recall misses only when a true neighbor's list ranks below
+    ``n_probe``; ``n_probe = n_lists`` is exact brute force.
 
-    All per-probe work stays engine-side: the probe's centroid ranking
-    is an array_sort over (−dot, idx) structs, exploded into
-    (probe, list) rows and broadcast, so candidate generation is an
-    equi-join on list_id against the assigned corpus — at 100 TB with
-    the corpus stored partitioned by list_id, that is a partition-
-    prunable scan of the union of the probes' lists.
+    All per-probe work stays engine-side: each probe's centroid
+    ranking is one numpy matmul + stable argsort per Arrow batch
+    (:func:`_probe_lists_pandas`), exploded into (probe, list) rows and
+    broadcast, so candidate generation is an equi-join on list_id
+    against the assigned corpus — at 100 TB with the corpus stored
+    partitioned by list_id, that is a partition-prunable scan of the
+    union of the probes' lists.
 
-    ``checkpoint=False`` returns the LAZY plan (same physical shape,
-    nothing materialized) and leaves the pruned corpus cache pinned for
-    the caller to free — the plan-audit/debug path; the default
-    materializes the |probes|×k answer and frees the cache (leak fix).
+    The |probes|×k answer is materialized (localCheckpoint) so the
+    pinned corpus is freed before returning — no persisted corpus
+    leaks per call in long-lived sessions.
     """
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
-
-    # one pruned (id, vec) cache feeds BOTH the Lloyd rounds and the
-    # final index assignment; the assignment itself dispatches across
-    # the Arrow/codegen crossover (re-assigning with the literal-fold
-    # expression at 16 lists paid a ~5 s one-time janino compile — the
-    # r3 bench regression)
-    pruned = spread(
-        df.where(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), _as_double(vec_col).alias("__v"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        cents = _ivf_fit(pruned, id_col, n_lists, iters)
-        assigned = _assign_lists(pruned, cents, "__v", "__list")
-
-        # probes come from the RAW df, not the spread corpus: the isin
-        # filter pushes to the scan, instead of paying the corpus-wide
-        # repartition just to extract a handful of probe rows
-        probes = df.filter(
-            F.col(id_col).isin(*probe_ids) & F.col(vec_col).isNotNull()
-        ).select(
-            F.col(id_col).alias("probe_id"),
-            _as_double(vec_col).alias("__pv"),
-        )
-        # rank centroids per probe engine-side with a compile-free Arrow
-        # kernel: one (batch × dim) @ (dim × n_lists) matmul, stable
-        # argsort of −dot (ties → lower list index, matching the struct
-        # array_sort this replaced — whose n_lists × dim literal
-        # expression paid a multi-second one-time janino compile).
-        # Centroids are unit vectors, so argmax dot == argmax cosine.
-        probe_lists = _probe_lists_pandas(probes, cents, n_probe)
-        cands = assigned.join(F.broadcast(probe_lists), "__list")
-        w = Window.partitionBy("probe_id").orderBy(
-            F.desc("__cos"), F.asc(id_col)
-        )
-        # |probes|×k rows — materialize so the cache can be freed
-        # without the caller's action re-running the fit (leak fix)
-        out = (
-            cands.select(
-                "probe_id",
-                F.col(id_col),
-                cosine(F.col("__v"), F.col("__pv")).alias("__cos"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(
-                "probe_id",
-                id_col,
-                "rank",
-                F.round("__cos", decimals).alias("cosine"),
-            )
-        )
-        if not checkpoint:
-            return out
-        return out.localCheckpoint()
-    except BaseException:
-        # checkpoint=False promises the cache stays pinned only for a
-        # SUCCESSFUL lazy return — on any raise (e.g. probe not found)
-        # the caller gets no handle to free it, so free it here
-        # (unpersist is idempotent; the finally below may repeat it)
-        pruned.unpersist()
-        raise
-    finally:
-        if checkpoint:
-            pruned.unpersist()
+    with _pinned(_vectors(df, id_col, vec_col)) as pruned:
+        return _ivf_probe_plan(
+            df, pruned, probe_ids, k, id_col, vec_col,
+            n_lists, n_probe, iters, decimals,
+        ).localCheckpoint()
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -1018,8 +953,8 @@ def semantic_dedup(
     per-cluster pair work (N/k)²·k = N²/k, i.e. quadratic in the
     corpus (measured 102× time at 30× data in the scale probe before
     this default). With scaled k the pair stage is ~target·N — linear.
-    Assignment cost is N·k dot products; above 8 lists it runs as one
-    numpy matmul per Arrow batch (``ivf_assign_pandas``), whose
+    Assignment cost is N·k dot products; from 9 lists up it runs as one
+    numpy matmul per Arrow batch (:func:`ivf_assign_pandas`), whose
     constant keeps it off the critical path well past 10⁶ lists; the
     auto value caps at 4096 — beyond that (N ≫ 10⁶ rows), pass an
     explicit ``n_lists`` sized to your cluster budget or pre-cluster
@@ -1035,37 +970,28 @@ def semantic_dedup(
         n_lists = max(
             1, min(4096, n, max(16, -(-n // target_cluster_rows)))
         )
-    from pyspark import StorageLevel
-
     # prune to (id, vec) before clustering: the full-width rows never
     # enter the Lloyd rounds, the assignment Arrow transfer, or the
     # within-cluster pair join — only the final anti-join sees them.
-    # Null-embedding rows are excluded here (they can't be near-dups,
-    # and np.asarray(None) isn't stackable in the Arrow kernels) and
+    # Null-embedding rows are excluded (they can't be near-dups) and
     # therefore always SURVIVE via the anti-join passthrough.
-    pruned = spread(
-        df.where(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), _as_double(vec_col).alias("__v"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    cents = _ivf_fit(pruned, id_col, n_lists=n_lists, iters=iters)
-    assigned = _assign_lists(pruned, cents, "__v", "__list")
-    # fewer blocks than cores (the n_lists=1 certification config in
-    # the limit) → salt the pair join so the quadratic work spreads;
-    # corpus-scaled configs have n_lists ≫ cores and keep salt=1
-    par = df.sparkSession.sparkContext.defaultParallelism
-    pairs = cosine_near_dup_pairs(
-        assigned, threshold=threshold, id_col=id_col, vec_col="__v",
-        block_col="__list",
-        salt=max(1, min(32, -(-par // n_lists))),
-    )
-    try:
+    with _pinned(_vectors(df, id_col, vec_col)) as pruned:
+        cents = _ivf_fit(pruned, id_col, n_lists=n_lists, iters=iters)
+        assigned = _assign_lists(pruned, cents, "__v", "__list")
+        # fewer blocks than cores (the n_lists=1 certification config
+        # in the limit) → salt the pair join so the quadratic work
+        # spreads; corpus-scaled configs have n_lists ≫ cores and keep
+        # salt=1
+        par = df.sparkSession.sparkContext.defaultParallelism
+        pairs = cosine_near_dup_pairs(
+            assigned, threshold=threshold, id_col=id_col, vec_col="__v",
+            block_col="__list",
+            salt=max(1, min(32, -(-par // n_lists))),
+        )
         # dedup_survivors materializes the component labels (the pair
         # lineage's terminal), so the returned anti-join no longer
-        # reads the cache — free it instead of leaking one persisted
-        # corpus per call
+        # reads the pin
         return dedup_survivors(df, pairs, id_col)
-    finally:
-        pruned.unpersist()
 
 
 def ivf_assign_two_level(
@@ -1094,63 +1020,44 @@ def ivf_assign_two_level(
     exact-oracle query certifies end-to-end.
 
     Output: ``df``'s columns plus ``out_col`` (long)."""
-    from pyspark import StorageLevel
-
-    # null-embedding rows skip the fit/assign entirely (Arrow kernels
-    # can't stack None) and come back with a NULL list id via the left
-    # join below — matching flat ivf_assign's null-in → null-out
-    pruned = spread(
-        df.where(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), _as_double(vec_col).alias("__v"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    resid = None
-    try:
+    # null-embedding rows skip the fit/assign entirely and come back
+    # with a NULL list id via the left join below — matching flat
+    # ivf_assign's null-in → null-out. The narrow (id, list_id)
+    # assignment — in production this IS the stored index — is
+    # materialized inside the pins, so both caches are freed on return.
+    with _pinned(_vectors(df, id_col, vec_col)) as pruned:
         super_cents = _ivf_fit(pruned, id_col, n_super, iters)
         assigned = _assign_lists(pruned, super_cents, "__v", "__super")
         if n_sub <= 1:
             out = assigned.select(
                 F.col(id_col),
                 F.col("__super").cast("long").alias(out_col),
-            )
+            ).localCheckpoint()
         else:
-            spark = df.sparkSession
             from ..partitioning import local_df
 
             cent_rows = [(i, c) for i, c in enumerate(super_cents)]
             cent_df = local_df(
-                spark, cent_rows, "__super int, __cent array<double>"
+                df.sparkSession, cent_rows,
+                "__super int, __cent array<double>",
             )
             # residual = v − c_super(v): broadcast the n_super-row
             # centroid table; the corpus never shuffles
-            resid0 = assigned.join(F.broadcast(cent_df), "__super").select(
+            resid = assigned.join(F.broadcast(cent_df), "__super").select(
                 F.col(id_col),
                 F.col("__super"),
-                F.zip_with(
-                    "__v", "__cent", lambda a, b: a - b
-                ).alias("__v2"),
+                F.zip_with("__v", "__cent", lambda a, b: a - b).alias("__v"),
             )
-            resid = resid0.select(
-                id_col, "__super", F.col("__v2").alias("__v")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            sub_cents = _ivf_fit(resid, id_col, n_sub, iters)
-            final = _assign_lists(resid, sub_cents, "__v", "__sub")
-            out = final.select(
-                F.col(id_col),
-                (
-                    F.col("__super").cast("long") * F.lit(n_sub)
-                    + F.col("__sub")
-                ).alias(out_col),
-            )
-        # materialize the narrow (id, list_id) assignment — in
-        # production this IS the stored index — so the two caches can
-        # be freed instead of leaking one persisted corpus (+ one
-        # residual corpus) per call in long-lived sessions
-        out = out.localCheckpoint()
-        return df.join(out, id_col, "left")
-    finally:
-        pruned.unpersist()
-        if resid is not None:
-            resid.unpersist()
+            with _pinned(resid) as resid:
+                sub_cents = _ivf_fit(resid, id_col, n_sub, iters)
+                out = _assign_lists(resid, sub_cents, "__v", "__sub").select(
+                    F.col(id_col),
+                    (
+                        F.col("__super").cast("long") * F.lit(n_sub)
+                        + F.col("__sub")
+                    ).alias(out_col),
+                ).localCheckpoint()
+    return df.join(out, id_col, "left")
 
 
 def semantic_dedup_two_level(

@@ -28,8 +28,10 @@ def _file_leaf_stats(df: DataFrame) -> tuple[int, int]:
     branches (each branch plans its own scan, so double-reads count
     double — correct for a parallelism estimate). Subquery expressions
     are not descended into: they do not govern this frame's
-    partitioning. ``(0, 0)`` when the plan has no file leaves
-    (LocalRelation / LogicalRDD / Range sources)."""
+    partitioning. ``(0, 0)`` — no estimate — when the plan has no file
+    leaves (LocalRelation / LogicalRDD / Range sources) or any relation
+    leaf that is not a file source (a JDBC relation has no file index
+    to size)."""
     total = 0
     n_files = 0
     stack = [df._jdf.queryExecution().analyzed()]
@@ -39,6 +41,8 @@ def _file_leaf_stats(df: DataFrame) -> tuple[int, int]:
         n = children.size()
         if n == 0 and node.nodeName() == "LogicalRelation":
             rel = node.relation()
+            if rel.getClass().getSimpleName() != "HadoopFsRelation":
+                return 0, 0
             total += rel.sizeInBytes()
             n_files += len(rel.location().inputFiles())
         for i in range(n):
@@ -50,8 +54,8 @@ def _estimated_scan_splits(df: DataFrame, target: int) -> int | None:
     """Estimate the plan's source parallelism with Spark's own file-
     split formula (FilePartition.maxSplitBytes): pad each file with
     ``openCostInBytes``, cap splits at ``maxPartitionBytes``, floor the
-    per-core share at the open cost. Returns None when the plan has no
-    file leaves (caller falls back to the exact probe)."""
+    per-core share at the open cost. Returns None when the leaf walk
+    gives no estimate (caller falls back to the exact probe)."""
     total, n_files = _file_leaf_stats(df)
     if n_files == 0:
         return None

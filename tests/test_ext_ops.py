@@ -379,8 +379,8 @@ def test_ivf_ann_clustered(spark):
             (len(rows), [b[0] + dx, b[1] + dy, b[2] + dz], cid)
         )
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    got = similarity.ann_topk_ivf(
-        df, probe_id=0, k=4, n_lists=3, n_probe=1, iters=2
+    got = similarity.ann_topk_ivf_batch(
+        df, probe_ids=[0], k=4, n_lists=3, n_probe=1, iters=2
     ).collect()
     cluster0 = {r[0] for r in rows if r[2] == 0}
     assert {r["vec_id"] for r in got} == cluster0
@@ -531,6 +531,8 @@ def test_textprep_pipeline(spark):
 
 
 def test_ann_ivf_batch_matches_single(spark):
+    """A probe's hits do not depend on the other probes in the batch:
+    batch [3, 17] equals the batches of one [3] and [17]."""
     import random
 
     rng = random.Random(7)
@@ -539,16 +541,17 @@ def test_ann_ivf_batch_matches_single(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     kw = dict(k=5, n_lists=4, n_probe=2, iters=1)
-    batch = similarity.ann_topk_ivf_batch(df, probe_ids=[3, 17], **kw).collect()
-    for pid in (3, 17):
-        single = similarity.ann_topk_ivf(df, probe_id=pid, **kw).collect()
-        got = sorted(
-            (r for r in batch if r["probe_id"] == pid), key=lambda r: r["rank"]
+
+    def hits(probe_ids):
+        got = similarity.ann_topk_ivf_batch(df, probe_ids, **kw).collect()
+        return sorted(
+            (r["probe_id"], r["rank"], r["vec_id"], r["cosine"]) for r in got
         )
-        # same centroids (deterministic seeding) → identical hit lists
-        assert [(r["vec_id"], r["cosine"]) for r in got] == [
-            (r["vec_id"], r["cosine"]) for r in single
-        ]
+
+    batch = hits([3, 17])
+    # same centroids (deterministic seeding) → identical hit lists
+    assert batch == hits([3]) + hits([17])
+    assert len(batch) == 10
 
 
 def test_deterministic_sample(spark):
@@ -591,17 +594,34 @@ def test_stratified_sample(spark):
 
 
 def test_ivf_assign_pandas_matches_expression(spark):
+    """Both assignment kernels give the argmax-cosine centroid, lower
+    index on ties; the reference is a plain-Python brute force."""
+    import math
     import random
 
     rng = random.Random(11)
     rows = [(i, [rng.gauss(0, 1) for _ in range(6)]) for i in range(80)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     cents = similarity.ivf_centroids(df, n_lists=5, iters=1)
-    jvm = {r["vec_id"]: r["list_id"] for r in
-           similarity.ivf_assign(df, cents).collect()}
+    out = similarity.ivf_assign(df, cents).collect()
+    jvm = {r["vec_id"]: r["list_id"] for r in out}
     py = {r["vec_id"]: r["list_id"] for r in
           similarity.ivf_assign_pandas(df, cents).collect()}
-    assert jvm == py
+
+    def nearest(v):
+        nv = math.sqrt(sum(x * x for x in v))
+        cos = [
+            sum(a * b for a, b in zip(v, c))
+            / (nv * math.sqrt(sum(x * x for x in c)))
+            for c in cents
+        ]
+        return cos.index(max(cos))
+
+    # the float32 values as stored, widened exactly to double
+    want = {r["vec_id"]: nearest([float(x) for x in r["embedding"]])
+            for r in out}
+    assert jvm == py == want
+    assert len(set(want.values())) > 1
 
 
 def test_pii_redact(spark):
@@ -2287,8 +2307,14 @@ def test_ivf_family_tolerates_null_embeddings(spark):
     cents = similarity.ivf_centroids(df, n_lists=4, iters=2)
     assert len(cents) == 4
 
-    top = similarity.ann_topk_ivf(
-        df, probe_id=0, k=3, n_lists=4, n_probe=4, iters=1).collect()
+    flat = {r["vec_id"]: r["list_id"] for r in
+            similarity.ivf_assign(df, cents).collect()}
+    assert flat[9001] is None and flat[9002] is None
+    assert all(v is not None for k, v in flat.items() if k < 9000)
+
+    top = similarity.ann_topk_ivf_batch(
+        df, probe_ids=[0], k=3, n_lists=4, n_probe=4, iters=1).collect()
+    top = sorted(top, key=lambda r: r["rank"])
     assert top[0]["vec_id"] in (0, 1000)  # the clone pair ties at 1.0
 
     batch = similarity.ann_topk_ivf_batch(
@@ -2784,29 +2810,55 @@ def test_leakage_safe_split(spark):
     assert got[0] == plain[0] and got[10] == plain[10]
 
 
-def test_ann_ivf_no_cache_leak_on_raise(spark):
-    """ADVICE r5: a checkpoint=False call that RAISES (probe id not in
-    the corpus) must not leave the MEMORY_AND_DISK corpus cache pinned
-    with no handle for the caller to free."""
+def test_ivf_pins_released_on_success_and_raise(spark, monkeypatch):
+    """The pinned IVF corpus is freed on every exit. A fit that raises
+    after materializing the pin leaves no cached RDD behind. After a
+    successful call the cache manager no longer holds the pin; the
+    blocks that remain belong to the returned answer (its
+    localCheckpoint) or, in semantic_dedup, to the near-dup join's own
+    pin, which has no owner yet."""
     import pytest
-
-    from databricks_flight_etl_spark.operators.similarity import (
-        ann_topk_ivf,
-    )
 
     vecs = spark.range(64).selectExpr(
         "id AS vec_id",
         "transform(sequence(1, 8), "
         "i -> CAST(pmod(xxhash64(id, i), 97) AS DOUBLE)) AS embedding",
     )
-    before = {r.id() for r in
-              spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-    with pytest.raises(ValueError, match="probe"):
-        ann_topk_ivf(vecs, probe_id=-12345, k=3, n_lists=4,
-                     checkpoint=False)
-    after = [r for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-             if r.id() not in before]
-    assert after == [], [str(r) for r in after]
+    jsc = spark.sparkContext._jsc.sc()
+    fit = similarity._ivf_fit
+    pins = []
+
+    def spy(pruned, *a, **kw):
+        pins.append(pruned)
+        return fit(pruned, *a, **kw)
+
+    def boom(pruned, *a, **kw):
+        pruned.count()  # materialize the pin, then fail the fit
+        raise RuntimeError("fit failed")
+
+    calls = {
+        "ann_topk_ivf_batch": lambda: similarity.ann_topk_ivf_batch(
+            vecs, probe_ids=[0, 1], k=3, n_lists=4, iters=1).collect(),
+        "semantic_dedup": lambda: similarity.semantic_dedup(
+            vecs, threshold=0.99, n_lists=2, iters=1).collect(),
+    }
+    for name, call in calls.items():
+        before = {r.id() for r in jsc.getRDDStorageInfo()}
+        monkeypatch.setattr(similarity, "_ivf_fit", boom)
+        with pytest.raises(RuntimeError, match="fit failed"):
+            call()
+        leaked = [str(r) for r in jsc.getRDDStorageInfo()
+                  if r.id() not in before]
+        assert leaked == [], (name, leaked)
+
+        monkeypatch.setattr(similarity, "_ivf_fit", spy)
+        pins.clear()
+        call()
+        assert pins and all(
+            not p.storageLevel.useMemory and not p.storageLevel.useDisk
+            for p in pins
+        ), name
+        spark.catalog.clearCache()
 
 
 def test_bpe_train_whitespace_rule_matches_kernel(spark):

@@ -6,7 +6,8 @@ estimate) reproduces the old physical-plan probe's decision on both
 sides of the narrowness boundary, and that spread() and the dedup
 verify no longer run Spark jobs at DataFrame-construction time (under
 AQE, ``df.rdd`` on a plan with exchanges *executes its query stages* —
-the r15 finding). They also pin two r15 folds against regressions the
+the r15 finding), and that a non-file source (JDBC) falls back to the
+exact probe instead of crashing the leaf walk. They also pin two r15 folds against regressions the
 fold introduced: PPJoin's injectivity verdict is re-probed on every
 construction, and chi-square's dof counts a NULL category.
 """
@@ -68,6 +69,24 @@ def test_spread_runs_zero_jobs_on_exchange_bearing_plans(spark, tmp_path):
         spark, lambda: partitioning.spread(lineage, "doc_id")
     )
     assert n == 0
+
+
+def test_spread_falls_back_on_jdbc_source(spark):
+    """A JDBC relation has no file index: the leaf walk must report
+    no estimate (under_parallel then takes the exact probe) instead
+    of calling ``location()`` on it and raising a Py4JError. Runs on an
+    in-memory Derby database; the driver ships in pyspark's jars."""
+    url = f"jdbc:derby:memory:spread_{uuid.uuid4().hex};create=true"
+    spark.range(5).withColumnRenamed("id", "k").write.jdbc(url, "T1")
+    src = spark.read.jdbc(url, "T1")
+    assert partitioning._file_leaf_stats(src) == (0, 0)
+    target = spark.sparkContext.defaultParallelism
+    assert partitioning._estimated_scan_splits(src, target) is None
+    assert partitioning.under_parallel(src) == (
+        src.rdd.getNumPartitions() < target
+    )
+    out = partitioning.spread(src, "k")
+    assert sorted(r["k"] for r in out.collect()) == [0, 1, 2, 3, 4]
 
 
 def test_ppjoin_reprobes_a_rewritten_source(spark, tmp_path, monkeypatch):

@@ -136,19 +136,22 @@ def test_ann_ivf_batch_no_corpus_shuffle_join(spark):
     never sort-merges — and the probe-id filter must push to the scan.
     Shuffles: corpus spread + per-probe Window only.
 
-    r4's leak fix made the production path return a localCheckpoint
-    (lineage truncated to a scan), so audit the checkpoint=False twin —
-    the identical plan, just not yet materialized."""
+    The public path returns a localCheckpoint (lineage truncated to a
+    scan), so audit the lazy plan it checkpoints, built by the private
+    helper inside the same pin."""
     from databricks_flight_etl_spark import sources
-    from databricks_flight_etl_spark.operators.similarity import (
-        ann_topk_ivf_batch,
-    )
+    from databricks_flight_etl_spark.operators import similarity
 
     emb = sources.load_table(spark, SF, "embeddings")
-    df = ann_topk_ivf_batch(
-        emb, probe_ids=[0, 1, 2, 3], k=10, checkpoint=False
-    )
-    audit = plans.plan_audit(df)
+    with similarity._pinned(
+        similarity._vectors(emb, "vec_id", "embedding")
+    ) as pruned:
+        df = similarity._ivf_probe_plan(
+            emb, pruned, [0, 1, 2, 3], k=10, id_col="vec_id",
+            vec_col="embedding", n_lists=16, n_probe=4, iters=2,
+            decimals=6,
+        )
+        audit = plans.plan_audit(df)
     assert audit["n_sortmerge_joins"] == 0, audit
     assert audit["n_broadcast_joins"] >= 1, audit
     assert audit["n_shuffles"] <= 3, audit
