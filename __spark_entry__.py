@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databricks_flight_etl_spark.partitioning import local_df as _local_df
+from databricks_flight_etl_spark.schemas import TESTDATA_SCHEMAS
 from databricks_flight_etl_spark.session import tune
 from databricks_flight_etl_spark.sources import load_table
 from databricks_flight_etl_spark.functions import (
@@ -2129,7 +2130,7 @@ def q_streaming_enrich(spark, sf_dir):
     from databricks_flight_etl_spark.streaming import streaming_enrich
 
     tune(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
+    raw_schema = TESTDATA_SCHEMAS["orders"]
     stage = tempfile.mkdtemp(prefix="flight_etl_enr_")
     shutil.copy(f"{sf_dir}/orders.parquet", f"{stage}/orders.parquet")
     stream = spark.readStream.schema(raw_schema).format("parquet").load(
@@ -2219,7 +2220,7 @@ def q_streaming_interval_join(spark, sf_dir):
     )
 
     tune(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = TESTDATA_SCHEMAS["events"]
     stage = tempfile.mkdtemp(prefix="flight_etl_ssj_")
     shutil.copy(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
 
@@ -2687,7 +2688,7 @@ def q_streaming_hll(spark, sf_dir):
     )
 
     tune(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = TESTDATA_SCHEMAS["events"]
     stage = tempfile.mkdtemp(prefix="flight_etl_shll_")
     shutil.copy(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
     with _stream_parts(spark):
@@ -3401,7 +3402,7 @@ def q_streaming_day_counts(spark, sf_dir):
     from databricks_flight_etl_spark.streaming import streaming_day_counts
 
     tune(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = TESTDATA_SCHEMAS["events"]
     # the file source wants a directory; point basePath at a staging dir
     # holding just the events file (testdata itself is read-only and the
     # sf_dir mixes ten tables)
@@ -4625,7 +4626,7 @@ def q_streaming_dedup(spark, sf_dir):
     from databricks_flight_etl_spark.streaming import streaming_dedup
 
     tune(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = TESTDATA_SCHEMAS["events"]
     stage = tempfile.mkdtemp(prefix="flight_etl_stream_dedup_")
     shutil.copy(f"{sf_dir}/events.parquet", f"{stage}/events_a.parquet")
     shutil.copy(f"{sf_dir}/events.parquet", f"{stage}/events_b.parquet")
@@ -4671,7 +4672,7 @@ def q_streaming_sessionize(spark, sf_dir):
     from databricks_flight_etl_spark.streaming import streaming_sessionize
 
     tune(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = TESTDATA_SCHEMAS["events"]
     stage = tempfile.mkdtemp(prefix="flight_etl_stream_sess_")
     shutil.copy(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
     stream = (
@@ -4697,7 +4698,8 @@ def q_streaming_sessionize(spark, sf_dir):
             # sentinel batch: one far-future event pushes the watermark
             # past every real session's end + gap
             max_ts = (
-                spark.read.parquet(f"{sf_dir}/events.parquet")
+                spark.read.schema(raw_schema)
+                .parquet(f"{sf_dir}/events.parquet")
                 .agg(F.max("ts").alias("m")).first()["m"]
             )
             # range(..., numPartitions=1): a JVM-native single-partition

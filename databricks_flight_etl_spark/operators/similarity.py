@@ -29,7 +29,7 @@ __all__ = ["dot", "l2_norm", "cosine", "cosine_topk", "cosine_topk_batch",
            "cosine_topk_pandas",
            "hyperplane_bucket", "ann_topk_lsh", "ann_topk_lsh_multiprobe",
            "cosine_near_dup_pairs",
-           "ivf_centroids", "ivf_assign", "ivf_assign_pandas",
+           "ivf_centroids", "ivf_assign",
            "ann_topk_ivf_batch",
            "quantize_embeddings", "dequantize_embeddings",
            "semantic_dedup",
@@ -366,29 +366,6 @@ def _unit(v: list[float]) -> list[float]:
     return [x / n for x in v]
 
 
-def _nearest_list(vec: Column, centroids: list[list[float]]) -> Column:
-    """0-based index of the max-cosine centroid. Centroids are unit
-    vectors, so argmax dot == argmax cosine; array_position finds the
-    max's index (exact double equality — same computed value)."""
-    dots = F.array(*[
-        dot(vec, F.array(*[F.lit(float(x)) for x in c])) for c in centroids
-    ])
-    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
-
-
-# Arrow-vs-codegen crossover for nearest-list assignment: the
-# literal-fold expression compiles n_lists × dim constants into
-# whole-stage codegen — a ONE-TIME janino cost that dominates a
-# single-shot job well before row count matters (re-measured r4 at
-# sf0.1, dim=64: 16 lists = ~5.5 s cold compile vs ~0.6 s Arrow;
-# 8 lists compiles in <1 s and then beats Arrow on per-row cost).
-# Above the crossover the numpy matmul kernel is compile-free and
-# assignment-identical (pinned by test). Below it the fold also skips
-# the Arrow pass's fixed Python-stage cost (~0.35 s per call at 1
-# list, sf0.1, 4-core host).
-_ASSIGN_ARROW_MIN_LISTS = 9
-
-
 # JL auto-dispatch crossover: above this many sign-matrix terms
 # (dim × out_dim) the expression form's per-row interpreted HOF fold
 # (linear in terms) loses to one numpy GEMM per Arrow batch, so
@@ -397,20 +374,6 @@ _ASSIGN_ARROW_MIN_LISTS = 9
 # 1024-dim × 128 lands far above.
 _JL_ARROW_MIN_TERMS = 32_768
 
-
-def _assign_lists(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str,
-    out_col: str,
-) -> DataFrame:
-    """Nearest-centroid assignment, dispatched across the measured
-    Arrow/codegen crossover (see ``_ASSIGN_ARROW_MIN_LISTS``)."""
-    if not centroids:  # empty-corpus codebook: typed null, not a crash
-        return df.withColumn(out_col, F.lit(None).cast("int"))
-    if len(centroids) >= _ASSIGN_ARROW_MIN_LISTS:
-        return ivf_assign_pandas(df, centroids, vec_col, out_col)
-    return ivf_assign(df, centroids, vec_col, out_col)
 
 def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """The IVF corpus: (``id_col``, __v array<double>) with NULL
@@ -553,41 +516,32 @@ def ivf_assign(
     out_col: str = "list_id",
 ) -> DataFrame:
     """Attach the IVF list id (nearest-centroid index) — the column to
-    partition/cluster the stored index by. A NULL embedding gets a NULL
-    list id."""
-    return df.withColumn(
-        out_col, _nearest_list(_as_double(vec_col), centroids)
-    )
-
-
-def ivf_assign_pandas(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str = "list_id",
-) -> DataFrame:
-    """``ivf_assign`` with the argmax computed by numpy in an Arrow
-    batch (one (batch × dim) @ (dim × n_lists) matmul per batch)
-    instead of the JVM literal-expression fold.
-
-    The trade (mirrors cosine_topk_pandas): the expression form compiles
-    n_lists·dim literals into whole-stage codegen — ~seconds of one-time
-    janino work that dominates small interactive jobs — while this path
-    is compile-free but pays Arrow transfer per row. Same assignments
-    (pinned by test: argmax of the same dot products; ties go to the
-    lower index in both, numpy argmax returns the first maximum).
+    partition/cluster the stored index by. The argmax is one numpy
+    (batch × dim) @ (dim × n_lists) matmul per Arrow batch, the same
+    step the Lloyd fit assigns with (``_centroid_dots``), so the final
+    index puts every vector in the list the fit counted it in. Ties go
+    to the lower index (numpy argmax returns the first maximum). A NULL
+    embedding gets a NULL list id; an empty codebook gives a NULL column.
     """
     from pyspark.sql import types as T
 
+    if not centroids:  # empty-corpus codebook: typed null, not a crash
+        return df.withColumn(out_col, F.lit(None).cast("int"))
     dots = _centroid_dots(centroids)
     fields = [f for f in df.schema.fields]
     out_schema = T.StructType(fields + [T.StructField(out_col, T.IntegerType())])
     cols = [f.name for f in fields]
 
     def kernel(batches):
+        import pandas as pd
+
         for pdf in batches:
-            lists = dots(pdf[vec_col])[1].argmax(axis=1).astype("int32")
             out = pdf[cols].copy()
+            vs = pdf[vec_col]
+            ok = vs.notna().to_numpy()
+            lists = pd.array([None] * len(pdf), dtype="Int32")
+            if ok.any():
+                lists[ok] = dots(vs[ok])[1].argmax(axis=1)
             out[out_col] = lists
             yield out
 
@@ -648,10 +602,9 @@ def _ivf_probe_plan(
     from pyspark.sql import Window
 
     # one pinned (id, vec) corpus feeds BOTH the Lloyd rounds and the
-    # final index assignment; the assignment dispatches across the
-    # Arrow/codegen crossover (``_ASSIGN_ARROW_MIN_LISTS``)
+    # final index assignment
     cents = _ivf_fit(pruned, id_col, n_lists, iters)
-    assigned = _assign_lists(pruned, cents, "__v", "__list")
+    assigned = ivf_assign(pruned, cents, "__v", "__list")
 
     # probes come from the RAW df, not the spread corpus: the isin
     # filter pushes to the scan, instead of paying the corpus-wide
@@ -953,9 +906,9 @@ def semantic_dedup(
     per-cluster pair work (N/k)²·k = N²/k, i.e. quadratic in the
     corpus (measured 102× time at 30× data in the scale probe before
     this default). With scaled k the pair stage is ~target·N — linear.
-    Assignment cost is N·k dot products; from 9 lists up it runs as one
-    numpy matmul per Arrow batch (:func:`ivf_assign_pandas`), whose
-    constant keeps it off the critical path well past 10⁶ lists; the
+    Assignment cost is N·k dot products, one numpy matmul per Arrow
+    batch (:func:`ivf_assign`), whose constant keeps it off the
+    critical path well past 10⁶ lists; the
     auto value caps at 4096 — beyond that (N ≫ 10⁶ rows), pass an
     explicit ``n_lists`` sized to your cluster budget or pre-cluster
     hierarchically (two-level IVF) before calling this.
@@ -977,7 +930,7 @@ def semantic_dedup(
     # therefore always SURVIVE via the anti-join passthrough.
     with _pinned(_vectors(df, id_col, vec_col)) as pruned:
         cents = _ivf_fit(pruned, id_col, n_lists=n_lists, iters=iters)
-        assigned = _assign_lists(pruned, cents, "__v", "__list")
+        assigned = ivf_assign(pruned, cents, "__v", "__list")
         # fewer blocks than cores (the n_lists=1 certification config
         # in the limit) → salt the pair join so the quadratic work
         # spreads; corpus-scaled configs have n_lists ≫ cores and keep
@@ -1027,7 +980,7 @@ def ivf_assign_two_level(
     # materialized inside the pins, so both caches are freed on return.
     with _pinned(_vectors(df, id_col, vec_col)) as pruned:
         super_cents = _ivf_fit(pruned, id_col, n_super, iters)
-        assigned = _assign_lists(pruned, super_cents, "__v", "__super")
+        assigned = ivf_assign(pruned, super_cents, "__v", "__super")
         if n_sub <= 1:
             out = assigned.select(
                 F.col(id_col),
@@ -1050,7 +1003,7 @@ def ivf_assign_two_level(
             )
             with _pinned(resid) as resid:
                 sub_cents = _ivf_fit(resid, id_col, n_sub, iters)
-                out = _assign_lists(resid, sub_cents, "__v", "__sub").select(
+                out = ivf_assign(resid, sub_cents, "__v", "__sub").select(
                     F.col(id_col),
                     (
                         F.col("__super").cast("long") * F.lit(n_sub)

@@ -135,6 +135,20 @@ def get_spark(
         .config(
             "spark.driver.extraJavaOptions", f"-Dderby.system.home={derby_home}"
         )
+        # Two local-only fixed costs (not in RUNTIME_CONF: tune() applies
+        # that to sessions we did not build). The stock daemon's workers
+        # re-read every zip's file list on every task; see _pydaemon.
+        .config("spark.python.daemon.module", "databricks_flight_etl_spark._pydaemon")
+        # The default FileContext manager renames with OVERWRITE through
+        # getFileLinkStatus, which without the Hadoop native library
+        # forks readlink/stat per checkpoint file. On a local disk
+        # rename(2) is atomic and replaces the target, so the plain
+        # FileSystem manager keeps the same commit protocol.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans import estimate_bytes, partitions_for_target
+from ..schemas import TESTDATA_SCHEMAS
 
 __all__ = [
     "compact_parquet",
@@ -206,8 +207,14 @@ ns_long_to_timestamp = normalize_timestamp
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table (TESTDATA.md), normalizing
-    timestamp columns to session-TZ TimestampType."""
-    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    timestamp columns to session-TZ TimestampType.
+
+    The star tables read with their declared schema
+    (``schemas.TESTDATA_SCHEMAS``) and run no job; any other name
+    falls back to inference, one footer-reading job."""
+    path = f"{sf_dir}/{name}.parquet"
+    schema = TESTDATA_SCHEMAS.get(name)
+    df = read_parquet(spark, path) if schema is None else spark.read.schema(schema).parquet(path)
     ts_cols = [c for c in _NORMALIZE_TS_COLS.get(name, []) if c in df.columns]
     return normalize_timestamp(df, ts_cols) if ts_cols else df
 

@@ -11,9 +11,11 @@ schema widths. Run after adding queries:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def generate(sf_dir: str, out=None) -> None:

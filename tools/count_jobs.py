@@ -12,12 +12,14 @@ job group per rep, so concurrent sessions don't pollute the count.
 from __future__ import annotations
 
 import argparse
+import os
 import statistics
 import sys
 import time
 import uuid
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:

@@ -18,7 +18,8 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def _head_sha(repo: str) -> str:
@@ -45,16 +46,15 @@ def main() -> None:
     from databricks_flight_etl_spark.plans import explain_str
     from databricks_flight_etl_spark.session import get_spark
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sha = _head_sha(repo)
-    os.makedirs(os.path.join(repo, args.out), exist_ok=True)
+    sha = _head_sha(ROOT)
+    os.makedirs(os.path.join(ROOT, args.out), exist_ok=True)
     spark = get_spark("dump-plan")
     qs = entrymod.queries()
     for name in args.queries:
         spark.catalog.clearCache()  # cold plans, order-invariant
         df = qs[name](spark, args.sf)
         plan = explain_str(df, "formatted")
-        path = os.path.join(repo, args.out, f"{name}_{args.tag}.txt")
+        path = os.path.join(ROOT, args.out, f"{name}_{args.tag}.txt")
         with open(path, "w") as f:
             f.write(
                 f"# {name} — explain('formatted') at {args.sf} "

@@ -8,9 +8,11 @@ the code. README links here instead of restating 200+ rows in prose.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -59,7 +61,7 @@ def main() -> None:
         kind = "certified" if name in oracles else "rows-only"
         lines.append(f"| {name} | {kind} | {doc} |")
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/OPMAP.md", "w") as f:
+    with open(os.path.join(ROOT, "OPMAP.md"), "w") as f:
         f.write(out)
     print(f"wrote OPMAP.md: {len(qs)} queries")
 

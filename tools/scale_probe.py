@@ -16,10 +16,12 @@ probe (the full op set at 100x would take hours).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def synth_docs(spark, n, words=120):

@@ -10,11 +10,13 @@ so before/after comparisons use medians.
 from __future__ import annotations
 
 import argparse
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
