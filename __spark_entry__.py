@@ -2537,12 +2537,12 @@ def q_vector_mean(spark, sf_dir):
 
 def q_jl_project(spark, sf_dir):
     """Johnson–Lindenstrauss ±1-sign projection 64→16 (scale 1/√16 =
-    0.25, exact in binary): per-coordinate zip_with against the literal
-    sign row, folded left seeded with the first term — no shuffle. The
-    SAME Python-derived sign matrix stamps the Spark expression and
-    the SQL oracle; identical left-assoc add order makes the sums
-    bit-identical before the 6 dp round. posexploded to scalar rows
-    for the harness."""
+    0.25, exact in binary): one numpy matmul per Arrow batch — no
+    shuffle. The SAME Python-derived sign matrix stamps the Spark
+    kernel and the SQL oracle. numpy's summation order differs from
+    the oracle's left-assoc add chain only in the last ulp, far below
+    the 6 dp round, and the rounded values match the oracle exactly
+    on the testdata. posexploded to scalar rows for the harness."""
     from databricks_flight_etl_spark.operators.similarity import (
         project_embeddings,
     )
@@ -2563,12 +2563,9 @@ def q_jl_project(spark, sf_dir):
 def q_jl_project_wide(spark, sf_dir):
     """The BIG-DIM JL regime (r4 verdict task #6): vectors widened to
     1024 dims (flatten ∘ array_repeat — deterministic), projected to
-    128 — 131 072 sign-matrix terms, far past _JL_ARROW_MIN_TERMS, so
-    the public project_embeddings auto-dispatches to the Arrow matmul
-    (the expression form's per-row HOF fold is linear in the term
-    count; one numpy GEMM per batch is far cheaper). Rows-only: the
-    certified twin is q_jl_project (bit-identical 64→16 expression
-    path); this query certifies the dispatcher's scale path runs."""
+    128 — 131 072 sign-matrix terms in one numpy GEMM per Arrow batch.
+    Rows-only: the certified twin is q_jl_project (the same kernel at
+    64→16); this query certifies the wide shape runs."""
     from databricks_flight_etl_spark.operators.similarity import (
         project_embeddings,
     )
@@ -4221,36 +4218,11 @@ def q_asof_join(spark, sf_dir):
 
 
 def q_asof_join_cogroup(spark, sf_dir):
-    """As-of join via cogroup().applyInPandas (the cogrouped-Arrow API
-    surface): same query and SAME oracle as q_asof_join — both sides
-    shuffle once on user_id, pd.merge_asof matches per key group."""
-    from databricks_flight_etl_spark.operators.temporal import (
-        asof_join_cogroup,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(
-            F.max("event_id").alias("purch_id"),
-            F.max("value").alias("purch_value"),
-        )
-    )
-    out = asof_join_cogroup(
-        clicks, purchases, keys=["user_id"],
-        left_ts="ts", right_ts="ts", how="inner",
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        "purch_id",
-        "purch_value",
-        (F.unix_micros("ts") - F.unix_micros("__matched_ts")).alias("gap_us"),
-    )
+    """Kept registry name for the retired cogroup().applyInPandas as-of
+    join: the JVM union+window ``asof_join`` beat it on CPU at sf0.01
+    and sf0.1 with identical rows, so this is q_asof_join under its
+    second name, checked against the SAME oracle."""
+    return q_asof_join(spark, sf_dir)
 
 
 def q_range_join_time(spark, sf_dir):
@@ -4726,11 +4698,11 @@ def q_streaming_sessionize(spark, sf_dir):
 
 def q_dedup_clusters(spark, sf_dir):
     """Iterative algorithm, oracle-certified: connected components
-    (min-label propagation, driver loop + localCheckpoint) over the
-    embedding near-dup pair list — the transitive-closure step that
-    turns pairwise matches into dedup clusters. DuckDB oracle computes
-    the same closure with a recursive CTE over the identical edge
-    SQL."""
+    (driver union-find, since this pair list is far below the
+    distributed bound) over the embedding near-dup pair list — the
+    transitive-closure step that turns pairwise matches into dedup
+    clusters. DuckDB oracle computes the same closure with a recursive
+    CTE over the identical edge SQL."""
     from databricks_flight_etl_spark.operators.graph import (
         connected_components,
     )
@@ -4742,16 +4714,18 @@ def q_dedup_clusters(spark, sf_dir):
 
 def q_dedup_clusters_star(spark, sf_dir):
     """Connected components via large-star/small-star contraction
-    (Kiveris et al., SoCC'14) — the O(log n)-round alternative to
-    q_dedup_clusters' min-label loop for deep components; certified
-    against the identical recursive-CTE oracle."""
+    (Kiveris et al., SoCC'14) — the branch ``connected_components``
+    takes above its driver bound, called directly so this small pair
+    list certifies it; checked against the identical recursive-CTE
+    oracle."""
     from databricks_flight_etl_spark.operators.graph import (
-        connected_components_star,
+        _edge_list,
+        _star_contraction,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
     pairs = cosine_near_dup_pairs(emb, threshold=0.35, block_col="label")
-    return connected_components_star(pairs, "id_a", "id_b")
+    return _star_contraction(_edge_list(pairs, "id_a", "id_b"))
 
 
 def q_parquet_roundtrip(spark, sf_dir):
@@ -4793,19 +4767,11 @@ def q_decode_features(spark, sf_dir):
 
 
 def q_decode_features_arrow(spark, sf_dir):
-    """X3 decode via the mapInArrow twin — raw RecordBatches in and
-    out, no Arrow→pandas hop. Same certified kernel and the SAME
-    oracle as q_decode_features, so the two Python batch APIs certify
-    each other."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
-    )
-    feats = multimodal.decode_features_arrow(
-        docs, "payload", "doc_id", n_features=8
-    )
-    return feats.select(
-        "id", F.posexplode("features").alias("feature_idx", "value")
-    )
+    """Kept registry name for the retired mapInArrow decode twin: the
+    mapInPandas byte-statistics kernel costs the same with identical
+    rows, so this is q_decode_features under its second name, checked
+    against the SAME oracle."""
+    return q_decode_features(spark, sf_dir)
 
 
 def q_phash_near_dup(spark, sf_dir):
@@ -9449,8 +9415,8 @@ def oracle_sql() -> dict[str, str]:
             ASOF JOIN purchases b
             ON a.user_id = b.user_id AND b.ts <= a.ts
         """,
-        # same oracle as q_asof_join — the cogrouped-pandas variant must
-        # produce the identical certified result
+        # same oracle as q_asof_join — the same query under its second
+        # registry name
         "q_asof_join_cogroup": """
             WITH purchases AS (
                 SELECT user_id, ts,

@@ -104,10 +104,11 @@ def zscore_by_group(
     # column to Python, so an unpruned frame pays transfer for columns
     # the kernel never reads (visible as extra scan width in PLANS.md)
     df = df.select(*group_cols, id_col, value_col)
-    # pin parallelism: AQE coalesces by shuffle bytes, but this stage's
-    # cost is Python per GROUP — an explicit key repartition (exempt
-    # from coalescing) keeps the grouped kernel parallel (see
-    # temporal.asof_join_cogroup for the measured 13x effect)
+    # pin parallelism: AQE coalesces by shuffle bytes, and a few MB of
+    # key-grouped Arrow input collapses to ~1 partition, serializing a
+    # stage whose cost is Python per GROUP — an explicit key
+    # repartition (exempt from coalescing) keeps the grouped kernel
+    # parallel
     n_parts = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )

@@ -1029,7 +1029,7 @@ def minhash_dedup_pairs(
     want is O(n); this option keeps the materialized result bounded
     even when the edge set is not. The edges stream through the CC
     contraction (bounded driver union-find below 1M edges, the
-    distributed min-label loop above — see
+    distributed star contraction above — see
     :func:`..graph.connected_components`) without ever being
     collected as a full pair list."""
     if bands is None:

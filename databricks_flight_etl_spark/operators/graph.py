@@ -8,21 +8,15 @@ truncating lineage each round so plan size stays O(1) instead of
 growing with iterations (SURVEY §2.11 extension; the reference has no
 graph surface).
 
-Algorithm: min-label propagation. Every node starts labeled with
-itself; each round every node takes the min label over itself and its
-neighbors; converges in O(component diameter) rounds — near-dup
-clusters are shallow (a hub duplicate links its copies), so typically
-3–6 rounds. Each round is one shuffle-join + one groupBy on the edge
-list.
-
-For graphs whose components may be DEEP (long chains — where
-O(diameter) rounds is the bottleneck), ``connected_components_star``
-implements the large-star/small-star contraction (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14): O(log n)
-rounds with a SHRINKING edge set. Both forms share the output contract
-(component id = min node id) and are certified against the same
-recursive-CTE oracle; pick min-label for shallow dedup shapes (constant
-edge set, cheaper rounds) and star contraction at adversarial depth.
+Algorithm: a near-dup pair list is usually TINY relative to the
+corpus, so while the edge list fits ``_DRIVER_MAX_EDGES`` a driver
+union-find labels it in one bounded collect. Above that bound the
+large-star/small-star contraction (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC'14) runs distributed:
+O(log n) rounds with a SHRINKING edge set, so deep components (long
+chains) cost no more rounds than shallow dedup hubs. Both branches
+share the output contract (component id = min node id) and are
+certified against the same recursive-CTE oracle.
 """
 
 from __future__ import annotations
@@ -32,98 +26,56 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "connected_components",
-    "connected_components_star",
     "dedup_survivors",
     "dedup_survivors_by",
     "pagerank",
 ]
 
 
+# Edge-list size up to which connected_components labels on the
+# driver (1M pairs ≈ tens of MB — the same bounded-collect budget as
+# the bloom bitmap). Tests patch it to 0 to force the contraction.
+_DRIVER_MAX_EDGES = 1_000_000
+# The contraction needs O(log n) rounds; not converging in this many
+# means a bug, and a silent partial closure would merge too little.
+_STAR_MAX_ROUNDS = 50
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 64,
-    driver_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; the component id
     is the minimum node id in the component (deterministic).
 
-    ``edges`` is undirected input (each pair once is enough). Stops when
-    a round changes no label, or after ``max_iter`` rounds (raises if
-    unconverged — silent partial closure would merge too little).
-
-    Small-graph fast path: a near-dup pair list is usually TINY relative
-    to the corpus (only duplicated docs appear), yet the distributed
-    loop pays several shuffle+checkpoint rounds of fixed overhead. When
-    the deduped edge list fits ``driver_max_edges`` (default 1M pairs ≈
-    tens of MB — the same bounded-collect budget as the bloom bitmap),
-    a driver union-find computes the identical min-id labeling in
-    milliseconds. Above the bound, the distributed min-label loop runs
-    unchanged — the 100 TB path is untouched. Set
-    ``driver_max_edges=0`` to force the distributed loop (the tests'
-    convergence/round-count assertions do).
+    ``edges`` is undirected input (each pair once is enough). While the
+    edge list fits ``_DRIVER_MAX_EDGES`` a driver union-find computes
+    the labeling in milliseconds, sparing the fixed shuffle+checkpoint
+    rounds of a distributed loop; above the bound the large-star/
+    small-star contraction runs (module docstring), raising if it does
+    not converge.
     """
-    # Materialize the PROJECTED edge list once on entry: this function
-    # consumes its input with at least two actions (the combined
-    # probe+collect, then — above the bound — the doubled-distinct
-    # build), and the caller's edge plan is typically the EXPENSIVE tail of a
-    # dedup pipeline (the exact-Jaccard verify join) — unmaterialized,
-    # that tail re-executed per action (~2x the dominant stage;
-    # round-9 review finding, fixed at the root so every caller —
-    # dedup_survivors, the funnel, output='clusters' — benefits). The
-    # checkpoint stores (a, b) pairs only, a fraction of what the
-    # distributed path's doubled-distinct checkpoint below already
-    # stores.
-    e = edges.select(
+    e = _edge_list(edges, src, dst)
+    # ONE bounded action decides the fast path AND feeds it: a
+    # limit(B+1) collect off the checkpointed edges — if it comes back
+    # with ≤B rows, that IS the complete edge list
+    rows = e.limit(_DRIVER_MAX_EDGES + 1).collect()
+    if len(rows) <= _DRIVER_MAX_EDGES:
+        return _cc_driver_union_find(rows, e)
+    return _star_contraction(e)
+
+
+def _edge_list(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The projected (a, b) edge list, materialized once: the bounded
+    probe and then the contraction (which reads it twice) consume it,
+    and the caller's edge plan is typically the EXPENSIVE tail of a
+    dedup pipeline (the exact-Jaccard verify join), which would
+    otherwise re-execute per action. The checkpoint stores (a, b)
+    pairs only."""
+    return edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).localCheckpoint()
-    if driver_max_edges:
-        # ONE bounded action decides the fast path AND feeds it: a
-        # limit(B+1) collect off the checkpointed edges — if it comes
-        # back with ≤B rows, that IS the complete edge list (round-11;
-        # previously a separate limit+count probe paid an extra job
-        # before an identical collect).
-        rows = e.limit(driver_max_edges + 1).collect()
-        if len(rows) <= driver_max_edges:
-            return _cc_driver_union_find(rows, e)
-    # lazy checkpoints from here down: the plan is cut (LogicalRDD)
-    # exactly as before, but materialization folds into the first
-    # consuming job — labels pins inside round 1, and each round's
-    # new_labels pins inside the convergence count() that immediately
-    # follows — instead of paying a standalone eager job per round
-    # (halves the loop's action count; labels are integer/string min
-    # propagation, so cadence cannot perturb values)
-    e = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = e.select(F.col("a").alias("node")).distinct().select(
-        "node", F.col("node").alias("component")
-    ).localCheckpoint(eager=False)
-
-    for _ in range(max_iter):
-        nbr_min = (
-            e.join(labels, e.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.a, "left")
-            .select(
-                "node",
-                F.least("component", "nbr_component").alias("component"),
-                (F.col("nbr_component") < F.col("component")).alias("__chg"),
-            )
-        ).localCheckpoint(eager=False)  # cut lineage, pin in the count
-        changed = new_labels.where(F.col("__chg")).count()
-        labels = new_labels.drop("__chg")
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds"
-    )
 
 
 def _cc_driver_union_find(collected_rows, e: DataFrame) -> DataFrame:
@@ -253,18 +205,10 @@ def dedup_survivors_by(
     return df.join(drop, id_col, "left_anti")
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """(node, component) via alternating large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the O(log n)-round form of
-    ``connected_components`` for graphs whose components may be DEEP
-    (long chains), where min-label's O(diameter) rounds is the
-    bottleneck. Same output contract: component id = min node id.
+def _star_contraction(raw: DataFrame) -> DataFrame:
+    """(node, component) of the checkpointed (a, b) edge list ``raw``
+    (see :func:`_edge_list`) via alternating large-star/small-star
+    contraction — O(log n) rounds however deep the components.
 
     Per round both phases are one groupBy + one join on the current
     edge list, and the edge list SHRINKS as stars contract:
@@ -276,11 +220,6 @@ def connected_components_star(
     Converged when the edge multiset is fixed: every node then points
     at its component root. Deterministic at every step (min over sets).
     """
-    # entry materialization: raw is consumed twice (nodes + canonical
-    # edges) — same root fix as connected_components
-    raw = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint()
     # lazy checkpoints below: plan cut as before, materialization folds
     # into the first consumer (nodes → the final roots anti-join, e →
     # round 1, each round's e → its own sig agg) instead of one eager
@@ -332,7 +271,7 @@ def connected_components_star(
         return linked.where(F.col("a") != F.col("b")).distinct()
 
     prev_sig = None
-    for _ in range(max_iter):
+    for _ in range(_STAR_MAX_ROUNDS):
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         # bit_xor is overflow-free: sum(xxhash64) relies on non-ANSI
         # long wraparound and throws ARITHMETIC_OVERFLOW under Spark 4's
@@ -347,7 +286,8 @@ def connected_components_star(
         prev_sig = sig
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+            "connected_components did not converge in "
+            f"{_STAR_MAX_ROUNDS} rounds"
         )
     # converged edges form stars (member → root); roots map to themselves
     members = e.select(F.col("a").alias("node"), F.col("b").alias("component"))
@@ -452,7 +392,7 @@ def pagerank(
             # copies of "the same" ranks could then feed one round (a
             # boundary value at the 6-dp round could flip). The eager
             # action guarantees exactly one copy ever exists; the
-            # integer-labeled CC loops above don't need this.
+            # integer-labeled CC loop above doesn't need this.
             .localCheckpoint(eager=True)
         )
     if decimals is not None:

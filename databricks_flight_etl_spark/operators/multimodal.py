@@ -35,7 +35,6 @@ __all__ = [
     "decode_features",
     "resize_media",
     "sample_frames",
-    "decode_features_arrow",
     "media_fingerprint",
 ]
 
@@ -287,49 +286,6 @@ def sample_frames(
             F.sha2(frame, 256).alias("frame_sha256"),
         )
     )
-
-
-def decode_features_arrow(
-    df: DataFrame,
-    payload_col: str,
-    id_col: str,
-    n_features: int = 8,
-) -> DataFrame:
-    """``mapInArrow`` twin of :func:`decode_features` (byte-statistics
-    kernel): batches arrive as raw ``pyarrow.RecordBatch`` — no
-    Arrow→pandas conversion at all, the cheapest Python-side path
-    Spark offers. Same output contract and the same certified values
-    as the mapInPandas/bytes form, so the two certify each other; use
-    this one when the kernel consumes buffers directly (codecs,
-    tokenizers) and the pandas object overhead is pure waste."""
-    import pyarrow as pa
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("features", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    src = spread(
-        df.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(payload_col).alias("payload"),
-        )
-    )
-
-    def _extract(batches):
-        for batch in batches:
-            ids = batch.column("id")
-            feats = [
-                _byte_stat_features(p.as_py(), n_features)
-                for p in batch.column("payload")
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(feats, type=pa.list_(pa.float64()))],
-                names=["id", "features"],
-            )
-
-    return src.mapInArrow(_extract, out_schema)
 
 
 _DCT32 = None

@@ -475,7 +475,7 @@ def leakage_safe_split(
 
     Output: all input columns + ``split``. Engine shape: one CC pass
     over the pair list only (tiny vs the corpus; driver union-find
-    under the gated budget, distributed min-label above it), one
+    under the gated budget, star contraction above it), one
     left equi-join of corpus to the (node, component) table — AQE
     broadcasts it when small — then the same narrow hash-threshold
     projection as split_assign."""

@@ -34,7 +34,7 @@ __all__ = ["dot", "l2_norm", "cosine", "cosine_topk", "cosine_topk_batch",
            "quantize_embeddings", "dequantize_embeddings",
            "semantic_dedup",
            "group_vector_mean", "centroid_outlier_scores",
-           "project_embeddings", "project_embeddings_pandas",
+           "project_embeddings",
 ]
 
 
@@ -364,15 +364,6 @@ def _unit(v: list[float]) -> list[float]:
 
     n = math.sqrt(sum(x * x for x in v)) or 1.0
     return [x / n for x in v]
-
-
-# JL auto-dispatch crossover: above this many sign-matrix terms
-# (dim × out_dim) the expression form's per-row interpreted HOF fold
-# (linear in terms) loses to one numpy GEMM per Arrow batch, so
-# project_embeddings switches to the Arrow matmul.
-# 64-dim × 16 (the bit-certified config) stays comfortably below;
-# 1024-dim × 128 lands far above.
-_JL_ARROW_MIN_TERMS = 32_768
 
 
 def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -1129,8 +1120,8 @@ def _jl_signs(dim: int, out_dim: int, seed: int = 7) -> list[list[int]]:
     md5 (hashlib — plain public derivation, reproducible anywhere):
     sign[j][i] = +1 if the first hex nibble of md5(f"{seed}|{j}|{i}")
     is < 8 else -1. Engine-independent by construction: the same
-    Python derivation stamps both the Spark expression and the SQL
-    oracle, so certification covers the projection algebra."""
+    Python derivation stamps both the Spark kernel and the SQL oracle,
+    so certification covers the projection algebra."""
     import hashlib
 
     return [
@@ -1158,87 +1149,12 @@ def project_embeddings(
     standard pre-shrink before ANN indexing or near-dup banding when
     the raw embedding is wide.
 
-    The signs are CONSTANTS baked into the expression (no per-row
-    hashing): each output coordinate is a zip_with against its literal
-    sign row folded left — a narrow map, no shuffle, no Python, and
-    the fold is seeded with the first term so the sum order is the
-    exact left-assoc chain an unrolled-SQL oracle replays.
+    One numpy matmul per Arrow batch: (batch × dim) @ (dim × out_dim)
+    against the :func:`_jl_signs` matrix, then the scale, then the
+    round. A narrow map, no shuffle. numpy's summation order is not
+    the left-assoc chain t₀+t₁+… an unrolled-SQL oracle replays, so a
+    sum may differ from it in the last ulp before the round.
     Output: (id, proj array<double>, rounded to ``decimals``).
-
-    Above ``_JL_ARROW_MIN_TERMS`` total sign-matrix terms
-    (dim × out_dim) the call auto-dispatches to
-    :func:`project_embeddings_pandas`: the per-row interpreted HOF
-    fold is linear in the term count, while the Arrow matmul hands
-    the whole batch to one numpy GEMM (values agree to the rounding
-    decimals; both paths are certified equal by test).
-    """
-    dim = _infer_dim(df, vec_col)
-    if dim is None:
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} long, proj array<double>"
-        )
-    if dim * out_dim >= _JL_ARROW_MIN_TERMS:
-        return project_embeddings_pandas(
-            df, vec_col, id_col, out_dim, seed, decimals
-        )
-    df = df.where(F.col(vec_col).isNotNull())
-    signs = _jl_signs(dim, out_dim, seed)
-    scale = 1.0 / math.sqrt(out_dim)
-    # per coordinate: terms = ±vᵢ via zip_with against the literal sign
-    # row, then a left fold SEEDED WITH THE FIRST TERM — exactly the
-    # left-assoc chain t₀+t₁+…, bit-for-bit (s·x with s=±1.0 is an
-    # exact IEEE sign flip; a 0.0 seed would turn a -0.0 first term
-    # into +0.0). The unrolled add-chain form this replaced generated
-    # one giant expression per coordinate: janino refused it at 64 KB
-    # on EVERY run (dim·out_dim=1024 terms), so it always paid a
-    # failed-compile attempt plus interpreted eval of dim·out_dim
-    # whole-array casts per row — measured ~3x this form on the same
-    # data. The cast+slice is HOISTED into its own projection so the
-    # interpreted HOFs (no codegen subexpression elimination) pay it
-    # once per row, not once per coordinate; slice(…, 1, dim) pins the
-    # read window to the inferred dim (zip_with would otherwise
-    # null-pad AGAINST a longer vector).
-    vd = df.select(
-        F.col(id_col),
-        F.slice(F.col(vec_col).cast("array<double>"), 1, dim).alias("__vd"),
-    )
-    # each coordinate is ONE F.expr parse instead of a py4j-built
-    # Column chain: the literal sign array alone cost ~4 round-trips
-    # per element (dim·out_dim = 1024 lits ≈ 1 s of plan-build time at
-    # the default shape — the r14 simhash packed-reduce finding). The
-    # parsed tree is term-for-term the one the Column form built: same
-    # zip_with, same first-term-seeded left fold, same literal doubles
-    # (repr() round-trips IEEE doubles exactly).
-    outs = []
-    for j in range(out_dim):
-        sgn = "array({})".format(
-            ",".join(f"{float(s)!r}D" for s in signs[j])
-        )
-        terms = f"zip_with({sgn}, __vd, (s, x) -> s * x)"
-        coord = F.expr(
-            f"aggregate(slice({terms}, 2, {max(dim - 1, 0)}), "
-            f"element_at({terms}, 1), (acc, x) -> acc + x)"
-        )
-        outs.append(F.round(coord * F.lit(scale), decimals))
-    return vd.select(F.col(id_col), F.array(*outs).alias("proj"))
-
-
-def project_embeddings_pandas(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    out_dim: int = 16,
-    seed: int = 7,
-    decimals: int = 6,
-) -> DataFrame:
-    """:func:`project_embeddings` with the projection computed as ONE
-    numpy matmul per Arrow batch ((batch × dim) @ (dim × out_dim)
-    sign matrix) instead of 16 codegen'd add chains — the compile-free
-    production path (the expression form pays ~seconds of one-time
-    janino work for 1024-term chains; this form pays Arrow transfer).
-    Same sign matrix and scale; values agree with the expression path
-    to the rounding decimals (numpy's pairwise summation vs the
-    left-assoc chain differ only in the last ulp — pinned by test).
     """
     import numpy as np
     import pandas as pd
@@ -1251,7 +1167,7 @@ def project_embeddings_pandas(
         )
     df = df.where(F.col(vec_col).isNotNull())
     S = np.asarray(_jl_signs(dim, out_dim, seed), dtype=np.float64).T
-    S *= 1.0 / math.sqrt(out_dim)                 # dim × out_dim
+    scale = 1.0 / math.sqrt(out_dim)
     out_schema = T.StructType([
         df.schema[id_col],
         T.StructField("proj", T.ArrayType(T.DoubleType())),
@@ -1262,7 +1178,7 @@ def project_embeddings_pandas(
             m = np.stack(
                 pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64))
             )
-            p = np.round(m @ S, decimals)
+            p = np.round((m @ S) * scale, decimals)
             yield pd.DataFrame({id_col: pdf[id_col], "proj": list(p)})
 
     return df.select(id_col, vec_col).mapInPandas(kernel, out_schema)

@@ -15,8 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["asof_join", "asof_join_cogroup", "range_join_time",
-           "fill_forward"]
+__all__ = ["asof_join", "range_join_time", "fill_forward"]
 
 
 def asof_join(
@@ -139,117 +138,6 @@ def range_join_time(
         <= F.lit(cell_us)
     )
     return joined.where(within).drop("__cell")
-
-
-def asof_join_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    how: str = "left",
-    max_group_rows: int = 5_000_000,
-) -> DataFrame:
-    """``asof_join`` via ``cogroup().applyInPandas`` — the cogrouped-
-    Arrow API surface: both sides shuffle once on ``keys``, then each
-    key's (left, right) pair of pandas frames meets in one Python
-    worker and ``pd.merge_asof`` does the backward-inclusive match.
-
-    Same contract as ``asof_join`` (all left columns + right payload +
-    ``__matched_ts``); identical certified output. Trade-off vs the
-    union+window form: per-key pandas sort/merge beats the JVM window
-    when right payloads are wide (no ``last(ignorenulls)`` carry per
-    column), while the JVM form wins on narrow payloads and giant key
-    groups.
-
-    SKEW GUARD: a cogroup key's BOTH frames must fit one Python
-    worker's memory — on a skewed corpus a hot key silently OOMs the
-    worker mid-shuffle. The kernel therefore fails fast (before pandas
-    allocates merge state) when a group exceeds ``max_group_rows``
-    combined rows, naming the offending key; remediation is the JVM
-    ``asof_join`` (whole-stage window, AQE-splittable) or pre-bucketing
-    the hot key by coarse time range. The guard costs nothing: no extra
-    job, just a length check per group.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    rpayload = [c for c in right.columns if c not in keys and c != right_ts]
-    lfields = list(left.schema.fields)
-    rfields = {f.name: f for f in right.schema.fields}
-    out_schema = T.StructType(
-        lfields
-        + [
-            T.StructField(c, rfields[c].dataType, True)
-            for c in rpayload
-        ]
-        + [T.StructField("__matched_ts", T.TimestampType(), True)]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    # Rename THROUGH ALIASES on both sides before the cogroup: when left
-    # and right derive from the same parent frame, their columns carry
-    # identical attribute ids, and the analyzer's dedup collapses the
-    # right side's duplicates — the Python worker then receives a right
-    # frame MISSING those columns. Fresh aliases mint fresh ids.
-    lren = left.select(
-        *[F.col(c).alias(f"__l_{c}") for c in left.columns]
-    )
-    rren = right.select(
-        *[F.col(c).alias(f"__r_{c}") for c in right.columns]
-    )
-    # Pin the cogroup's parallelism with an EXPLICIT key repartition:
-    # AQE coalesces the exchange by shuffle BYTES, and a few MB of
-    # key-grouped Arrow input coalesces to ~1 partition — serializing a
-    # stage whose cost is Python per GROUP, not bytes (measured 17 s →
-    # 3 s at sf0.1). Explicit repartition is exempt from AQE coalescing.
-    n_parts = int(
-        left.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    lren = lren.repartition(n_parts, *[f"__l_{k}" for k in keys])
-    rren = rren.repartition(n_parts, *[f"__r_{k}" for k in keys])
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(lpdf) + len(rpdf) > max_group_rows:
-            key_desc = (
-                {k: lpdf.iloc[0][f"__l_{k}"] for k in keys}
-                if len(lpdf)
-                else {k: rpdf.iloc[0][f"__r_{k}"] for k in keys}
-            )
-            raise ValueError(
-                f"asof_join_cogroup group {key_desc} has "
-                f"{len(lpdf) + len(rpdf)} rows > max_group_rows="
-                f"{max_group_rows}; a cogroup key must fit one Python "
-                f"worker — use the JVM asof_join for hot keys, or "
-                f"pre-bucket this key by coarse time range"
-            )
-        lpdf = lpdf.rename(
-            columns=lambda c: c[4:] if c.startswith("__l_") else c
-        ).sort_values(left_ts, kind="mergesort")
-        rpdf = rpdf.rename(
-            columns=lambda c: c[4:] if c.startswith("__r_") else c
-        )
-        r = rpdf[[right_ts] + rpayload].rename(
-            columns={right_ts: "__matched_ts"}
-        ).sort_values("__matched_ts", kind="mergesort")
-        merged = pd.merge_asof(
-            lpdf,
-            r,
-            left_on=left_ts,
-            right_on="__matched_ts",
-            direction="backward",
-            allow_exact_matches=True,
-        )
-        return merged[out_cols]
-
-    out = (
-        lren.groupBy(*[f"__l_{k}" for k in keys])
-        .cogroup(rren.groupBy(*[f"__r_{k}" for k in keys]))
-        .applyInPandas(merge, out_schema)
-    )
-    if how == "inner":
-        out = out.where(F.col("__matched_ts").isNotNull())
-    return out
 
 
 def fill_forward(

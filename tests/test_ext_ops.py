@@ -105,7 +105,7 @@ def test_ngram_jaccard(spark, docs):
     assert all(3 not in k for k in got)
 
 
-def test_connected_components_and_survivors(spark):
+def test_connected_components_and_survivors(spark, monkeypatch):
     from databricks_flight_etl_spark.operators import graph
 
     # components: {1,2,3,4} (a chain — needs >1 propagation round),
@@ -118,10 +118,11 @@ def test_connected_components_and_survivors(spark):
     cc = {r["node"]: r["component"]
           for r in graph.connected_components(pairs).collect()}
     assert cc == want  # driver union-find fast path
-    cc_dist = {r["node"]: r["component"]
-               for r in graph.connected_components(
-                   pairs, driver_max_edges=0).collect()}
-    assert cc_dist == want  # distributed min-label loop
+    with monkeypatch.context() as m:
+        m.setattr(graph, "_DRIVER_MAX_EDGES", 0)
+        cc_dist = {r["node"]: r["component"]
+                   for r in graph.connected_components(pairs).collect()}
+    assert cc_dist == want  # distributed star contraction
 
     docs = spark.createDataFrame(
         [(i, f"d{i}") for i in (1, 2, 3, 4, 10, 11, 20, 21, 99)],
@@ -134,14 +135,31 @@ def test_connected_components_and_survivors(spark):
     assert kept == [1, 10, 20, 99]  # one per cluster + the unpaired row
 
 
-def test_connected_components_unconverged_raises(spark):
+def test_connected_components_unconverged_raises(spark, monkeypatch):
     from databricks_flight_etl_spark.operators import graph
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "id_a long, id_b long"
     )
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(graph, "_STAR_MAX_ROUNDS", 2)
     with pytest.raises(RuntimeError, match="converge"):
-        graph.connected_components(chain, max_iter=2, driver_max_edges=0)
+        graph.connected_components(chain)
+
+
+def test_connected_components_deep_chain(spark, monkeypatch):
+    """A 100-edge chain above the driver bound: every node lands in
+    component 0 (an O(diameter)-round label propagation would need
+    ~100 rounds here)."""
+    from databricks_flight_etl_spark.operators import graph
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(100)], "id_a long, id_b long"
+    )
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 0)
+    got = {(r["node"], r["component"])
+           for r in graph.connected_components(chain).collect()}
+    assert got == {(i, 0) for i in range(101)}
 
 
 @pytest.fixture(scope="module")
@@ -805,18 +823,15 @@ def test_pack_by_token_budget(spark):
     assert empty.columns == ["doc_id", "n_tokens", "cum_tokens", "shard"]
 
 
-def test_connected_components_star_matches_minlabel(spark):
-    """Star contraction and min-label must agree on every shape,
-    including the deep chain where min-label needs O(n) rounds."""
+def test_connected_components_star_matches_union_find(spark, monkeypatch):
+    """Star contraction (driver bound patched to 0) and the driver
+    union-find must agree on every shape, including the deep chain."""
     import random
 
-    from databricks_flight_etl_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from databricks_flight_etl_spark.operators import graph
 
     cases = []
-    # long chain 0-1-2-...-30 (worst case for min-label depth)
+    # long chain 0-1-2-...-30 (worst case for label-propagation depth)
     cases.append([(i, i + 1) for i in range(30)])
     # two cliques + an isolate-free random graph, seeded
     rng = random.Random(3)
@@ -827,15 +842,17 @@ def test_connected_components_star_matches_minlabel(spark):
     for edges in cases:
         edges = [(a, b) for a, b in edges if a != b]
         e = spark.createDataFrame(edges, "id_a long, id_b long")
-        ml = {
+        uf = {
             (r["node"], r["component"])
-            for r in connected_components(e).collect()
+            for r in graph.connected_components(e).collect()
         }
-        st = {
-            (r["node"], r["component"])
-            for r in connected_components_star(e).collect()
-        }
-        assert st == ml
+        with monkeypatch.context() as m:
+            m.setattr(graph, "_DRIVER_MAX_EDGES", 0)
+            st = {
+                (r["node"], r["component"])
+                for r in graph.connected_components(e).collect()
+            }
+        assert st == uf
 
 
 def test_corpus_release_composition(spark):
@@ -1013,13 +1030,12 @@ def test_pack_by_token_budget_full_range_ids(spark):
     assert [r["shard"] for r in out] == [0, 0, 1, 1, 2]
 
 
-def test_connected_components_star_ansi_mode(spark):
+def test_connected_components_star_ansi_mode(spark, monkeypatch):
     """The convergence signature must not rely on non-ANSI long
     wraparound (sum(xxhash64) throws ARITHMETIC_OVERFLOW under ANSI)."""
-    from databricks_flight_etl_spark.operators.graph import (
-        connected_components_star,
-    )
+    from databricks_flight_etl_spark.operators import graph
 
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 0)
     old = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try:
@@ -1028,7 +1044,7 @@ def test_connected_components_star_ansi_mode(spark):
         )
         out = {
             (r["node"], r["component"])
-            for r in connected_components_star(e).collect()
+            for r in graph.connected_components(e).collect()
         }
         assert out == {(i, 0) for i in range(21)}
     finally:
@@ -1621,27 +1637,6 @@ def test_cms_join_size_bounds(spark):
     assert est_small >= 14
 
 
-def test_decode_features_arrow_equals_pandas(spark):
-    """The mapInArrow twin yields exactly the mapInPandas/bytes
-    kernel's features."""
-    from databricks_flight_etl_spark.operators.multimodal import (
-        decode_features,
-        decode_features_arrow,
-    )
-
-    df = spark.createDataFrame(
-        [(0, bytearray(b"\x89PNG\r\n\x1a\n" + b"px" * 100)),
-         (1, bytearray(b"\xff\xd8\xff\xe0" + b"jj" * 77))],
-        "id long, payload binary",
-    )
-    pd_out = {r["id"]: r["features"] for r in
-              decode_features(df, "payload", "id", kernel="bytes")
-              .collect()}
-    ar_out = {r["id"]: r["features"] for r in
-              decode_features_arrow(df, "payload", "id").collect()}
-    assert pd_out == ar_out
-
-
 def test_ngram_lm_score_ranks_fluent_above_gibberish(spark):
     """Docs made of corpus-frequent bigrams score higher than a doc of
     unique never-repeated bigrams; short docs (<2 tokens) drop."""
@@ -2077,14 +2072,15 @@ def test_project_embeddings_preserves_distance(spark):
     assert project_embeddings(df.limit(0)).count() == 0
 
 
-def test_project_embeddings_pandas_matches_expression(spark):
-    """The matmul JL twin agrees with the certified expression path to
-    the rounding decimals."""
+def test_project_embeddings_matches_python_sum(spark):
+    """The matmul JL projection agrees with a plain-Python left-assoc
+    sum over the same sign matrix to the rounding decimals."""
+    import math
     import random
 
     from databricks_flight_etl_spark.operators.similarity import (
+        _jl_signs,
         project_embeddings,
-        project_embeddings_pandas,
     )
 
     random.seed(11)
@@ -2093,62 +2089,31 @@ def test_project_embeddings_pandas_matches_expression(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     a = {r["vec_id"]: r["proj"]
          for r in project_embeddings(df, out_dim=16, decimals=5).collect()}
-    b = {r["vec_id"]: r["proj"]
-         for r in project_embeddings_pandas(
-             df, out_dim=16, decimals=5).collect()}
+    signs = _jl_signs(64, 16)
+    b = {}
+    for i, v in rows:
+        out = []
+        for row in signs:
+            acc = row[0] * v[0]
+            for s, x in zip(row[1:], v[1:]):
+                acc = acc + s * x
+            out.append(round(acc / math.sqrt(16), 5))
+        b[i] = out
     assert set(a) == set(b)
     for k in a:
+        assert len(a[k]) == 16
         assert all(abs(x - y) < 2e-5 for x, y in zip(a[k], b[k]))
-    assert project_embeddings_pandas(df.limit(0)).count() == 0
-
-
-def test_project_embeddings_autoswitch_to_arrow(spark):
-    """r4 verdict task #6: above _JL_ARROW_MIN_TERMS (dim × out_dim)
-    the public project_embeddings must dispatch to the Arrow matmul —
-    the expression form's per-row HOF fold is linear in the term
-    count, while the matmul hands each batch to one numpy GEMM.
-    Pinned by plan shape: big config shows a Python map stage
-    (Arrow), the certified small config stays a pure JVM-side
-    expression (no Python in plan)."""
-    import random
-
-    from databricks_flight_etl_spark.operators.similarity import (
-        _JL_ARROW_MIN_TERMS,
-        project_embeddings,
-    )
-
-    random.seed(12)
-    big_dim = 512
-    rows = [(i, [random.gauss(0, 1) for _ in range(big_dim)])
-            for i in range(10)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    assert big_dim * 128 >= _JL_ARROW_MIN_TERMS
-    wide = project_embeddings(df, out_dim=128)
-    plan = wide._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan  # dispatched to the Arrow matmul
-    got = wide.collect()
-    assert len(got) == 10 and all(len(r["proj"]) == 128 for r in got)
-
-    small = project_embeddings(
-        spark.createDataFrame(
-            [(0, [1.0] * 8)], "vec_id long, embedding array<double>"),
-        out_dim=4)
-    assert "MapInPandas" not in \
-        small._jdf.queryExecution().executedPlan().toString()
+    assert project_embeddings(df.limit(0)).count() == 0
 
 
 def test_vector_ops_null_dim_inference(spark):
     """ADVICE r3: dim inference must use the first NON-NULL vector — a
     null embedding landing first in partition order silently emptied
-    centroid_outlier_scores / project_embeddings / the pandas twin.
-    (r5 verdict task #6: previously merged into the JL auto-switch
-    test above — a failure would have misattributed, and skipping one
-    silently disabled the other.)"""
+    centroid_outlier_scores / project_embeddings."""
     from databricks_flight_etl_spark.operators.similarity import (
         centroid_outlier_scores,
         group_vector_mean,
         project_embeddings,
-        project_embeddings_pandas,
     )
 
     rows = [(0, None, "a"), (1, [1.0, 0.0], "a"), (2, [0.0, 1.0], "b"),
@@ -2157,7 +2122,6 @@ def test_vector_ops_null_dim_inference(spark):
         rows, "vec_id long, embedding array<double>, label string"
     ).coalesce(1)  # pin partition order: the NULL row is row 0
     assert project_embeddings(df, out_dim=4).count() == 3
-    assert project_embeddings_pandas(df, out_dim=4).count() == 3
     assert centroid_outlier_scores(df, "label").count() == 3
     # group mean skips the NULL row rather than nulling the group
     gm = {(r["label"], r["idx"]): r["mean"]

@@ -63,7 +63,7 @@ def test_union_find_stashes_exact_drop_count(spark):
     assert n_drop == cc.where(F.col("node") != F.col("component")).count()
 
 
-def test_dedup_survivors_unchanged_by_gate_elision(spark):
+def test_dedup_survivors_unchanged_by_gate_elision(spark, monkeypatch):
     """Survivor selection end-to-end: same rows whether the gate count
     comes from the stashed driver value (fast path) or a count() over a
     frame that lost the attribute (forced distributed loop)."""
@@ -74,9 +74,10 @@ def test_dedup_survivors_unchanged_by_gate_elision(spark):
         [(1, 2), (2, 5), (7, 9)], "id_a long, id_b long"
     )
     fast = graph.dedup_survivors(df, pairs, "id")
-    # driver_max_edges=0 forces the distributed loop, whose labels
+    # a 0 driver bound forces the distributed contraction, whose labels
     # carry no stashed count — exercising the count() fallback
-    cc = graph.connected_components(pairs, driver_max_edges=0)
+    monkeypatch.setattr(graph, "_DRIVER_MAX_EDGES", 0)
+    cc = graph.connected_components(pairs)
     assert getattr(cc, "_cc_n_drop", None) is None
     slow = graph.dedup_survivors(
         df, pairs, "id", broadcast_max_rows=8_000_000

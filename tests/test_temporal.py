@@ -118,30 +118,26 @@ def test_asof_matches_python_reference(spark):
     assert got == expect
 
 
-def test_asof_join_cogroup_matches_window_form(spark):
-    """Cogrouped-pandas as-of equals the union+window form, including
-    the bug-trigger shape where BOTH sides derive from one parent frame
-    (shared attribute ids used to collapse the right frame's columns
-    inside the cogroup worker)."""
+def test_asof_join_matches_python_scan(spark):
+    """The union+window as-of equals a plain-Python backward-inclusive
+    scan on the shape where BOTH sides derive from one parent frame
+    (shared attribute ids — the shape that once collapsed the right
+    side's columns in a cogrouped form)."""
     import datetime as dt
 
-    from databricks_flight_etl_spark.operators.temporal import (
-        asof_join,
-        asof_join_cogroup,
-    )
-
-    t = dt.datetime
-    parent = spark.createDataFrame(
-        [
-            (1, t(2024, 1, 1, 9), "p", 7, 5.0),
-            (1, t(2024, 1, 1, 10), "c", 100, 1.0),
-            (1, t(2024, 1, 1, 12), "c", 101, 2.0),
-            (2, t(2024, 1, 1, 11), "c", 102, 3.0),
-        ],
-        "user_id long, ts timestamp, kind string, event_id long, value double",
-    )
     from pyspark.sql import functions as F
 
+    t = dt.datetime
+    rows = [
+        (1, t(2024, 1, 1, 9), "p", 7, 5.0),
+        (1, t(2024, 1, 1, 10), "c", 100, 1.0),
+        (1, t(2024, 1, 1, 12), "c", 101, 2.0),
+        (2, t(2024, 1, 1, 11), "c", 102, 3.0),
+    ]
+    parent = spark.createDataFrame(
+        rows,
+        "user_id long, ts timestamp, kind string, event_id long, value double",
+    )
     left = parent.where("kind = 'c'").select("user_id", "ts", "event_id")
     right = parent.where("kind = 'p'").select(
         "user_id", "ts",
@@ -151,40 +147,21 @@ def test_asof_join_cogroup_matches_window_form(spark):
         (r["event_id"]): (r["p_id"], r["p_val"], r["__matched_ts"])
         for r in asof_join(left, right, ["user_id"]).collect()
     }
-    b = {
-        (r["event_id"]): (r["p_id"], r["p_val"], r["__matched_ts"])
-        for r in asof_join_cogroup(left, right, ["user_id"]).collect()
-    }
-    assert a == b
+    expect = {}
+    for u, ts, kind, eid, _ in rows:
+        if kind != "c":
+            continue
+        cands = sorted(
+            (rts, pid, pval) for ru, rts, rk, pid, pval in rows
+            if rk == "p" and ru == u and rts <= ts
+        )
+        expect[eid] = (
+            (cands[-1][1], cands[-1][2], cands[-1][0]) if cands
+            else (None, None, None)
+        )
+    assert a == expect
     assert a[100] == (7, 5.0, t(2024, 1, 1, 9))
     assert a[102] == (None, None, None)
-
-
-def test_asof_join_cogroup_skew_guard(spark):
-    """A hot key exceeding max_group_rows must fail fast with a clear
-    message naming the key — not OOM a Python worker mid-merge."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from databricks_flight_etl_spark.operators.temporal import (
-        asof_join_cogroup,
-    )
-
-    left = spark.createDataFrame(
-        [("hot", i) for i in range(50)], "k string, ts long"
-    ).withColumn("ts", F.timestamp_micros(F.col("ts") * 1_000_000))
-    right = spark.createDataFrame(
-        [("hot", i, i * 10) for i in range(50)], "k string, ts long, v long"
-    ).withColumn("ts", F.timestamp_micros(F.col("ts") * 1_000_000))
-
-    with pytest.raises(Exception, match="max_group_rows"):
-        asof_join_cogroup(
-            left, right, ["k"], max_group_rows=10
-        ).collect()
-
-    # generous guard: identical result to the JVM form
-    ok = asof_join_cogroup(left, right, ["k"], max_group_rows=1000)
-    assert ok.count() == 50
 
 
 def test_fill_forward(spark):

@@ -5,7 +5,8 @@ same statusTracker mechanism ad hoc; this pins it as a tool).
 Usage: python tools/count_jobs.py [--sf DIR] [--reps N] q_name [...]
 
 Prints per query: jobs for the FULL run (build + count action),
-plus the median wall of the reps. Job ids are counted via a fresh
+plus the median, min and max wall of the reps — single runs cannot
+adjudicate a regression (host noise), so compare medians. Job ids are counted via a fresh
 job group per rep, so concurrent sessions don't pollute the count.
 """
 
@@ -54,7 +55,8 @@ def main() -> None:
             spark.catalog.clearCache()
         print(
             f"{name}: jobs={n_jobs} wall_median="
-            f"{statistics.median(walls):.2f}s reps={args.reps}"
+            f"{statistics.median(walls):.2f}s min={min(walls):.2f} "
+            f"max={max(walls):.2f} reps={args.reps}"
         )
 
 

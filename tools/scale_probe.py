@@ -100,14 +100,18 @@ def _cc_star(docs):
     from pyspark.sql import functions as F
 
     from databricks_flight_etl_spark.operators.graph import (
-        connected_components_star,
+        _edge_list,
+        _star_contraction,
     )
 
-    # synthetic pair list ~5% of docs, chained in small runs
+    # synthetic pair list ~5% of docs, chained in small runs. Called
+    # below connected_components: this list is under its driver bound,
+    # where the public function would measure the union-find instead
+    # of the distributed contraction
     pairs = docs.select(F.col("doc_id").alias("id_a")).where(
         F.col("id_a") % 20 == 0
     ).select("id_a", (F.col("id_a") + 20).alias("id_b"))
-    return connected_components_star(pairs)
+    return _star_contraction(_edge_list(pairs, "id_a", "id_b"))
 
 
 def _sk():
