@@ -1904,7 +1904,7 @@ def q_winsorized_mean(spark, sf_dir):
 def q_concentration(spark, sf_dir):
     """Distribution-concentration screen over the string columns of
     events ∪ documents columns of interest: entropy / Gini / top-value
-    share per column from one unioned frequency plan. Oracle replays
+    share per column from one melted frequency plan. Oracle replays
     the same frequencies and p·ln p arithmetic (rounded 6 dp)."""
     from databricks_flight_etl_spark.operators.consistency import (
         concentration_profile,

@@ -12,20 +12,41 @@ of row count).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["nonnull_counts", "drop_allnull_columns", "null_profile",
            "dataset_card", "null_drift"]
 
 
+def _count_aggs(cols: list[str]) -> list[Column]:
+    """The one aggregate behind every completeness count: the row total
+    (``__total``), then the non-null count of each of ``cols``
+    (``__nn0``, ``__nn1``, … — positional, so no column name can clash
+    with another output). ``count`` never yields NULL, so over zero
+    rows every count reads 0. ``pipeline.run_flight_pipeline`` runs
+    these in its fused profile pass."""
+    return [F.count(F.lit(1)).alias("__total")] + [
+        F.count(F.col(c)).alias(f"__nn{i}") for i, c in enumerate(cols)
+    ]
+
+
+def _ratio_frame(long: DataFrame, ratio_decimals: int) -> DataFrame:
+    """(column, n_null, total) rows → the null-profile schema
+    (column, n_null, null_ratio). A zero total gives a NULL ratio."""
+    return long.select(
+        F.col("column"),
+        F.col("n_null"),
+        F.round(F.try_divide(F.col("n_null"), F.col("total")),
+                ratio_decimals).alias("null_ratio"),
+    )
+
+
 def nonnull_counts(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """One-row DataFrame: per-column non-null count (reference NB:167–169,
-    ``sum(isNotNull.cast(int))`` per column in a single agg)."""
+    one count per column in a single agg)."""
     cols = cols or df.columns
-    return df.agg(
-        *[F.sum(F.col(c).isNotNull().cast("int")).alias(c) for c in cols]
-    )
+    return df.agg(*_count_aggs(cols)[1:]).toDF(*cols)
 
 
 def drop_allnull_columns(df: DataFrame) -> tuple[DataFrame, list[str]]:
@@ -37,8 +58,8 @@ def drop_allnull_columns(df: DataFrame) -> tuple[DataFrame, list[str]]:
     Returns (narrowed_df, dropped_column_names). One aggregate job; the
     collected row is a single row of counts (driver-safe).
     """
-    counts = nonnull_counts(df).first().asDict()
-    dropped = [c for c, n in counts.items() if (n or 0) == 0]
+    counts = nonnull_counts(df).first()
+    dropped = [c for c, n in zip(df.columns, counts) if n == 0]
     return (df.drop(*dropped) if dropped else df), dropped
 
 
@@ -48,21 +69,23 @@ def null_profile(df: DataFrame, cols: list[str] | None = None,
 
     Reference NB:184–194 computes null counts via agg then derives
     ratios driver-side in Python; here the ratio stays in-plan (one
-    aggregate computing all null counts + the total, then an unpivot).
-    Ratio rounded for float-stable comparison (SURVEY §7.4).
+    aggregate computing all non-null counts + the total, then an
+    unpivot). Ratio rounded for float-stable comparison (SURVEY §7.4).
     """
     cols = cols or df.columns
-    aggs = [F.sum(F.col(c).isNull().cast("int")).alias(c) for c in cols]
-    wide = df.agg(F.count(F.lit(1)).alias("__total"), *aggs)
-    stack_expr = "stack({n}, {args}) as (column, n_null)".format(
-        n=len(cols),
-        args=", ".join(f"'{c}', `{c}`" for c in cols),
-    )
-    return wide.select(F.expr(stack_expr), F.col("__total")).select(
-        F.col("column"),
-        F.col("n_null").cast("bigint").alias("n_null"),
-        F.round(F.col("n_null") / F.col("__total"), ratio_decimals).alias("null_ratio"),
-    )
+    wide = df.agg(*_count_aggs(cols))
+    total = F.col("__total")
+    long = wide.select(
+        total,
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(c).alias("column"),
+                (total - F.col(f"__nn{i}")).alias("n_null"),
+            )
+            for i, c in enumerate(cols)
+        ])).alias("p"),
+    ).select("p.column", "p.n_null", total.alias("total"))
+    return _ratio_frame(long, ratio_decimals)
 
 
 def dataset_card(df: DataFrame, cols: list[str] | None = None) -> DataFrame:

@@ -2,7 +2,8 @@
 
 Reference site: NB:227–231 — for every string column,
 ``groupBy(col).count().orderBy(col)`` (4 shuffles on the flight data,
-7.6 s, DBC[15]).
+7.6 s, DBC[15]). Here every column melts into one groupBy: one scan and
+one shuffle however many columns are profiled.
 
 At 100 TB an unbounded groupBy on a high-cardinality column is a
 pathological shuffle; ``value_frequencies_capped`` bounds the output to
@@ -28,20 +29,27 @@ def string_columns(df: DataFrame) -> list[str]:
 
 def value_frequencies(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Long-form frequency table (column, value, n) for the given (default:
-    all string) columns, one groupBy per column unioned into one plan —
-    sorted presentation is the caller's concern (hash-compared unordered).
+    all string) columns. Every column melts into (column, value) rows —
+    ``explode(array(struct(lit(c), col(c))))``, values coerced to their
+    common type — and ONE groupBy counts them: a single scan and a single
+    shuffle for any number of columns. NULL values form a group of their
+    own. Sorted presentation is the caller's concern (hash-compared
+    unordered); no columns gives an empty table.
     """
     cols = cols if cols is not None else string_columns(df)
-    parts = [
-        df.groupBy(F.col(c).alias("value"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.lit(c).alias("column"), "value", "n")
-        for c in cols
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    if not cols:
+        return df.sparkSession.createDataFrame(
+            [], "column string, value string, n bigint"
+        )
+    melted = df.select(
+        F.explode(F.array(*[
+            F.struct(F.lit(c).alias("column"), F.col(c).alias("value"))
+            for c in cols
+        ])).alias("m")
+    ).select("m.column", "m.value")
+    return melted.groupBy("column", "value").agg(
+        F.count(F.lit(1)).alias("n")
+    )
 
 
 def value_frequencies_capped(
@@ -118,10 +126,10 @@ def concentration_profile(
     counted as a value of its own (a 99%-null column should read as
     concentrated, not be silently ignored).
 
-    Plan: one groupBy per column on (column, value) — unioned into a
-    single plan like value_frequencies — then a per-column aggregate
-    over the |distinct| frequency rows; p ln p / p² arithmetic runs on
-    the tiny aggregated table, never the raw data.
+    Plan: value_frequencies' one melted groupBy on (column, value),
+    then a per-column aggregate over the |distinct| frequency rows;
+    p ln p / p² arithmetic runs on the tiny aggregated table, never the
+    raw data.
     """
     cols = cols if cols is not None else string_columns(df)
     total = df.count()

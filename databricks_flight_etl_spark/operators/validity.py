@@ -47,17 +47,32 @@ def failures(df: DataFrame, rule: Rule) -> DataFrame:
     return df.filter(~rule.condition)
 
 
+def _fail_aggs(rules: list[Rule]) -> list[Column]:
+    """The one aggregate behind every failure count: per rule (aliased
+    ``__fail0``, ``__fail1``, … by position), the number of rows whose
+    condition is FALSE. ``when(~cond, 1)`` is NULL both for passing rows
+    and for rows where the condition is NULL, and ``count`` skips NULLs,
+    so a NULL evaluation passes (reference P4) and a rule that never
+    fails — or an empty input — reads 0, never NULL.
+    ``pipeline.run_flight_pipeline`` runs these in its fused profile
+    pass."""
+    return [
+        F.count(F.when(~r.condition, F.lit(1))).alias(f"__fail{i}")
+        for i, r in enumerate(rules)
+    ]
+
+
 def check_rules(df: DataFrame, rules: list[Rule]) -> DataFrame:
     """Report DataFrame (rule, n_fail): failure count per rule, computed
-    in ONE scan. ``when(~cond, 1).otherwise(0)`` maps NULL→0 exactly like
-    the filter-based per-rule path (NULL never fails)."""
-    aggs = [
-        F.sum(F.when(~r.condition, 1).otherwise(0)).alias(r.name) for r in rules
-    ]
-    wide = df.agg(*aggs)
-    stack = "stack({n}, {args}) as (rule, n_fail)".format(
-        n=len(rules), args=", ".join(f"'{r.name}', `{r.name}`" for r in rules)
-    )
-    return wide.select(F.expr(stack)).select(
-        "rule", F.coalesce(F.col("n_fail"), F.lit(0)).cast("bigint").alias("n_fail")
-    )
+    in ONE scan with the same NULL semantics as :func:`failures` (NULL
+    never fails)."""
+    wide = df.agg(*_fail_aggs(rules))
+    return wide.select(
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(r.name).alias("rule"),
+                F.col(f"__fail{i}").alias("n_fail"),
+            )
+            for i, r in enumerate(rules)
+        ])).alias("f")
+    ).select("f.rule", "f.n_fail")

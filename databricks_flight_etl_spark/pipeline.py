@@ -4,16 +4,20 @@ composable, cached, single-pass-per-stage flow.
 The reference (NB:1–445) runs ingest → completeness → accuracy →
 consistency → uniqueness → derive-timestamp → validity → timeliness →
 write, re-scanning the source CSV for every action (~10+ full scans —
-its dominant cost, SURVEY §3). Here the cleaned DataFrame is persisted
-once and every profile fans out from it (SURVEY §4.3 "cache once, fan
-out"); at 100 TB substitute a parquet/Delta checkpoint for the persist.
+its dominant cost, SURVEY §3). Here the source is parsed once: the
+derived frame is persisted, and ONE global aggregate both fills that
+pin and yields every count the completeness and validity reports need
+(SURVEY §4.3 "cache once, fan out"). The remaining profiles fan out
+from the pin. At 100 TB substitute a parquet/Delta checkpoint for the
+persist.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from .functions import derive_departure_timestamp
@@ -33,7 +37,10 @@ __all__ = ["QualityReport", "run_flight_pipeline",
 
 @dataclass
 class QualityReport:
-    """All quality-check outputs as DataFrames (lazy until collected)."""
+    """All quality-check outputs as DataFrames. ``null_profile`` and
+    ``validity`` are local relations holding counts the pipeline already
+    computed (collecting them runs no job); the other reports are lazy
+    until collected."""
 
     cleaned: DataFrame
     dropped_columns: list[str]
@@ -47,6 +54,12 @@ class QualityReport:
     extras: dict = field(default_factory=dict)
 
 
+def _local(spark: SparkSession, schema: str, **columns: list) -> DataFrame:
+    """A local relation from Python column lists: collecting it, or a
+    projection of it, runs no job."""
+    return spark.createDataFrame(pa.table(columns), schema)
+
+
 def run_flight_pipeline(
     df: DataFrame,
     dedup_keys: list[str] | None = None,
@@ -54,27 +67,65 @@ def run_flight_pipeline(
     derive_ts: bool = True,
     ts_col: str = "DepTime_Timestamp",
     output_path: str | None = None,
-    persist: bool = True,
 ) -> QualityReport:
     """Run the full reference pipeline shape over a flight-schema (or
     compatible) DataFrame. Every report is a DataFrame; nothing prints.
 
-    Stages (reference cell order, SURVEY §2.10):
-      Q1 drop all-null columns + null profile → Q3 value frequencies →
-      Q7 timestamp derive → Q4 exact + compound-key duplicate groups →
-      Q5 validity report (report-only; rows never dropped) →
-      Q6 day coverage on the derived timestamp → optional sized write.
+    Stages (reference cell order, SURVEY §2.10, fused where one pass
+    serves several):
+      Q7 timestamp derive → pin → one fused profile pass giving Q1 (drop
+      all-null columns + null profile) and Q5 (validity report,
+      report-only: rows never dropped) → Q3 value frequencies → Q4 exact
+      + compound-key duplicate groups → Q6 day coverage on the derived
+      timestamp → optional sized write.
+
+    The fused pass is one global aggregate over the pinned frame. It
+    fills the cache and returns the row total, every column's non-null
+    count and every rule's failure count; ``null_profile`` and
+    ``validity`` are built from that row. Because the timestamp is
+    derived before the drop, an all-null ``Year``, ``Month`` or
+    ``DayofMonth`` is dropped and leaves a NULL timestamp; an all-null
+    ``DepTime`` takes its derived ``DepTime_*`` columns with it. Rules
+    see the pinned frame, so a rule on a dropped column fails nowhere.
+    ``dropped_columns`` names input columns only.
     """
-    cleaned, dropped = completeness.drop_allnull_columns(df)
-    if derive_ts and "DepTime" in cleaned.columns:
-        cleaned = derive_departure_timestamp(cleaned)
-    if persist:
-        cleaned = cleaned.persist(StorageLevel.MEMORY_AND_DISK)
+    spark = df.sparkSession
+    rules = rules or []
+    derived = (
+        derive_departure_timestamp(df)
+        if derive_ts and "DepTime" in df.columns
+        else df
+    )
+    pinned = derived.persist(StorageLevel.MEMORY_AND_DISK)
+    cols = pinned.columns
+    row = pinned.agg(
+        *completeness._count_aggs(cols), *validity._fail_aggs(rules)
+    ).first()
+    total = row[0]
+    nonnull = dict(zip(cols, row[1:1 + len(cols)]))
+    n_fail = list(row[1 + len(cols):])
+
+    dropped = [c for c in df.columns if nonnull[c] == 0]
+    gone = dropped + (
+        [c for c in cols if c not in df.columns]
+        if "DepTime" in dropped else []
+    )
+    cleaned = pinned.drop(*gone) if gone else pinned
+    kept = cleaned.columns
+    null_profile = completeness._ratio_frame(
+        _local(
+            spark, "column string, n_null bigint, total bigint",
+            column=kept,
+            n_null=[total - nonnull[c] for c in kept],
+            total=[total] * len(kept),
+        ),
+        ratio_decimals=6,
+    )
 
     report = QualityReport(
         cleaned=cleaned,
         dropped_columns=dropped,
-        null_profile=completeness.null_profile(cleaned),
+        null_profile=null_profile,
         value_frequencies=consistency.value_frequencies(cleaned),
         exact_dup_groups=uniqueness.duplicate_groups(cleaned),
         key_dup_groups=(
@@ -82,10 +133,16 @@ def run_flight_pipeline(
             if dedup_keys
             else None
         ),
-        validity=validity.check_rules(cleaned, rules) if rules else None,
+        validity=(
+            _local(
+                spark, "rule string, n_fail bigint",
+                rule=[r.name for r in rules], n_fail=n_fail,
+            )
+            if rules else None
+        ),
         day_coverage=(
             timeliness.day_coverage(cleaned, ts_col)
-            if ts_col in cleaned.columns
+            if ts_col in kept
             else None
         ),
     )

@@ -33,8 +33,11 @@ def estimate_bytes(df: DataFrame, sample_rows: int = 10_000) -> int:
     Supported-API replacement for the reference's SizeEstimator probe
     (NB:416–427): sample up to ``sample_rows`` rows through Arrow, take
     deep pandas memory usage as avg row size, multiply by count().
-    Two jobs, both cheap (the sample short-circuits the scan; the count
-    is metadata-only for parquet sources under Catalyst stats).
+    Two actions, both over ``df``'s full lineage (pin it first when that
+    is costly): the count reads every row and runs two jobs under AQE
+    (a map stage, then the result); the sample stops once it has ``k``
+    rows and runs one or two. A Catalyst-stats estimate would run none,
+    but Catalyst reports ``Long.MaxValue`` for RDD-backed frames.
     """
     n = df.count()
     if n == 0:
