@@ -59,6 +59,7 @@ def derive_departure_timestamp(
     """Add ``{prefix}_Hour``, ``{prefix}_Min`` (strings) and
     ``{prefix}_Timestamp`` (minute-precision timestamp) — reference
     NB:261–291 as a reusable transform instead of an inline SQL string.
+    One ``withColumns`` projection, so the plan is analyzed once.
     """
     prefix = prefix or dep_col
     hour, minute = decode_hhmm_parts(F.col(dep_col))
@@ -73,11 +74,11 @@ def derive_departure_timestamp(
         F.lit(":"),
         F.lpad(minute, 2, "0"),
     )
-    return (
-        df.withColumn(f"{prefix}_Hour", hour)
-        .withColumn(f"{prefix}_Min", minute)
-        .withColumn(f"{prefix}_Timestamp", F.to_timestamp(ts_str, "yyyy-MM-dd HH:mm"))
-    )
+    return df.withColumns({
+        f"{prefix}_Hour": hour,
+        f"{prefix}_Min": minute,
+        f"{prefix}_Timestamp": F.to_timestamp(ts_str, "yyyy-MM-dd HH:mm"),
+    })
 
 
 def derive_date(df: DataFrame, out_col: str = "DepTime_Date",

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans import _quote
+
 __all__ = ["nonnull_counts", "drop_allnull_columns", "null_profile",
            "dataset_card", "null_drift"]
 
@@ -25,9 +27,12 @@ def _count_aggs(cols: list[str]) -> list[Column]:
     (``__nn0``, ``__nn1``, … — positional, so no column name can clash
     with another output). ``count`` never yields NULL, so over zero
     rows every count reads 0. ``pipeline.run_flight_pipeline`` runs
-    these in its fused profile pass."""
-    return [F.count(F.lit(1)).alias("__total")] + [
-        F.count(F.col(c)).alias(f"__nn{i}") for i, c in enumerate(cols)
+    these in its fused profile pass. Built as SQL text over quoted
+    names, like ``plans._size_aggs`` and for the same reason: any name
+    works, and no per-column ``F.col`` call-site capture runs."""
+    return [F.expr("count(1) AS __total")] + [
+        F.expr(f"count({_quote(c)}) AS __nn{i}")
+        for i, c in enumerate(cols)
     ]
 
 

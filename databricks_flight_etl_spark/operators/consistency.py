@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans import _col
+
 __all__ = ["string_columns", "value_frequencies",
            "value_frequencies_capped", "fd_violations",
            "concentration_profile", "association_pairs"]
@@ -43,7 +45,7 @@ def value_frequencies(df: DataFrame, cols: list[str] | None = None) -> DataFrame
         )
     melted = df.select(
         F.explode(F.array(*[
-            F.struct(F.lit(c).alias("column"), F.col(c).alias("value"))
+            F.struct(F.lit(c).alias("column"), _col(c).alias("value"))
             for c in cols
         ])).alias("m")
     ).select("m.column", "m.value")
@@ -66,21 +68,34 @@ def value_frequencies_capped(
     ``exact_distinct=True`` swaps the HLL sketch for an exact
     count(DISTINCT) — deterministic/oracle-comparable, but a second
     shuffle per column at scale; the sketch is the 100 TB default.
+    Both melt into (column, approx_n_distinct) rows the way
+    ``value_frequencies`` melts values, so any column name works; no
+    columns gives an empty table.
     """
+    cols = cols if cols is not None else string_columns(df)
+    if not cols:
+        return df.sparkSession.createDataFrame(
+            [], "column string, value string, n bigint, rank int, "
+                "approx_n_distinct bigint"
+        )
     freqs = value_frequencies(df, cols)
     w = Window.partitionBy("column").orderBy(F.desc("n"), F.asc("value"))
     capped = (
         freqs.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= top_k)
     )
-    cols = cols if cols is not None else string_columns(df)
     counter = F.countDistinct if exact_distinct else F.approx_count_distinct
-    approx = df.agg(*[counter(c).alias(c) for c in cols])
-    stack = "stack({n}, {args}) as (column, approx_n_distinct)".format(
-        n=len(cols), args=", ".join(f"'{c}', `{c}`" for c in cols)
-    )
-    approx_long = approx.select(F.expr(stack))
-    return capped.join(F.broadcast(approx_long), "column", "left")
+    distinct = df.agg(*[
+        counter(_col(c)).alias(f"__d{i}") for i, c in enumerate(cols)
+    ])
+    distinct_long = distinct.select(
+        F.explode(F.array(*[
+            F.struct(F.lit(c).alias("column"),
+                     F.col(f"__d{i}").alias("approx_n_distinct"))
+            for i, c in enumerate(cols)
+        ])).alias("d")
+    ).select("d.column", "d.approx_n_distinct")
+    return capped.join(F.broadcast(distinct_long), "column", "left")
 
 
 def fd_violations(

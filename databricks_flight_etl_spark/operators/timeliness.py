@@ -8,14 +8,20 @@ Re-engineered fully in-plan: the spine is ``sequence(min_d, max_d)`` +
 ``explode`` over the one-row min/max aggregate — no collect, no SQL
 string interpolation (SURVEY §2.8 G5 calls that out as an anti-pattern).
 The spine side is tiny (one row per day) so Catalyst broadcasts it.
+A pass that has grouped by day anyway hands its per-day counts to
+``day_coverage_of_counts``, which lays the same spine out locally.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from datetime import date, timedelta
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["per_period_counts", "date_spine", "day_coverage", "missing_periods", "sequence_gaps", "ohlc_bars"]
+__all__ = ["per_period_counts", "date_spine", "day_coverage", "day_coverage_of_counts",
+           "missing_periods", "sequence_gaps", "ohlc_bars"]
 
 
 def per_period_counts(df: DataFrame, ts_col: str, period: str = "day") -> DataFrame:
@@ -59,6 +65,28 @@ def day_coverage(df: DataFrame, ts_col: str) -> DataFrame:
             F.col("day"),
             F.coalesce(F.col("range_count"), F.lit(0)).cast("bigint").alias("n_events"),
         )
+    )
+
+
+def day_coverage_of_counts(spark: SparkSession, counts: dict[date, int]) -> DataFrame:
+    """:func:`day_coverage` over per-day row counts the caller already
+    holds (``{day: n}``; rows with a NULL day left out): the same
+    zero-filled min-to-max spine and the same schema, as a local
+    relation, so collecting it runs no job. No counts give an empty
+    table. For a pass that has grouped by day anyway
+    (``pipeline.run_flight_pipeline``); :func:`day_coverage` stays the
+    lazy form and the reference this one is tested against."""
+    days = []
+    if counts:
+        first = min(counts)
+        days = [first + timedelta(days=i)
+                for i in range((max(counts) - first).days + 1)]
+    return spark.createDataFrame(
+        pa.table({
+            "day": pa.array(days, pa.date32()),
+            "n_events": pa.array([counts.get(d, 0) for d in days], pa.int64()),
+        }),
+        "day date, n_events bigint",
     )
 
 

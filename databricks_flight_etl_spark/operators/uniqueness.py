@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans import _quote
+
 __all__ = [
     "duplicate_groups",
     "exact_duplicate_count",
@@ -36,10 +38,11 @@ _NULL = "\x00N"
 
 def duplicate_groups(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
     """Rows (key columns + n) for groups occurring more than once —
-    reference NB:249 ``groupBy(df.columns).count().where(count>1)``."""
+    reference NB:249 ``groupBy(df.columns).count().where(count>1)``.
+    Key names are taken verbatim (dots and backticks included)."""
     keys = subset or df.columns
     return (
-        df.groupBy(*keys)
+        df.groupBy(*[_quote(k) for k in keys])
         .agg(F.count(F.lit(1)).alias("n"))
         .where(F.col("n") > 1)
     )

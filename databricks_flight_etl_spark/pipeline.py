@@ -5,11 +5,12 @@ The reference (NB:1–445) runs ingest → completeness → accuracy →
 consistency → uniqueness → derive-timestamp → validity → timeliness →
 write, re-scanning the source CSV for every action (~10+ full scans —
 its dominant cost, SURVEY §3). Here the source is parsed once: the
-derived frame is persisted, and ONE global aggregate both fills that
-pin and yields every count the completeness and validity reports need
+derived frame is persisted, and ONE aggregate grouped by day both
+fills that pin and yields every count the completeness, validity and
+timeliness reports need, plus the value bytes that size the sink
 (SURVEY §4.3 "cache once, fan out"). The remaining profiles fan out
-from the pin. At 100 TB substitute a parquet/Delta checkpoint for the
-persist.
+from the pin, which the report owns (``QualityReport.unpersist``). At
+100 TB substitute a parquet/Delta checkpoint for the persist.
 """
 
 from __future__ import annotations
@@ -18,8 +19,10 @@ from dataclasses import dataclass, field
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from . import plans
 from .functions import derive_departure_timestamp
 from .operators import (
     completeness,
@@ -37,10 +40,16 @@ __all__ = ["QualityReport", "run_flight_pipeline",
 
 @dataclass
 class QualityReport:
-    """All quality-check outputs as DataFrames. ``null_profile`` and
-    ``validity`` are local relations holding counts the pipeline already
-    computed (collecting them runs no job); the other reports are lazy
-    until collected."""
+    """All quality-check outputs as DataFrames. ``null_profile``,
+    ``validity`` and ``day_coverage`` are local relations holding counts
+    the pipeline already computed (collecting them runs no job); the
+    other reports are lazy until collected.
+
+    ``cleaned`` is a projection of the pipeline's pinned frame, so
+    ``cleaned.unpersist()`` does not release the pin; :meth:`unpersist`
+    does. After it, the lazy reports (``value_frequencies`` and both
+    duplicate-group reports) and ``cleaned`` re-read the source when
+    collected."""
 
     cleaned: DataFrame
     dropped_columns: list[str]
@@ -52,6 +61,12 @@ class QualityReport:
     day_coverage: DataFrame | None
     output_partitions: int = -1
     extras: dict = field(default_factory=dict)
+    pinned: DataFrame | None = field(default=None, repr=False)
+
+    def unpersist(self, blocking: bool = False) -> None:
+        """Release the pipeline's pin (``cleaned`` before the drop)."""
+        if self.pinned is not None:
+            self.pinned.unpersist(blocking)
 
 
 def _local(spark: SparkSession, schema: str, **columns: list) -> DataFrame:
@@ -74,20 +89,26 @@ def run_flight_pipeline(
     Stages (reference cell order, SURVEY §2.10, fused where one pass
     serves several):
       Q7 timestamp derive → pin → one fused profile pass giving Q1 (drop
-      all-null columns + null profile) and Q5 (validity report,
-      report-only: rows never dropped) → Q3 value frequencies → Q4 exact
-      + compound-key duplicate groups → Q6 day coverage on the derived
-      timestamp → optional sized write.
+      all-null columns + null profile), Q5 (validity report,
+      report-only: rows never dropped), Q6 (day coverage on the derived
+      timestamp) and the sink size → Q3 value frequencies → Q4 exact +
+      compound-key duplicate groups → optional sized write.
 
-    The fused pass is one global aggregate over the pinned frame. It
-    fills the cache and returns the row total, every column's non-null
-    count and every rule's failure count; ``null_profile`` and
-    ``validity`` are built from that row. Because the timestamp is
-    derived before the drop, an all-null ``Year``, ``Month`` or
-    ``DayofMonth`` is dropped and leaves a NULL timestamp; an all-null
-    ``DepTime`` takes its derived ``DepTime_*`` columns with it. Rules
-    see the pinned frame, so a rule on a dropped column fails nowhere.
-    ``dropped_columns`` names input columns only.
+    The fused pass is one aggregate over the pinned frame, grouped by
+    ``to_date(ts_col)`` (by no key when ``ts_col`` is absent). It fills
+    the cache and returns, per day, the row total, every column's
+    non-null count and value bytes (``plans._size_aggs``) and every
+    rule's failure count; the driver sums the day rows into the totals.
+    ``null_profile``, ``validity`` and ``day_coverage``
+    (``timeliness.day_coverage_of_counts``: the zero-filled min-to-max
+    day spine) are built from those rows, and the sink gets
+    ``plans.partitions_for_target`` of the kept columns' value bytes.
+    Because the timestamp is derived before the drop, an all-null
+    ``Year``, ``Month`` or ``DayofMonth`` is dropped and leaves a NULL
+    timestamp; an all-null ``DepTime`` takes its derived ``DepTime_*``
+    columns with it. Rules see the pinned frame, so a rule on a dropped
+    column fails nowhere. ``dropped_columns`` names input columns only.
+    The pin lives until ``QualityReport.unpersist``.
     """
     spark = df.sparkSession
     rules = rules or []
@@ -98,12 +119,21 @@ def run_flight_pipeline(
     )
     pinned = derived.persist(StorageLevel.MEMORY_AND_DISK)
     cols = pinned.columns
-    row = pinned.agg(
-        *completeness._count_aggs(cols), *validity._fail_aggs(rules)
-    ).first()
-    total = row[0]
-    nonnull = dict(zip(cols, row[1:1 + len(cols)]))
-    n_fail = list(row[1 + len(cols):])
+    keys = []
+    if ts_col in cols:
+        keys = [F.to_date(plans._col(ts_col)).alias("__day")]
+    aggs = [
+        *completeness._count_aggs(cols),
+        *plans._size_aggs(pinned.schema),
+        *validity._fail_aggs(rules),
+    ]
+    rows = pinned.groupBy(*keys).agg(*aggs).collect()
+    sums = [sum(r[j] or 0 for r in rows)
+            for j in range(len(keys), len(keys) + len(aggs))]
+    total = sums[0]
+    nonnull = dict(zip(cols, sums[1:1 + len(cols)]))
+    value_bytes = dict(zip(cols, sums[1 + len(cols):1 + 2 * len(cols)]))
+    n_fail = sums[1 + 2 * len(cols):]
 
     dropped = [c for c in df.columns if nonnull[c] == 0]
     gone = dropped + (
@@ -121,7 +151,6 @@ def run_flight_pipeline(
         ),
         ratio_decimals=6,
     )
-
     report = QualityReport(
         cleaned=cleaned,
         dropped_columns=dropped,
@@ -141,13 +170,20 @@ def run_flight_pipeline(
             if rules else None
         ),
         day_coverage=(
-            timeliness.day_coverage(cleaned, ts_col)
+            timeliness.day_coverage_of_counts(
+                spark, {r[0]: r[1] for r in rows if r[0] is not None}
+            )
             if ts_col in kept
             else None
         ),
+        pinned=pinned,
     )
     if output_path is not None:
-        report.output_partitions = write_parquet(cleaned, output_path)
+        parts = plans.partitions_for_target(
+            sum(value_bytes[c] for c in kept)
+        )
+        write_parquet(cleaned.coalesce(parts), output_path, target_mb=None)
+        report.output_partitions = parts
     return report
 
 
@@ -251,8 +287,6 @@ def run_textprep_pipeline(
     measured profile — including ``bg_jaccard_est``, the number that
     predicts LSH blow-up — lands in ``report.guard_profile`` instead
     of dying with the stderr warning."""
-    from pyspark.sql import functions as F
-
     from .operators import dedup, graph, text
 
     scored = text.text_quality(df, text_col, id_col, append=True)
@@ -369,8 +403,6 @@ def run_corpus_release(
     join to re-attach the text — no stage ever shuffles document text
     except that final join, which moves only the SURVIVING corpus.
     """
-    from pyspark.sql import functions as F
-
     from .operators import text
     from .operators.sampling import pack_by_token_budget
 

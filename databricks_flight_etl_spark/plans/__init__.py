@@ -11,7 +11,11 @@ from __future__ import annotations
 import math
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..partitioning import _file_leaf_stats
 
 __all__ = [
     "estimate_bytes",
@@ -27,25 +31,101 @@ __all__ = [
 ]
 
 
-def estimate_bytes(df: DataFrame, sample_rows: int = 10_000) -> int:
-    """Estimate the in-memory size of ``df`` in bytes.
+# Bytes per non-null value of the fixed-width types (Spark's
+# ``DataType.defaultSize``); decimals take 8 up to precision 18, else 16.
+_FIXED_WIDTH = {
+    T.BooleanType: 1, T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4,
+    T.LongType: 8, T.FloatType: 4, T.DoubleType: 8, T.DateType: 4,
+    T.TimestampType: 8, T.TimestampNTZType: 8,
+}
+
+
+def _quote(name: str) -> str:
+    """``name`` as a SQL identifier: backtick-quoted with inner
+    backticks doubled, so dots, quotes and backticks are part of the
+    name, not syntax."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _col(name: str) -> Column:
+    """``F.col`` of the column called ``name`` verbatim."""
+    return F.col(_quote(name))
+
+
+def _value_bytes(field: T.StructField) -> str:
+    """SQL for the summed value bytes of one column: ``octet_length``
+    for strings and binaries, non-NULL count × width for fixed-width
+    types, and the length of the string form for everything else
+    (arrays, maps, structs). NULL counts nothing."""
+    c = _quote(field.name)
+    dt = field.dataType
+    if isinstance(dt, (T.StringType, T.BinaryType)):
+        return f"sum(octet_length({c}))"
+    if isinstance(dt, T.DecimalType):
+        width = 8 if dt.precision <= 18 else 16
+    else:
+        width = _FIXED_WIDTH.get(type(dt))
+    if width is not None:
+        return f"count({c}) * {width}"
+    return f"sum(octet_length(CAST({c} AS STRING)))"
+
+
+def _size_aggs(schema: T.StructType) -> list[Column]:
+    """The one aggregate behind every value-byte estimate: the value
+    bytes of each column of ``schema`` (aliased ``__bytes0``,
+    ``__bytes1``, … by position, so no column name can clash with
+    another output). A sum over no non-NULL value reads NULL; callers
+    take that as 0. ``pipeline.run_flight_pipeline`` runs these in its
+    fused profile pass.
+
+    Built as SQL text, one ``F.expr`` per column: PySpark records the
+    Python call site on every ``F.col`` and every ``Column`` method, a
+    few py4j round trips each, and the Column-built form of these
+    aggregates cost ≈0.15 s of CPU per call over the 32-column flight
+    schema (4-vCPU VM), against ≈0.02 s for the parsed form."""
+    return [
+        F.expr(f"{_value_bytes(f)} AS __bytes{i}")
+        for i, f in enumerate(schema.fields)
+    ]
+
+
+def estimate_bytes(df: DataFrame) -> int:
+    """Estimate the size of ``df`` in bytes.
 
     Supported-API replacement for the reference's SizeEstimator probe
-    (NB:416–427): sample up to ``sample_rows`` rows through Arrow, take
-    deep pandas memory usage as avg row size, multiply by count().
-    Two actions, both over ``df``'s full lineage (pin it first when that
-    is costly): the count reads every row and runs two jobs under AQE
-    (a map stage, then the result); the sample stops once it has ``k``
-    rows and runs one or two. A Catalyst-stats estimate would run none,
-    but Catalyst reports ``Long.MaxValue`` for RDD-backed frames.
+    (NB:416–427). Two models, neither with a sample or pandas on the
+    driver:
+
+    - A frame that reads files counts the bytes of those files
+      (``partitioning._file_leaf_stats``: a walk of the analyzed plan,
+      no job). Rewriting a dataset (compaction, a format round trip)
+      writes back about what it read, and decoding every value only to
+      size it would read the input twice.
+    - Any other frame (local data, RDD-backed) counts its summed value
+      bytes: strings and binaries their ``octet_length``, fixed-width
+      types non-NULL values × width, other types the length of their
+      string form. One aggregate over ``df``'s full lineage (pin it
+      first when that is costly).
+
+    Catalyst's own ``sizeInBytes`` runs no job either, but it reads
+    ``Long.MaxValue`` for RDD-backed frames and multiplies the sides of
+    a join.
+
+    Value bytes are what a columnar sink stores before encoding and
+    compression, so they size output files without the per-object
+    overhead a deep pandas estimate adds. On the benchmark's flight CSV
+    they read ≈99 B/row against ≈480 B/row for pandas: at the
+    reference's 2.39 M rows ≈237 MB (2 partitions of 200 MB) against
+    ≈1.15 GB (6). The reference's SizeEstimator over its pickled RDD
+    read 83.98 MB (1).
     """
-    n = df.count()
-    if n == 0:
+    file_bytes, n_files = _file_leaf_stats(df)
+    if n_files:
+        return file_bytes
+    aggs = _size_aggs(df.schema)
+    if not aggs:
         return 0
-    k = min(n, sample_rows)
-    sample = df.limit(k).toPandas()
-    sample_bytes = int(sample.memory_usage(index=False, deep=True).sum())
-    return int(sample_bytes / max(k, 1) * n)
+    return sum(v or 0 for v in df.agg(*aggs).first())
 
 
 def partitions_for_target(est_bytes: int, target_mb: int = 200) -> int:
@@ -187,7 +267,6 @@ def observe_quality(df: DataFrame, name: str, metrics: dict | None = None):
     ``observation.get`` AFTER an action has run.
     """
     from pyspark.sql import Observation
-    from pyspark.sql import functions as F
 
     if metrics is None:
         metrics = {"n_rows": F.count(F.lit(1))}

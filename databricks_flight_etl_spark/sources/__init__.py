@@ -235,9 +235,14 @@ def write_parquet(
     The reference estimates in-memory size via the private JVM
     ``SizeEstimator`` over a re-pickled RDD (NB:416–427) and coalesces to
     ``ceil(MB/200)`` partitions. We preserve the semantics (≈200 MB per
-    output partition) using a supported estimate (sampled Arrow row size
-    × count — see plans.estimate_bytes) and ``coalesce``, which avoids a
-    shuffle. Returns the partition count used.
+    output partition) using a supported estimate (the bytes of the
+    files ``df`` reads, with no job, else its summed value bytes in one
+    aggregate — see plans.estimate_bytes) and
+    ``coalesce``, which avoids a shuffle. Returns the partition count
+    used. ``target_mb=None`` writes ``df`` as partitioned and returns
+    -1: for a caller that already holds the size
+    (``pipeline.run_flight_pipeline`` sizes from its profile pass and
+    coalesces itself), so no estimate job runs.
 
     At 100 TB prefer leaving partitioning to AQE plus
     ``spark.sql.files.maxRecordsPerFile``; a small coalesce() removes
