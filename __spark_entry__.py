@@ -1150,11 +1150,12 @@ def q_minhash_stops_supplied(spark, sf_dir):
     stop_rows = shingle_stop_list(
         b, "text", "doc_id", shingle_k=7, max_df=30
     ).collect()
-    # ONE slice (partitioning.local_df): the default createDataFrame
-    # parallelizes even a tiny list across defaultParallelism
-    # Python-payload partitions, and every broadcast exchange that
-    # consumes it (signature anti-join + verify anti-join) re-drains
-    # all of them (~0.8 s each, measured)
+    # a local relation (partitioning.local_df): the default
+    # createDataFrame parallelizes even a tiny list across
+    # defaultParallelism pickled partitions, and every broadcast
+    # exchange that consumes it (signature anti-join + verify
+    # anti-join) re-drains all of them through Python workers
+    # (~0.8 s each, measured)
     stops = _local_df(spark, stop_rows, "shingle string, df bigint")
     return minhash_dedup_pairs(
         b, "text", "doc_id", threshold=0.8, shingle_k=7,
@@ -1271,8 +1272,8 @@ def q_simhash_stops_supplied(spark, sf_dir):
     stop_rows = shingle_stop_list(
         b, "text", "doc_id", shingle_k=7, max_df=30
     ).collect()
-    # one slice — see q_minhash_stops_supplied's note on the
-    # per-broadcast cost of default-parallelism local relations
+    # a local relation — see q_minhash_stops_supplied's note on the
+    # per-broadcast cost of a parallelized driver list
     stops = _local_df(spark, stop_rows, "shingle string, df bigint")
     out = simhash_near_dup_pairs(
         b, "text", "doc_id", max_hamming=6, shingle_k=7,

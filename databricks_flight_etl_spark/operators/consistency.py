@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..partitioning import local_df
 from ..plans import _col
 
 __all__ = ["string_columns", "value_frequencies",
@@ -40,8 +41,8 @@ def value_frequencies(df: DataFrame, cols: list[str] | None = None) -> DataFrame
     """
     cols = cols if cols is not None else string_columns(df)
     if not cols:
-        return df.sparkSession.createDataFrame(
-            [], "column string, value string, n bigint"
+        return local_df(
+            df.sparkSession, [], "column string, value string, n bigint"
         )
     melted = df.select(
         F.explode(F.array(*[
@@ -74,9 +75,10 @@ def value_frequencies_capped(
     """
     cols = cols if cols is not None else string_columns(df)
     if not cols:
-        return df.sparkSession.createDataFrame(
-            [], "column string, value string, n bigint, rank int, "
-                "approx_n_distinct bigint"
+        return local_df(
+            df.sparkSession, [],
+            "column string, value string, n bigint, rank int, "
+            "approx_n_distinct bigint",
         )
     freqs = value_frequencies(df, cols)
     w = Window.partitionBy("column").orderBy(F.desc("n"), F.asc("value"))
@@ -149,9 +151,10 @@ def concentration_profile(
     cols = cols if cols is not None else string_columns(df)
     total = df.count()
     if total == 0:
-        return df.sparkSession.createDataFrame(
-            [], "column string, n_distinct long, entropy double, "
-                "gini double, top_share double"
+        return local_df(
+            df.sparkSession, [],
+            "column string, n_distinct long, entropy double, "
+            "gini double, top_share double",
         )
     freqs = value_frequencies(df, cols)
     p = F.col("n") / F.lit(float(total))
@@ -229,7 +232,7 @@ def association_pairs(
                     .select("__b")
         items = items.join(kept, "__b")
     if n_baskets == 0:
-        return df.sparkSession.createDataFrame([], empty_schema)
+        return local_df(df.sparkSession, [], empty_schema)
     item_counts = items.groupBy("__i").agg(
         F.count(F.lit(1)).alias("__ni")
     )

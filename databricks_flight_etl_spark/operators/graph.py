@@ -106,10 +106,10 @@ def _cc_driver_union_find(collected_rows, e: DataFrame) -> DataFrame:
     schema = e.select(
         F.col("a").alias("node"), F.col("a").alias("component")
     ).schema
-    # size-aware slicing: small label tables stay ONE Python-payload
-    # partition (downstream broadcast anti-joins drain every slice —
-    # the round-11 local-relation finding), while near-the-gate lists
-    # (≤2M rows) keep enough slices for parallel consumption
+    # label tables below 10k rows become a LocalRelation (no job to
+    # read, no Python worker: downstream broadcast anti-joins take the
+    # rows straight from the plan), while near-the-gate lists (≤2M
+    # rows) keep a sliced RDD for parallel consumption
     from ..partitioning import local_df
 
     out = local_df(spark, rows, schema)

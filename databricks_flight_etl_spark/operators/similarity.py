@@ -23,7 +23,7 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..partitioning import spread
+from ..partitioning import local_df, spread
 
 __all__ = ["dot", "l2_norm", "cosine", "cosine_topk", "cosine_topk_batch",
            "cosine_topk_pandas",
@@ -307,6 +307,14 @@ def cosine_topk_pandas(
     beats the element-wise JVM fold at high dimensions, at the price of
     Arrow transfer. Same results as the built-in version (pinned by
     test) — choose per profile, not per taste.
+
+    The corpus is not spread (``partitioning.spread``): every task of the
+    scoring stage is a Python worker process (~110 MB resident with
+    pandas and numpy loaded) plus the per-task Arrow floor, where a
+    ``cosine_topk`` task is a JVM thread. So the stage takes the scan's
+    own split count: the 193 KB sf0.01 embeddings file scores in ONE
+    task (one worker instead of four), and a larger corpus arrives in
+    as many splits as Spark's file splitting gives it.
     """
     import numpy as np
     import pandas as pd
@@ -320,11 +328,9 @@ def cosine_topk_pandas(
     pv = np.asarray(probe["__pv"], dtype=np.float64)
     pn = np.sqrt(pv @ pv)
 
-    src = spread(
-        df.select(
-            F.col(id_col).cast("long").alias("__id"),
-            _as_double(vec_col).alias("__v"),
-        )
+    src = df.select(
+        F.col(id_col).cast("long").alias("__id"),
+        _as_double(vec_col).alias("__v"),
     )
     out_schema = T.StructType(
         [
@@ -978,8 +984,6 @@ def ivf_assign_two_level(
                 F.col("__super").cast("long").alias(out_col),
             ).localCheckpoint()
         else:
-            from ..partitioning import local_df
-
             cent_rows = [(i, c) for i, c in enumerate(super_cents)]
             cent_df = local_df(
                 df.sparkSession, cent_rows,
@@ -1047,8 +1051,8 @@ def group_vector_mean(
     |groups| rows."""
     dim = _infer_dim(df, vec_col)
     if dim is None:
-        return df.sparkSession.createDataFrame(
-            [], f"{group_col} string, idx int, mean double")
+        return local_df(
+            df.sparkSession, [], f"{group_col} string, idx int, mean double")
     v = _as_double(vec_col)
     agg = df.groupBy(group_col).agg(
         *[F.avg(v[i]).alias(f"m_{i}") for i in range(dim)]
@@ -1090,8 +1094,9 @@ def centroid_outlier_scores(
     """
     dim = _infer_dim(df, vec_col)
     if dim is None:
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} long, {group_col} string, cos_centroid double"
+        return local_df(
+            df.sparkSession, [],
+            f"{id_col} long, {group_col} string, cos_centroid double",
         )
     df = df.where(F.col(vec_col).isNotNull())
     v = _as_double(vec_col)
@@ -1162,8 +1167,8 @@ def project_embeddings(
 
     dim = _infer_dim(df, vec_col)
     if dim is None:
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} long, proj array<double>"
+        return local_df(
+            df.sparkSession, [], f"{id_col} long, proj array<double>"
         )
     df = df.where(F.col(vec_col).isNotNull())
     S = np.asarray(_jl_signs(dim, out_dim, seed), dtype=np.float64).T

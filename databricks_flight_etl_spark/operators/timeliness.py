@@ -16,9 +16,10 @@ from __future__ import annotations
 
 from datetime import date, timedelta
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..partitioning import local_df
 
 __all__ = ["per_period_counts", "date_spine", "day_coverage", "day_coverage_of_counts",
            "missing_periods", "sequence_gaps", "ohlc_bars"]
@@ -81,11 +82,8 @@ def day_coverage_of_counts(spark: SparkSession, counts: dict[date, int]) -> Data
         first = min(counts)
         days = [first + timedelta(days=i)
                 for i in range((max(counts) - first).days + 1)]
-    return spark.createDataFrame(
-        pa.table({
-            "day": pa.array(days, pa.date32()),
-            "n_events": pa.array([counts.get(d, 0) for d in days], pa.int64()),
-        }),
+    return local_df(
+        spark, [(d, counts.get(d, 0)) for d in days],
         "day date, n_events bigint",
     )
 

@@ -8,14 +8,26 @@ dot products) onto one core. ``spread`` is the scale-aware escape
 hatch: repartition only when the input is narrower than the session's
 default parallelism, so it is a no-op on production-sized inputs that
 already arrive pre-split.
+
+The cost model behind both decisions here: a JVM task costs a thread
+and a scheduling slot; a Python task (``mapInPandas`` /
+``mapInArrow``, a pickled-RDD map) also costs a worker process
+(~50-110 MB resident) plus the per-task Arrow floor (~0.1-0.2 s).
+So JVM stages over a narrow scan fan out to the cores (:func:`spread`),
+and driver-built tables become local relations that need no task at
+all (:func:`local_df`).
 """
 
 from __future__ import annotations
 
 import math
 
+import pyarrow as pa
+from py4j.java_gateway import is_instance_of
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 __all__ = ["under_parallel", "spread", "local_df"]
 
@@ -31,9 +43,13 @@ def _file_leaf_stats(df: DataFrame) -> tuple[int, int]:
     partitioning. ``(0, 0)`` — no estimate — when the plan has no file
     leaves (LocalRelation / LogicalRDD / Range sources) or any relation
     leaf that is not a file source (a JDBC relation has no file index
-    to size)."""
+    to size). Files are counted from the index's cached listing
+    (``allFiles``), not from ``inputFiles()``, which builds a path
+    string per file; indexes without a listing (catalog tables) still
+    go through ``inputFiles()``."""
     total = 0
     n_files = 0
+    gateway = df.sparkSession.sparkContext._gateway
     stack = [df._jdf.queryExecution().analyzed()]
     while stack:
         node = stack.pop()
@@ -44,7 +60,14 @@ def _file_leaf_stats(df: DataFrame) -> tuple[int, int]:
             if rel.getClass().getSimpleName() != "HadoopFsRelation":
                 return 0, 0
             total += rel.sizeInBytes()
-            n_files += len(rel.location().inputFiles())
+            loc = rel.location()
+            if is_instance_of(
+                gateway, loc, "org.apache.spark.sql.execution.datasources."
+                "PartitioningAwareFileIndex"
+            ):
+                n_files += loc.allFiles().size()
+            else:
+                n_files += len(loc.inputFiles())
         for i in range(n):
             stack.append(children.apply(i))
     return total, n_files
@@ -98,32 +121,37 @@ def under_parallel(df: DataFrame) -> bool:
 
 
 def spread(df: DataFrame, *keys: Column | str) -> DataFrame:
-    """Raise map-side parallelism when (and only when) the plan's
-    source arrives narrower than ``sparkContext.defaultParallelism``.
+    """Raise map-side parallelism of a JVM stage when (and only when)
+    the plan's source arrives narrower than
+    ``sparkContext.defaultParallelism``.
+
+    A JVM task costs a thread and a scheduling slot, not a process, so
+    a JVM stage over a narrow scan should fan out to every core: the
+    extra tasks are nearly free and the per-row work (regexp
+    normalization, shingle explode, fold-based dot products) divides.
+    Measured on the 32-core local harness: 2.3–3.7× on the dedup
+    signature suite, which previously ran its whole map side on one
+    core. A Python task costs a worker process on top, so
+    ``similarity.cosine_topk_pandas`` does not spread: its Python stage
+    takes the scan's own split count.
 
     With ``keys``, hash-repartitions on them — downstream groupBy /
     join on the same keys then reuses the distribution and the plan
     keeps exactly ONE Exchange (verified via explain on the dedup
     signature aggregates). Without keys, round-robin repartitions —
-    right for purely per-row work (ANN scoring, quality metrics) where
-    balance matters and no downstream key exists.
+    right for purely per-row work where balance matters and no
+    downstream key exists.
 
-    The narrowness decision comes from the file-leaf size estimate
-    (:func:`_estimated_scan_splits`), NOT from probing the physical
-    plan (r15). The previous probe — ``df.rdd.getNumPartitions()`` —
-    was billed as plan inspection, but under AQE converting a plan with
-    exchanges to an RDD **executes its query stages**: measured 3.97 s
-    cold (real jobs) on the textprep funnel's post-exact-dedup lineage,
-    ~0.1 s of physical planning even on scan-only plans, per call. The
-    size walk costs 13–36 ms, runs zero jobs, and makes the same
-    decision: small local inputs (single-row-group files, the case the
-    repartition exists for) estimate far below any core count, and
-    production-sized inputs estimate at or above ``defaultParallelism``
-    by Spark's own split formula, keeping spread a no-op there.
-    Measured on the 32-core local harness: 2.3–3.7× on the dedup
-    signature suite, which previously ran its whole map side on one
-    core. Plans with no file leaves (driver-local frames) keep the
-    exact probe — those lineages are cheap to plan by construction.
+    The narrowness decision (:func:`under_parallel`) comes from the
+    file-leaf size estimate, NOT from probing the physical plan: under
+    AQE, ``df.rdd.getNumPartitions()`` on a plan with exchanges
+    **executes its query stages** (3.97 s of real jobs on the textprep
+    funnel's post-exact-dedup lineage). The size walk runs zero jobs
+    and makes the same decision: small local inputs estimate far below
+    any core count, production-sized inputs at or above
+    ``defaultParallelism``, keeping spread a no-op there. Plans with no
+    file leaves (driver-local frames) keep the exact probe — those
+    lineages are cheap to plan by construction.
     """
     if not under_parallel(df):
         return df
@@ -134,22 +162,48 @@ def spread(df: DataFrame, *keys: Column | str) -> DataFrame:
 
 
 def local_df(spark: SparkSession, rows, schema: str | T.StructType):
-    """Driver-side rows → DataFrame with SIZE-AWARE slicing (round-11).
+    """Driver-side rows → DataFrame; a short list needs no Python task
+    downstream.
 
-    Plain ``createDataFrame(list)`` parallelizes even a 6-row table
-    across ``defaultParallelism`` Python-payload partitions, and every
-    consuming exchange drains ALL of them through Python workers —
-    measured ~0.8 s per broadcast of a tiny stop list, and ~4.5 s when
-    a ``coalesce(1)`` write forced one task to drain 32 sequentially.
-    Tiny tables (stop lists, sketch probe terms, centroid tables,
-    report spines) therefore get ONE slice; large driver lists (the
-    gated ≤1M-edge union-find labels) keep enough slices that
-    downstream jobs stay parallel (~100k rows per slice, capped at
-    ``defaultParallelism``).
+    A list below 10k rows becomes an Arrow table and Spark turns it
+    into a ``LocalRelation``: collecting it (or a projection of it)
+    runs no job, a broadcast of it needs no scan, and no Python worker
+    ever reads it. ``createDataFrame`` on a list or an RDD instead
+    builds a pickled RDD whose ``toInternal`` map runs in a Python
+    worker per partition — a ~50 MB process and a task floor for a
+    6-row stop list or a 51-row label table. Longer lists (the
+    ≤1M-edge union-find labels) keep a sliced RDD (~100k rows per
+    slice, at least one, capped at ``defaultParallelism``). The Arrow
+    table is built on the driver, once, and that cost grows with the
+    rows: building a list and running an aggregate and a broadcast
+    anti-join over it measured 35-45% faster as a local relation from
+    100 to 5k rows, level at 10k and slower from 30k rows up (4 cores;
+    a 1M-row ``LocalRelation`` also ships inside its tasks: 1.60 s vs
+    0.65 s for an aggregate, 2.64 s vs 0.90 s for an anti-join). An
+    empty list gives an empty local relation of ``schema``.
+
+    Rows are read as ``createDataFrame`` reads them: each is checked
+    against ``schema`` by the same verifier (a row with the wrong
+    number of values raises) and converted by ``schema.toInternal``, so
+    tuples and ``Row``s are positional, dicts are read by field name,
+    and naive datetimes are local time.
     """
     rows = rows if isinstance(rows, list) else list(rows)
     sc = spark.sparkContext
-    if not rows:
-        return spark.createDataFrame([], schema)
-    slices = max(1, min(sc.defaultParallelism, len(rows) // 100_000))
-    return spark.createDataFrame(sc.parallelize(rows, slices), schema)
+    if len(rows) >= 10_000:
+        slices = max(1, min(sc.defaultParallelism, len(rows) // 100_000))
+        return spark.createDataFrame(sc.parallelize(rows, slices), schema)
+    struct = (schema if isinstance(schema, T.StructType)
+              else T.StructType.fromDDL(schema))
+    verify = _make_type_verifier(struct)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(struct.toInternal(row))
+    arrow = to_arrow_schema(struct)
+    columns = list(zip(*internal)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)

@@ -17,12 +17,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from . import plans
+from .partitioning import local_df
 from .functions import derive_departure_timestamp
 from .operators import (
     completeness,
@@ -67,12 +67,6 @@ class QualityReport:
         """Release the pipeline's pin (``cleaned`` before the drop)."""
         if self.pinned is not None:
             self.pinned.unpersist(blocking)
-
-
-def _local(spark: SparkSession, schema: str, **columns: list) -> DataFrame:
-    """A local relation from Python column lists: collecting it, or a
-    projection of it, runs no job."""
-    return spark.createDataFrame(pa.table(columns), schema)
 
 
 def run_flight_pipeline(
@@ -143,11 +137,9 @@ def run_flight_pipeline(
     cleaned = pinned.drop(*gone) if gone else pinned
     kept = cleaned.columns
     null_profile = completeness._ratio_frame(
-        _local(
-            spark, "column string, n_null bigint, total bigint",
-            column=kept,
-            n_null=[total - nonnull[c] for c in kept],
-            total=[total] * len(kept),
+        local_df(
+            spark, [(c, total - nonnull[c], total) for c in kept],
+            "column string, n_null bigint, total bigint",
         ),
         ratio_decimals=6,
     )
@@ -163,9 +155,9 @@ def run_flight_pipeline(
             else None
         ),
         validity=(
-            _local(
-                spark, "rule string, n_fail bigint",
-                rule=[r.name for r in rules], n_fail=n_fail,
+            local_df(
+                spark, [(r.name, n) for r, n in zip(rules, n_fail)],
+                "rule string, n_fail bigint",
             )
             if rules else None
         ),

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..partitioning import local_df
 from ..plans import estimate_bytes, partitions_for_target
 from ..schemas import TESTDATA_SCHEMAS
 
@@ -45,8 +46,9 @@ def list_dir(spark: SparkSession, path: str) -> DataFrame:
     Goes through the Hadoop FileSystem API, so any Spark-supported
     scheme works (file://, hdfs://, s3a://, ...), not just the local
     disk. The listing itself is driver-side (one RPC per directory —
-    same cost profile as dbutils); the result is a small bounded table:
-    (path, name, size, is_dir, mod_time).
+    same cost profile as dbutils); the result is a small bounded table,
+    (path, name, size, is_dir, mod_time), built by
+    ``partitioning.local_df`` (a local relation below 10k entries).
     """
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
@@ -73,7 +75,7 @@ def list_dir(spark: SparkSession, path: str) -> DataFrame:
             T.StructField("mod_time_ms", T.LongType(), False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_df(spark, rows, schema)
 
 
 def read_csv(

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..partitioning import local_df
+
 # indirection so tests can inject commit-completion between retry
 # attempts without patching the global time module (Spark internals
 # also call time.sleep, so a global patch would fire recursively)
@@ -809,7 +811,7 @@ def streaming_drift_readout(
     )
     state = _read_state(spark, state_dir, rollback=False)
     if state is None:
-        s_hist = spark.createDataFrame([], "bucket int, __cs long")
+        s_hist = local_df(spark, [], "bucket int, __cs long")
     else:
         s_hist = state.select("bucket", F.col("cnt").alias("__cs"))
     hist = (
