@@ -4112,8 +4112,12 @@ def q_deterministic_sample(spark, sf_dir):
     partitioning (md5-prefix threshold) — unlike df.sample, which
     depends on partition layout. Certified exactly against the oracle
     computing the same predicate."""
+    from databricks_flight_etl_spark.operators.sampling import (
+        deterministic_sample,
+    )
+
     ev = _t(spark, sf_dir, "events")
-    return relational.deterministic_sample(ev, "event_id", 0.1).select(
+    return deterministic_sample(ev, "event_id", 0.1).select(
         "event_id", "user_id", "event_type", "value"
     )
 
@@ -4281,7 +4285,7 @@ def q_dedup_survivors(spark, sf_dir):
     keep only each cluster's canonical (min-id) member plus all
     untouched rows — the step that actually shrinks the corpus.
     Certified against a recursive-CTE + anti-join oracle."""
-    from databricks_flight_etl_spark.operators.dedup import dedup_survivors
+    from databricks_flight_etl_spark.operators.graph import dedup_survivors
 
     emb = _t(spark, sf_dir, "embeddings")
     pairs = cosine_near_dup_pairs(emb, threshold=0.35, block_col="label")

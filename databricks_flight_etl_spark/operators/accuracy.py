@@ -11,8 +11,6 @@ groupBy — two passes total, no driver bulk transfer, works at 100 TB.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -27,7 +25,7 @@ __all__ = ["summary_stats", "histogram", "describe",
            "psi_drift", "trimmed_mean_by_group", "winsorized_mean_by_group",
            "group_linear_trend", "benford_profile", "grouped_pearson",
            "ks_statistic", "ks_statistic_grouped", "ks_drift_report",
-           "mad_grouped", "release_histogram_caches"]
+           "mad_grouped"]
 
 
 def describe(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -164,66 +162,10 @@ def histogram(df: DataFrame, col: str, nbins: int = 20) -> DataFrame:
     )
 
 
-_PINNED_HISTS: list[DataFrame] = []
-_PINNED_LOCK = threading.Lock()
-# FIFO cap on the registry: MEMORY_AND_DISK blocks' MEMORY half is
-# LRU-evictable but the DISK half is NOT — a long-lived session that
-# never calls release_histogram_caches() would otherwise accumulate
-# disk blocks without bound. Evicting (unpersisting) an old pin is
-# always correctness-safe: any still-lazy result that referenced it
-# just recomputes its lineage (slower, never wrong).
-_MAX_PINNED = 32
-
-
-def _register_pin(hist: DataFrame) -> None:
-    evicted = None
-    with _PINNED_LOCK:
-        _PINNED_HISTS.append(hist)
-        if len(_PINNED_HISTS) > _MAX_PINNED:
-            evicted = _PINNED_HISTS.pop(0)
-    if evicted is not None:
-        try:
-            evicted.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing left to free
-
-
-def release_histogram_caches() -> int:
-    """Unpersist every histogram :func:`_hist_cumsum` has pinned this
-    session and return how many were released.
-
-    ``_hist_cumsum`` persists its input histogram (three internal
-    consumers — see its docstring) but returns a LAZY frame, so neither
-    it nor its callers (ks_statistic, quantiles_exact, grouped_quantiles,
-    rank_normalize, spearman_corr, ks_drift_report, vocab_coverage) can
-    unpersist before the caller's eventual action. Batch jobs release
-    everything at session end; a LONG-LIVED session running repeated
-    drift checks should call this between checks. The registry is
-    lock-guarded (safe under concurrent jobs) and FIFO-capped at
-    ``_MAX_PINNED`` so a session that never releases cannot grow its
-    on-disk block store without bound (MEMORY_AND_DISK's disk half is
-    not LRU-evicted). Releasing — explicitly here or via the cap — is
-    always safe for CORRECTNESS: a lazy result whose pinned input was
-    unpersisted silently recomputes that lineage from source on its
-    next action (a recompute cost, never a wrong answer). Unpersist is
-    idempotent and non-blocking.
-    """
-    with _PINNED_LOCK:
-        drained = list(_PINNED_HISTS)
-        _PINNED_HISTS.clear()
-    for h in drained:
-        try:
-            h.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing left to free
-    return len(drained)
-
-
 def _hist_cumsum(
     hist: DataFrame, value_col: str, sum_cols: list[str],
     by: list[str] | None = None, n_buckets: int = 64,
-    inclusive: bool = True, persist: bool = True,
-    bucket_on: Column | None = None,
+    inclusive: bool = True, bucket_on: Column | None = None,
 ) -> DataFrame:
     """DISTRIBUTED running sum over a (by…, value, counts…) histogram —
     the two-level range-bucket prefix-sum every cumulative-rank
@@ -245,14 +187,12 @@ def _hist_cumsum(
     partitions, where the one-level window this replaced collapsed it
     onto a single task.
 
-    The histogram is pinned (MEMORY_AND_DISK) by default: three
-    consumers (bucket sums, the window join, callers' totals) would
-    otherwise each re-execute the lineage back to the raw scan —
-    the plan audit showed 8 source scans on the unpinned KS form.
-    Every pin is registered so :func:`release_histogram_caches` can
-    free them (the returned frame is lazy, so neither this function
-    nor its callers can unpersist before the caller's action);
-    ``persist=False`` opts out entirely for one-shot lineages.
+    Nothing is pinned: the histogram's consumers (the bounds row, the
+    bucket sums, the window join, callers' totals) sit in ONE physical
+    plan, so the histogram's shuffle runs once and the other consumers
+    read it through exchange reuse. AQE does not reuse an exchange
+    above a cached scan, so a ``hist`` built over a pinned frame runs
+    its shuffle once per consumer.
 
     ``bucket_on`` generalizes level 1 beyond numeric value columns: a
     NUMERIC column expression over ``hist`` that is monotone
@@ -269,11 +209,6 @@ def _hist_cumsum(
     from pyspark.sql import Window
 
     by = list(by or [])
-    if persist:
-        from pyspark import StorageLevel
-
-        hist = hist.persist(StorageLevel.MEMORY_AND_DISK)
-        _register_pin(hist)
     vd = (
         F.col(value_col).cast("double")
         if bucket_on is None
@@ -1146,8 +1081,7 @@ def grouped_pearson(
 
 def _ks_cumulative(
     df: DataFrame, value_col: str, group_col: str,
-    group_a, group_b, by: list[str], n_buckets: int,
-    max_points: int | None, persist: bool,
+    group_a, group_b, by: list[str], n_buckets: int, max_points: int | None,
 ):
     """Shared KS engine: per-(by…, value) cumulative a/b counts via the
     library's distributed two-level prefix-sum (:func:`_hist_cumsum` —
@@ -1200,10 +1134,8 @@ def _ks_cumulative(
         F.sum("__a").alias("__ca"),
         F.sum(F.lit(1) - F.col("__a")).alias("__cb"),
     )
-    cum = _hist_cumsum(
-        hist, "__v", ["__ca", "__cb"], by=by, n_buckets=n_buckets,
-        persist=persist,
-    ).select(
+    cum = _hist_cumsum(hist, "__v", ["__ca", "__cb"], by=by,
+                       n_buckets=n_buckets).select(
         *by,
         F.col("__cum___ca").alias("__cuma"),
         F.col("__cum___cb").alias("__cumb"),
@@ -1223,7 +1155,6 @@ def ks_statistic(
     df: DataFrame, value_col: str, group_col: str,
     group_a, group_b, decimals: int = 6,
     n_buckets: int = 64, max_points: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """EXACT two-sample Kolmogorov–Smirnov statistic between the value
     distributions of two groups: ``max |F_a(x) − F_b(x)|`` over the
@@ -1253,8 +1184,7 @@ def ks_statistic(
     mass — the psi_drift-style escape hatch for adversarially skewed
     value distributions."""
     cum, totals = _ks_cumulative(
-        df, value_col, group_col, group_a, group_b, [], n_buckets,
-        max_points, persist,
+        df, value_col, group_col, group_a, group_b, [], n_buckets, max_points,
     )
     dmax = cum.crossJoin(F.broadcast(totals)).agg(
         F.round(
@@ -1278,7 +1208,6 @@ def ks_statistic_grouped(
     df: DataFrame, value_col: str, group_col: str,
     group_a, group_b, by: list[str], decimals: int = 6,
     n_buckets: int = 64, max_points: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Per-segment two-sample KS in ONE pass — the drift-monitor shape
     (:func:`ks_statistic` per ``by`` group, e.g. per country or per
@@ -1293,7 +1222,7 @@ def ks_statistic_grouped(
         raise ValueError("by must name at least one grouping column")
     cum, totals = _ks_cumulative(
         df, value_col, group_col, group_a, group_b, list(by), n_buckets,
-        max_points, persist,
+        max_points,
     )
     gaps = cum.join(totals, list(by)).select(
         *by,

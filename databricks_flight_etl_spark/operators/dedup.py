@@ -53,7 +53,6 @@ __all__ = [
     "simhash_near_dup_pairs",
     "hamming_near_dup_pairs",
     "ngram_jaccard_pairs",
-    "dedup_survivors",
     "incremental_dedup",
     "corpus_digests",
     "set_similarity_join",
@@ -495,9 +494,11 @@ def shingle_df_profile(
 
     Scale shape: one explode → one hash-agg to the df table → exact
     integer/decimal sums + the shared distributed prefix-sum for the
-    quantiles. No sorts over raw rows, no driver collect. Products are
-    decimal(38,0)-exact (df < 1e19); the three final divisions are the
-    only doubles, so the row is engine-reproducible. On a 0- or 1-doc
+    quantiles. No sorts over raw rows, no driver collect, no pin: the
+    df table's consumers sit in one plan and share its shuffle through
+    exchange reuse, which AQE does not do above a cached scan. Products
+    are decimal(38,0)-exact (df < 1e19); the three final divisions are
+    the only doubles, so the row is engine-reproducible. On a 0- or 1-doc
     corpus the ratio columns are explicitly NULL (each division is
     gated on its denominator, so the row is identical whether the
     session runs with spark.sql.ansi.enabled or not — an unguarded
@@ -507,10 +508,8 @@ def shingle_df_profile(
     :func:`shingle_stop_list`."""
     from .accuracy import quantiles_exact
 
-    dfreq = _pin(
-        shingle_stop_list(df, text_col, id_col, shingle_k, max_df=0,
-                          table=table),
-    )  # max_df=0 → every shingle with its df
+    dfreq = shingle_stop_list(df, text_col, id_col, shingle_k, max_df=0,
+                              table=table)  # max_df=0 → every shingle
     n_docs = df.where(F.col(text_col).isNotNull()).select(
         F.count(F.lit(1)).alias("n_docs")
     )
@@ -1381,22 +1380,6 @@ def ngram_jaccard_pairs(
     return out.where(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
     )
-
-
-def dedup_survivors(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    src: str = "id_a",
-    dst: str = "id_b",
-    broadcast_max_rows: int = 8_000_000,
-) -> DataFrame:
-    """Survivor selection — see ``operators.graph.dedup_survivors``
-    (canonical home; re-exported here because pair mining lives in this
-    module and callers compose mine → survive in one import)."""
-    from .graph import dedup_survivors as _impl  # local import: no cycle
-
-    return _impl(df, pairs, id_col, src, dst, broadcast_max_rows)
 
 
 def incremental_dedup(

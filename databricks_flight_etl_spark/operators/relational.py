@@ -18,7 +18,6 @@ __all__ = [
     "salted_join",
     "salted_count",
     "latest_per_key",
-    "deterministic_sample",
     "merge_upsert",
     "scd2_history",
     "fuzzy_join",
@@ -111,27 +110,6 @@ def latest_per_key(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def deterministic_sample(
-    df: DataFrame, key_col: str, fraction: float
-) -> DataFrame:
-    """Stable ~``fraction`` sample keyed on ``key_col``: keep rows whose
-    md5(key) hex prefix falls below the fraction threshold.
-
-    Unlike ``df.sample`` (partition-layout-dependent) this selects the
-    SAME keys on every engine, run, and partitioning — the property
-    experiment holdouts and cross-system comparisons need. md5's hex is
-    uniform, so selectivity ≈ fraction (exact only in expectation);
-    same-key rows are kept or dropped together.
-
-    Delegates to :mod:`..sampling` (12-hex-char threshold, round-half
-    — an earlier 6-digit variant here truncated the threshold, putting
-    the boundary bucket one off from a naively-written oracle); see
-    sampling.stratified_sample for per-stratum rates and salts."""
-    from .sampling import deterministic_sample as _ds
-
-    return _ds(df, key_col, fraction)
 
 
 def top_k_per_group(

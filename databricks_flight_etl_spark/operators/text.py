@@ -154,9 +154,7 @@ def vocab_coverage(
       nature (n=1 matches most of the vocabulary); AQE's skew-join
       split handles it — the per-count side is one row per key.
 
-    The full-curve path pins two histograms via ``_hist_cumsum``;
-    long-lived sessions release them with
-    ``accuracy.release_histogram_caches()``."""
+    Neither path pins anything: the result is one lazy plan."""
     from pyspark.sql import Window
 
     toks = spread(df.select(F.col(text_col))).select(

@@ -42,14 +42,17 @@ def _file_leaf_stats(df: DataFrame) -> tuple[int, int]:
     are not descended into: they do not govern this frame's
     partitioning. ``(0, 0)`` — no estimate — when the plan has no file
     leaves (LocalRelation / LogicalRDD / Range sources) or any relation
-    leaf that is not a file source (a JDBC relation has no file index
-    to size). Files are counted from the index's cached listing
-    (``allFiles``), not from ``inputFiles()``, which builds a path
-    string per file; indexes without a listing (catalog tables) still
-    go through ``inputFiles()``."""
+    leaf that is not a listed file source (a JDBC relation has no file
+    index to size). Bytes and files come from the index's cached
+    listing (``sizeInBytes``, ``allFiles``), not from ``inputFiles()``,
+    which builds a path string per file. A partitioned catalog table
+    (``CatalogFileIndex``) is listed by pruning it to all partitions:
+    its own size is the table statistic, ``Long.MaxValue`` when the
+    table was never analyzed."""
     total = 0
     n_files = 0
     gateway = df.sparkSession.sparkContext._gateway
+    pkg = "org.apache.spark.sql.execution.datasources."
     stack = [df._jdf.queryExecution().analyzed()]
     while stack:
         node = stack.pop()
@@ -59,15 +62,18 @@ def _file_leaf_stats(df: DataFrame) -> tuple[int, int]:
             rel = node.relation()
             if rel.getClass().getSimpleName() != "HadoopFsRelation":
                 return 0, 0
-            total += rel.sizeInBytes()
             loc = rel.location()
-            if is_instance_of(
-                gateway, loc, "org.apache.spark.sql.execution.datasources."
-                "PartitioningAwareFileIndex"
+            if not is_instance_of(
+                gateway, loc, pkg + "PartitioningAwareFileIndex"
             ):
-                n_files += loc.allFiles().size()
-            else:
-                n_files += len(loc.inputFiles())
+                if not is_instance_of(gateway, loc, pkg + "CatalogFileIndex"):
+                    return 0, 0
+                jvm = df.sparkSession._jvm
+                loc = loc.filterPartitions(
+                    jvm.PythonUtils.toSeq(jvm.java.util.ArrayList())
+                )
+            total += loc.sizeInBytes()
+            n_files += loc.allFiles().size()
         for i in range(n):
             stack.append(children.apply(i))
     return total, n_files

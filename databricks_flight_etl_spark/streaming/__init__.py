@@ -19,7 +19,6 @@ from .jobs import (
     streaming_minhash_candidates,
     streaming_mrl_sketch,
     streaming_running_counts,
-    streaming_running_counts_tws,
     streaming_sessionize,
     streaming_upsert_parquet,
     streaming_heavy_hitters,
@@ -37,7 +36,6 @@ __all__ = [
     "streaming_minhash_candidates",
     "streaming_mrl_sketch",
     "streaming_running_counts",
-    "streaming_running_counts_tws",
     "streaming_sessionize",
     "streaming_upsert_parquet",
     "run_stream_to_memory",

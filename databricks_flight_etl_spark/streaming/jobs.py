@@ -27,7 +27,6 @@ __all__ = [
     "streaming_dedup",
     "streaming_sessionize",
     "streaming_running_counts",
-    "streaming_running_counts_tws",
     "streaming_upsert_parquet",
     "run_stream_to_memory",
     "streaming_hll",
@@ -298,74 +297,6 @@ def streaming_running_counts(
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-def streaming_running_counts_tws(
-    stream: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """EXPERIMENTAL ``transformWithStateInPandas`` twin of
-    streaming_running_counts — the Spark 4 arbitrary-stateful API
-    (SPARK-49564): a StatefulProcessor with named, schema'd state
-    handles (ValueState here; ListState / MapState / timers / TTL are
-    available on the same handle), instead of applyInPandasWithState's
-    single state tuple.
-
-    Experimental status (r4 verdict task #5): the JVM↔Python stateful
-    protocol needs protobuf (``google.protobuf``) and the RocksDB state
-    store provider; this container lacks protobuf and installs are
-    barred, so this function has NEVER executed end-to-end here — only
-    its ImportError gate is tested. The certified, supported API for
-    cross-batch custom state is ``streaming_running_counts``
-    (applyInPandasWithState), which implements identical logic and
-    runs everywhere.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise ImportError(
-            "transformWithStateInPandas requires protobuf (google.protobuf); "
-            "use streaming_running_counts (applyInPandasWithState) instead"
-        ) from exc
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningCounts(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("agg", "n long, s double")
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            n, s = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf[value_col].sum())
-            self._state.update((n, s))
-            yield pd.DataFrame(
-                {"key": [key[0]], "n_events": [n], "sum_value": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("sum_value", T.DoubleType()),
-        ]
-    )
-    return stream.groupBy(F.col(key_col)).transformWithStateInPandas(
-        statefulProcessor=_RunningCounts(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -10,6 +10,7 @@ from databricks_flight_etl_spark.operators import (
     completeness,
     consistency,
     dedup,
+    graph,
     relational,
     sessions,
     similarity,
@@ -111,12 +112,12 @@ def test_round2_ops_empty_inputs(spark):
         "text",
         "doc_id",
     ).count() == 0
-    assert dedup.dedup_survivors(docs, pairs, "doc_id").count() == 0
+    assert graph.dedup_survivors(docs, pairs, "doc_id").count() == 0
     # empty pairs over a NON-empty corpus keeps everything
     full = spark.createDataFrame(
         [(1, "a"), (2, "b")], "doc_id long, text string"
     )
-    assert dedup.dedup_survivors(full, pairs, "doc_id").count() == 2
+    assert graph.dedup_survivors(full, pairs, "doc_id").count() == 2
 
 
 def test_empty_inputs_round3_ops(spark):

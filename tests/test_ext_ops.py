@@ -783,7 +783,7 @@ def test_contamination_identical_doc_full_overlap(spark):
 
 
 def test_dedup_survivors(spark):
-    from databricks_flight_etl_spark.operators.dedup import dedup_survivors
+    from databricks_flight_etl_spark.operators.graph import dedup_survivors
 
     docs = spark.createDataFrame(
         [(i, f"d{i}") for i in range(8)], "doc_id long, text string"

@@ -230,67 +230,6 @@ def test_streaming_running_counts_state_survives_batches(spark, tmp_path):
     assert latest[2] == (1, 1.0)
 
 
-def test_streaming_running_counts_tws(spark, tmp_path):
-    """transformWithStateInPandas twin: same cross-batch totals as the
-    applyInPandasWithState form. Full run needs protobuf + RocksDB
-    state store; without protobuf the operator must raise its gated
-    ImportError (the no-install environment rule)."""
-    from databricks_flight_etl_spark.streaming import (
-        streaming_running_counts_tws,
-    )
-
-    d = str(tmp_path / "tws_events")
-    t = dt.datetime
-    schema = "user_id long, ts timestamp, value double"
-    spark.createDataFrame(
-        [(1, t(2024, 1, 1, 9, 0), 10.0), (1, t(2024, 1, 1, 9, 1), 5.0),
-         (2, t(2024, 1, 1, 9, 2), 1.0)],
-        schema,
-    ).write.mode("append").parquet(d)
-    stream = spark.readStream.schema(schema).format("parquet").load(d)
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="protobuf"):
-            streaming_running_counts_tws(stream, "user_id", "value")
-        return
-
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            streaming_running_counts_tws(stream, "user_id", "value")
-            .writeStream.format("memory").queryName("tws_out")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            spark.createDataFrame(
-                [(1, t(2024, 1, 1, 9, 5), 7.0)], schema
-            ).write.mode("append").parquet(d)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        latest = {}
-        for r in spark.table("tws_out").collect():
-            if r["key"] not in latest or r["n_events"] > latest[r["key"]][0]:
-                latest[r["key"]] = (r["n_events"], r["sum_value"])
-        assert latest[1] == (3, 22.0)
-        assert latest[2] == (1, 1.0)
-    finally:
-        if old is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", old
-            )
-
-
 def test_bucketed_join_is_shuffle_free(spark):
     """Two tables bucketed by the join key into the same bucket count
     join without any Exchange — the pay-the-shuffle-once-at-write

@@ -1,7 +1,8 @@
 """Round-7 checks: the distributed vocab_coverage rewrite (no
 unpartitioned full-vocabulary window), the string-proxy bucketing path
-of _hist_cumsum, and the histogram cache release contract."""
+of _hist_cumsum, and that no _hist_cumsum caller pins a histogram."""
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -152,37 +153,164 @@ def test_hist_cumsum_bucket_on_string_values(spark):
         want[v] = run
     for nb in (1, 2, 5, 64):
         out = _hist_cumsum(
-            df, "v", ["c"], bucket_on=proxy, n_buckets=nb, persist=False
+            df, "v", ["c"], bucket_on=proxy, n_buckets=nb
         )
         got = {r["v"]: r["__cum_c"] for r in out.collect()}
         assert got == want, nb
 
 
-def test_hist_cumsum_release_path(spark):
-    """Verdict task #3: after a _hist_cumsum-backed operator's action
-    completes, release_histogram_caches() frees every pinned block —
-    no persisted RDDs remain."""
+def _ks_reference(a, b):
+    """max |F_a(v) - F_b(v)| over the union of values, 6 decimals."""
+    return round(max(
+        abs(sum(x <= v for x in a) / len(a) - sum(x <= v for x in b) / len(b))
+        for v in set(a) | set(b)
+    ), 6)
+
+
+_KS_ROWS = [("a", v) for v in [1.0, 2.0, 3.0, 4.0]] + [
+    ("b", v) for v in [3.0, 4.0, 5.0, 6.0]
+]  # max CDF gap at 2: |2/4 - 0/4| = 0.5
+
+
+def _quantiles_exact(spark):
+    from databricks_flight_etl_spark.operators.accuracy import quantiles_exact
+
+    vals = [5.0, 1.0, 9.0, 3.0, 7.0, None, 3.0]  # sorted: 1,3,3,5,7,9
+    df = spark.createDataFrame([(v,) for v in vals], "x double")
+    out = quantiles_exact(df, "x", [0.0, 0.5, 0.9, 1.0])
+    return {float(r["q"]): r["value"] for r in out.collect()}, {
+        0.0: 1.0, 0.5: 3.0, 0.9: 7.0, 1.0: 9.0}
+
+
+def _grouped_quantiles(spark):
     from databricks_flight_etl_spark.operators.accuracy import (
-        ks_statistic, quantiles_exact, release_histogram_caches,
+        grouped_quantiles,
     )
 
-    release_histogram_caches()  # drop pins from earlier tests
+    rows = [("a", v) for v in [5.0, 1.0, 9.0, 3.0, 7.0, 3.0]] + [
+        ("b", v) for v in [30.0, 10.0, 20.0]
+    ]
+    df = spark.createDataFrame(rows, "g string, x double")
+    out = grouped_quantiles(df, ["g"], "x", [0.5, 0.9])
+    return {(r["g"], float(r["q"])): r["value"] for r in out.collect()}, {
+        ("a", 0.5): 3.0, ("a", 0.9): 7.0, ("b", 0.5): 20.0, ("b", 0.9): 20.0}
 
+
+def _rank_normalize(spark):
+    from databricks_flight_etl_spark.operators.accuracy import rank_normalize
+
+    df = spark.createDataFrame(
+        [(1, 10.0), (2, 20.0), (3, 20.0), (4, 40.0)], "id int, x double")
+    out = rank_normalize(df, "x", ["id"])
+    # below-counts: 10->0, 20->1 (both), 40->3 ; n-1 = 3
+    return {r["id"]: r["pct_rank"] for r in out.collect()}, {
+        1: 0.0, 2: 1 / 3, 3: 1 / 3, 4: 1.0}
+
+
+def _spearman_corr(spark):
+    from databricks_flight_etl_spark.operators.accuracy import spearman_corr
+
+    df = spark.createDataFrame(
+        [(1.0, 40.0), (2.0, 30.0), (3.0, 20.0), (4.0, 10.0)],
+        "a double, b double")
+    return spearman_corr(df, "a", "b").collect()[0]["rho"], -1.0
+
+
+def _ks_statistic(spark):
+    from databricks_flight_etl_spark.operators.accuracy import ks_statistic
+
+    df = spark.createDataFrame(_KS_ROWS, "g string, x double")
+    r = ks_statistic(df, "x", "g", "a", "b").first()
+    return (r["ks_stat"], r["n_a"], r["n_b"]), (0.5, 4, 4)
+
+
+def _ks_statistic_grouped(spark):
+    from databricks_flight_etl_spark.operators.accuracy import (
+        ks_statistic_grouped,
+    )
+
+    rows = [("s1", g, v) for g, v in _KS_ROWS] + [("s2", "a", 1.0)]
+    df = spark.createDataFrame(rows, "seg string, g string, x double")
+    out = ks_statistic_grouped(df, "x", "g", "a", "b", ["seg"])
+    return {r["seg"]: (r["ks_stat"], r["n_a"], r["n_b"])
+            for r in out.collect()}, {"s1": (0.5, 4, 4), "s2": (None, 1, 0)}
+
+
+def _ks_drift_report(spark):
+    from databricks_flight_etl_spark.operators.accuracy import ks_drift_report
+
+    rows = [(g, v, None) for g, v in _KS_ROWS]
+    df = spark.createDataFrame(rows, "g string, x double, z double")
+    out = ks_drift_report(df, ["x", "z"], "g", "a", "b")
+    return {r["column"]: (r["ks_stat"], r["n_a"], r["n_b"])
+            for r in out.collect()}, {"x": (0.5, 4, 4), "z": (None, 0, 0)}
+
+
+def _vocab_coverage(spark):
+    from databricks_flight_etl_spark.operators.text import vocab_coverage
+
+    df = spark.createDataFrame([(1, "a a a b b c")], "doc_id long, text string")
+    out = vocab_coverage(df, "text")
+    return sorted((r["rank"], r["token"], r["n"], r["coverage"])
+                  for r in out.collect()), [
+        (1, "a", 3, 0.5), (2, "b", 2, round(5 / 6, 6)), (3, "c", 1, 1.0)]
+
+
+def _auc_roc(spark):
+    from databricks_flight_etl_spark.operators.model_eval import auc_roc
+
+    # pos {0.9, 0.5, 0.5}, neg {0.5, 0.1}: U = 5 -> AUC = 5 / (3*2)
+    rows = [(0.9, 1), (0.5, 1), (0.5, 1), (0.5, 0), (0.1, 0)]
+    r = auc_roc(spark.createDataFrame(rows, "s double, y int"), "s", "y") \
+        .first()
+    return (r["auc"], r["n_pos"], r["n_neg"]), (round(5 / 6, 6), 3, 2)
+
+
+def _interleaved(spark):
+    """Two callers built lazily, then both collected."""
+    from databricks_flight_etl_spark.operators.accuracy import ks_drift_report
+    from databricks_flight_etl_spark.operators.text import vocab_coverage
+
+    ev = spark.range(400).select(
+        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("g"),
+        (F.col("id") % 13).cast("double").alias("x"),
+        (F.col("id") % 7).cast("double").alias("y"),
+    )
+    docs = spark.createDataFrame(
+        [("a a b",), ("b c",), ("c c c d",)], "text string"
+    )
+    drift = ks_drift_report(ev, ["x", "y"], "g", "a", "b")
+    curve = vocab_coverage(docs, "text")
+    got = (
+        {r.column: r.ks_stat for r in drift.collect()},
+        {(r.token, r.n, r.rank, r.coverage) for r in curve.collect()},
+    )
+    side = {g: [i for i in range(400) if (i % 2 == 0) == (g == "a")]
+            for g in "ab"}
+    want = (
+        {c: _ks_reference([float(i % m) for i in side["a"]],
+                          [float(i % m) for i in side["b"]])
+         for c, m in (("x", 13), ("y", 7))},
+        {("c", 4, 1, round(4 / 9, 6)), ("a", 2, 2, round(6 / 9, 6)),
+         ("b", 2, 3, round(8 / 9, 6)), ("d", 1, 4, 1.0)},
+    )
+    return got, want
+
+
+@pytest.mark.parametrize("case", [
+    _quantiles_exact, _grouped_quantiles, _rank_normalize, _spearman_corr,
+    _ks_statistic, _ks_statistic_grouped, _ks_drift_report,
+    _vocab_coverage, _auc_roc, _interleaved,
+], ids=lambda f: f.__name__.lstrip("_"))
+def test_hist_cumsum_callers_pin_nothing(spark, case):
+    """Every _hist_cumsum caller returns one lazy plan: building and
+    collecting it leaves the session's persistent RDDs as they were,
+    and the result equals the hand-checked reference."""
     def rdd_ids():
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         return {int(k) for k in jmap.keySet().toArray()}
 
-    base = rdd_ids()
-    a = spark.range(200).select(
-        (F.col("id") % 17).cast("double").alias("x"),
-        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("g"),
-    )
-    ks_statistic(a, "x", "g", "a", "b").collect()
-    quantiles_exact(a, "x", [0.5, 0.9]).collect()
-    pinned = rdd_ids() - base
-    assert pinned  # pins exist pre-release
-    released = release_histogram_caches()
-    assert released >= 2
-    assert not (rdd_ids() & pinned)  # every new pin is gone
-    # idempotent
-    assert release_histogram_caches() == 0
+    before = rdd_ids()
+    got, want = case(spark)
+    assert rdd_ids() == before
+    assert got == want

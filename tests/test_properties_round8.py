@@ -1,11 +1,11 @@
-"""Round-8 checks: the five round-7 ADVICE fixes (bigint vocab rank,
-observer-path corruption raise, pinned-histogram lock/cap, strip_html
-C0-sentinel collision, linear-scorer weight-range validation) and the
-verdict-task interleaved cache-release contract."""
+"""Round-8 checks: the round-7 ADVICE fixes (bigint vocab rank,
+observer-path corruption raise, strip_html C0-sentinel collision,
+linear-scorer weight-range validation). The pinned-histogram registry
+checks went with the registry; tests/test_properties_round7.py checks
+that no _hist_cumsum caller pins."""
 
 import math
 import os
-import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -65,68 +65,6 @@ def test_read_state_observer_raises_on_corrupt_old(spark, tmp_path):
     seen = _read_state(spark, st, rollback=False)
     assert seen is not None and seen.count() == 3
     assert os.path.exists(st + ".__old") and not os.path.exists(st)
-
-
-# ---------------------------------------------------------------- #
-# ADVICE #3 + verdict task #5 — pinned-histogram registry           #
-# ---------------------------------------------------------------- #
-
-def test_release_interleaved_operators(spark):
-    """Two _hist_cumsum-backed operators interleaved, then a release
-    BETWEEN building and materializing their lazy results: both must
-    still compute correctly (unpersist costs a recompute, never a
-    wrong answer)."""
-    from databricks_flight_etl_spark.operators.accuracy import (
-        ks_drift_report, release_histogram_caches,
-    )
-    from databricks_flight_etl_spark.operators.text import vocab_coverage
-
-    release_histogram_caches()
-
-    ev = spark.range(400).select(
-        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("g"),
-        (F.col("id") % 13).cast("double").alias("x"),
-        (F.col("id") % 7).cast("double").alias("y"),
-    )
-    docs = spark.createDataFrame(
-        [("a a b",), ("b c",), ("c c c d",)], "text string"
-    )
-    # build BOTH lazily (each pins histograms), release, THEN act
-    drift = ks_drift_report(ev, ["x", "y"], "g", "a", "b")
-    curve = vocab_coverage(docs, "text")
-    released = release_histogram_caches()
-    assert released > 0
-
-    got = {r.column: r.ks_stat for r in drift.collect()}
-    assert set(got) == {"x", "y"} and all(v is not None for v in got.values())
-    rows = {(r.token, r.n, r.rank) for r in curve.collect()}
-    assert ("c", 4, 1) in rows and ("a", 2, 2) in rows
-    release_histogram_caches()
-
-
-def test_pinned_registry_is_capped_and_thread_safe(spark):
-    """_PINNED_HISTS is lock-guarded and FIFO-capped: concurrent
-    registration from many threads never grows past _MAX_PINNED, so a
-    long-lived session that never calls release cannot accumulate
-    disk blocks without bound."""
-    from databricks_flight_etl_spark.operators import accuracy as acc
-
-    acc.release_histogram_caches()
-    frames = [spark.range(1) for _ in range(8)]
-
-    def worker():
-        for _ in range(20):
-            for fr in frames:
-                acc._register_pin(fr)
-
-    threads = [threading.Thread(target=worker) for _ in range(6)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert len(acc._PINNED_HISTS) <= acc._MAX_PINNED
-    assert acc.release_histogram_caches() <= acc._MAX_PINNED
-    assert len(acc._PINNED_HISTS) == 0
 
 
 # ---------------------------------------------------------------- #

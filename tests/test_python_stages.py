@@ -17,6 +17,7 @@ out of a Python list or RDD.
 from __future__ import annotations
 
 import ast
+import os
 import pathlib
 import uuid
 
@@ -182,7 +183,7 @@ def test_file_count_matches_input_files(spark, tmp_path):
     """The file count comes from the index listing, not from
     ``inputFiles()``; both count the same files. A partitioned catalog
     table has no listing until it is pruned (``CatalogFileIndex``) and
-    still counts through ``inputFiles()``."""
+    is counted after pruning to all partitions."""
     path = str(tmp_path / "multi.parquet")
     spark.range(400).selectExpr("id", "id % 2 as p").repartition(2).write \
         .partitionBy("p").parquet(path)
@@ -198,6 +199,34 @@ def test_file_count_matches_input_files(spark, tmp_path):
     finally:
         spark.sql(f"DROP TABLE {table}")
 
+
+
+def test_partitioned_catalog_table_is_sized_by_its_files(spark, tmp_path):
+    """An unanalyzed partitioned catalog table reports ``Long.MaxValue``
+    as its relation size; the estimate is its files' bytes instead, so
+    the size-targeted sink writes it."""
+    from databricks_flight_etl_spark.plans import estimate_bytes
+    from databricks_flight_etl_spark.sources import write_parquet
+
+    path = str(tmp_path / "cat.parquet")
+    spark.range(40).selectExpr("id", "id % 2 as p").repartition(2).write \
+        .partitionBy("p").parquet(path)
+    table = f"t_{uuid.uuid4().hex}"
+    spark.sql(f"CREATE TABLE {table} (id bigint, p bigint) USING parquet "
+              f"PARTITIONED BY (p) LOCATION '{path}'")
+    try:
+        spark.sql(f"MSCK REPAIR TABLE {table}")
+        df = spark.table(table)
+        files = df.inputFiles()
+        assert len(files) == 4
+        want = sum(os.path.getsize(f.removeprefix("file:")) for f in files)
+        assert estimate_bytes(df) == want < 2**63 - 1
+        out = str(tmp_path / "out.parquet")
+        assert write_parquet(df, out) == 1
+        got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+        assert got == [(i, i % 2) for i in range(40)]
+    finally:
+        spark.sql(f"DROP TABLE {table}")
 
 def test_dedup_clusters_has_no_python_rdd(spark):
     """q_dedup_clusters' 51-row label table is a LocalRelation: no

@@ -206,17 +206,17 @@ def test_latest_per_key(spark):
 
 
 def test_deterministic_sample_stable_across_partitioning(spark):
-    from databricks_flight_etl_spark.operators import relational
+    from databricks_flight_etl_spark.operators.sampling import (
+        deterministic_sample,
+    )
 
     df = spark.createDataFrame([(i,) for i in range(5000)], "k long")
-    s1 = {r["k"] for r in
-          relational.deterministic_sample(df, "k", 0.2).collect()}
+    s1 = {r["k"] for r in deterministic_sample(df, "k", 0.2).collect()}
     s2 = {r["k"] for r in
-          relational.deterministic_sample(df.repartition(7), "k", 0.2).collect()}
+          deterministic_sample(df.repartition(7), "k", 0.2).collect()}
     assert s1 == s2                       # layout-independent
     assert 0.15 < len(s1) / 5000 < 0.25   # ≈ fraction
-    sub = {r["k"] for r in
-           relational.deterministic_sample(df, "k", 0.05).collect()}
+    sub = {r["k"] for r in deterministic_sample(df, "k", 0.05).collect()}
     assert sub <= s1                      # nested thresholds ⇒ nested samples
 
 

@@ -370,7 +370,6 @@ def _vocab_curve(docs):
     the old form ran ONE window over the whole vocabulary)."""
     from pyspark.sql import functions as F
 
-    from databricks_flight_etl_spark.operators import accuracy
     from databricks_flight_etl_spark.operators.text import vocab_coverage
 
     hi = docs.select(
@@ -392,9 +391,7 @@ def _vocab_curve(docs):
             ),
         ).alias("text"),
     )
-    n = vocab_coverage(hi, "text").count()
-    accuracy.release_histogram_caches()
-    return n
+    return vocab_coverage(hi, "text").count()
 
 
 def _enrich_text(docs, n_unique=80):
