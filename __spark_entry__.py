@@ -310,8 +310,8 @@ def q_compound_key_dups(spark, sf_dir):
         "event_type",
         F.unix_millis(F.date_trunc("minute", F.col("ts"))).alias("minute_ms"),
     )
-    return uniqueness.key_duplicate_groups(
-        ev, ["user_id", "event_type", "minute_ms"]
+    return uniqueness.duplicate_groups(
+        ev, subset=["user_id", "event_type", "minute_ms"]
     )
 
 
@@ -1570,16 +1570,14 @@ def q_containment_join(spark, sf_dir):
 
 def q_grouped_outliers(spark, sf_dir):
     """Per-event-type Tukey fences (heteroscedastic segments get their
-    own quartiles) — grouped_quantiles keeps everything under
+    own quartiles) — quantiles_exact(by=...) keeps everything under
     partitioned windows; fences join back as a narrow filter. Oracle
     replays per-group fences."""
-    from databricks_flight_etl_spark.operators.accuracy import (
-        grouped_outliers_iqr,
-    )
+    from databricks_flight_etl_spark.operators.accuracy import outliers_iqr
 
     ev = _t(spark, sf_dir, "events")
     return (
-        grouped_outliers_iqr(ev, ["event_type"], "value")
+        outliers_iqr(ev, "value", by=["event_type"])
         .select("event_id", "event_type", "value")
         .orderBy("event_id")
     )
@@ -2225,10 +2223,10 @@ def q_streaming_interval_join(spark, sf_dir):
     stage = tempfile.mkdtemp(prefix="flight_etl_ssj_")
     shutil.copy(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
 
-    from databricks_flight_etl_spark.sources import ns_long_to_timestamp
+    from databricks_flight_etl_spark.sources import normalize_timestamp
 
     def src():
-        return ns_long_to_timestamp(
+        return normalize_timestamp(
             spark.readStream.schema(raw_schema).format(
                 "parquet").load(stage),
             ["ts"],
@@ -2368,17 +2366,15 @@ def q_hll_per_day(spark, sf_dir):
     """Distinct users per day at sketch cost: per-group HLL register
     tables (bounded by days·2^p rows, one shuffle on (day, bucket)) —
     certified register-for-register via the portable md5 family. The
-    ESTIMATOR stays library-side (hll_estimate_grouped, tolerance-
+    ESTIMATOR stays library-side (hll_estimate(by=...), tolerance-
     tested): its ln()/ordered-double-sum path can differ across
     engines in the last ulp, which an exact value-hash gate must not
     depend on."""
-    from databricks_flight_etl_spark.operators.sketches import (
-        hll_build_grouped,
-    )
+    from databricks_flight_etl_spark.operators.sketches import hll_build
 
     ev = _t(spark, sf_dir, "events")
     days = ev.select(F.to_date("ts").alias("day"), "user_id")
-    sk = hll_build_grouped(days, ["day"], "user_id", p=10)
+    sk = hll_build(days, "user_id", p=10, by=["day"])
     return sk.orderBy("day", "bucket")
 
 
@@ -2388,13 +2384,11 @@ def q_hll_rollup(spark, sf_dir):
     oracle builds the whole-corpus registers directly. This is why
     daily sketches answer monthly distinct questions without
     rescanning a 100 TB history."""
-    from databricks_flight_etl_spark.operators.sketches import (
-        hll_build_grouped,
-    )
+    from databricks_flight_etl_spark.operators.sketches import hll_build
 
     ev = _t(spark, sf_dir, "events")
     days = ev.select(F.to_date("ts").alias("day"), "user_id")
-    per_day = hll_build_grouped(days, ["day"], "user_id", p=10)
+    per_day = hll_build(days, "user_id", p=10, by=["day"])
     return (
         per_day.groupBy("bucket")
         .agg(F.max("rho").alias("rho"))
@@ -2762,18 +2756,18 @@ def q_heavy_hitters(spark, sf_dir):
 
 
 def q_grouped_quantiles(spark, sf_dir):
-    """Per-group EXACT quantiles: all windows are PARTITIONED by the
-    group key — no single-partition stage anywhere, so the operator
-    scales with group count; only per-group distinct-value cardinality
-    bounds the window. Certifies the same type-1 rank rule as
-    q_quantiles_exact, per group."""
+    """Per-group EXACT quantiles (quantiles_exact with by=): all
+    windows are PARTITIONED on (group key, value bucket) — no
+    single-partition stage anywhere, so the operator scales with group
+    count and per-group distinct-value cardinality. Certifies the same
+    type-1 rank rule as q_quantiles_exact, per group."""
     from databricks_flight_etl_spark.operators.accuracy import (
-        grouped_quantiles,
+        quantiles_exact,
     )
 
     ev = _t(spark, sf_dir, "events")
-    return grouped_quantiles(
-        ev, ["event_type"], "value", [0.25, 0.5, 0.9]
+    return quantiles_exact(
+        ev, "value", [0.25, 0.5, 0.9], by=["event_type"]
     )
 
 
@@ -2967,12 +2961,12 @@ def q_interpolate_gaps(spark, sf_dir):
 
 def q_quantile_sketch_grouped(spark, sf_dir):
     """X8 per-group MRL sketches in the exact (k ≥ n) configuration,
-    split by event-id parity, rolled up via mrl_merge_grouped, read
+    split by event-id parity, rolled up via mrl_merge(by=...), read
     out per group — the 'p99 per day → per week' rollup path,
     certified by the SAME oracle as q_grouped_quantiles (the readout
     is its exact rank formula when no collapse fires)."""
     from databricks_flight_etl_spark.operators.sketches import (
-        mrl_merge_grouped, mrl_quantiles_grouped, mrl_sketch_grouped,
+        mrl_merge, mrl_quantiles, mrl_sketch_grouped,
     )
 
     ev = _t(spark, sf_dir, "events")
@@ -2983,10 +2977,8 @@ def q_quantile_sketch_grouped(spark, sf_dir):
     b = mrl_sketch_grouped(
         ev.where(F.col("event_id") % 2 == 1), ["event_type"], "value", k=k
     )
-    rolled = mrl_merge_grouped(a.unionByName(b), ["event_type"], k=k)
-    return mrl_quantiles_grouped(
-        rolled, ["event_type"], [0.25, 0.5, 0.9]
-    )
+    rolled = mrl_merge(a.unionByName(b), k=k, by=["event_type"])
+    return mrl_quantiles(rolled, [0.25, 0.5, 0.9], by=["event_type"])
 
 
 def q_orc_roundtrip(spark, sf_dir):
@@ -3396,7 +3388,7 @@ def q_streaming_day_counts(spark, sf_dir):
     1-day windows → memory sink. After processAllAvailable the update-
     mode state equals the batch per-day counts exactly, so the oracle
     is the same SQL as q_events_per_day."""
-    from databricks_flight_etl_spark.sources import ns_long_to_timestamp
+    from databricks_flight_etl_spark.sources import normalize_timestamp
     from databricks_flight_etl_spark.streaming import streaming_day_counts
 
     tune(spark)
@@ -3413,7 +3405,7 @@ def q_streaming_day_counts(spark, sf_dir):
         spark.readStream.schema(raw_schema).format("parquet").load(stage)
     )
     out = streaming_day_counts(
-        ns_long_to_timestamp(stream, ["ts"]), "ts", watermark="2 days"
+        normalize_timestamp(stream, ["ts"]), "ts", watermark="2 days"
     )
     # one state store per shuffle partition: size to the open-window
     # cardinality (~30 day windows), not the batch default — 32 stores
@@ -5312,15 +5304,13 @@ def q_ks_drift_grouped(spark, sf_dir):
     sharing the distributed two-level prefix-sum — every window is
     partitioned on (segment, value-range bucket), so neither segment
     count nor value cardinality lands on a single task."""
-    from databricks_flight_etl_spark.operators.accuracy import (
-        ks_statistic_grouped,
-    )
+    from databricks_flight_etl_spark.operators.accuracy import ks_statistic
 
     ev = _t(spark, sf_dir, "events").withColumn(
         "seg", F.col("user_id") % 3
     )
-    return ks_statistic_grouped(
-        ev, "value", "event_type", "view", "purchase", ["seg"]
+    return ks_statistic(
+        ev, "value", "event_type", "view", "purchase", by=["seg"]
     )
 
 

@@ -18,13 +18,13 @@ from pyspark.sql import types as T
 __all__ = ["summary_stats", "histogram", "describe",
            "moving_average", "zscore_by_group",
            "quantiles_exact", "quantiles_approx", "outliers_iqr",
-           "grouped_quantiles", "histogram_equidepth",
+           "histogram_equidepth",
            "rank_normalize", "correlation_matrix",
            "ab_welch_t", "chi_square_independence", "spearman_corr",
-           "grouped_outliers_iqr", "trailing_range_agg",
+           "trailing_range_agg",
            "psi_drift", "trimmed_mean_by_group", "winsorized_mean_by_group",
            "group_linear_trend", "benford_profile", "grouped_pearson",
-           "ks_statistic", "ks_statistic_grouped", "ks_drift_report",
+           "ks_statistic", "ks_drift_report",
            "mad_grouped"]
 
 
@@ -269,34 +269,37 @@ def _hist_cumsum(
 
 
 def quantiles_exact(
-    df: DataFrame, col: str, qs: list[float]
+    df: DataFrame, col: str, qs: list[float], *,
+    by: list[str] | None = None,
 ) -> DataFrame:
-    """EXACT distributed quantiles of ``col``: (q, value) rows, lower
-    (type-1 / discrete) interpolation — the value at sorted position
-    floor(q·(n−1)) among the n non-null values.
+    """EXACT distributed quantiles of ``col``: (by…, q, value) rows,
+    lower (type-1 / discrete) interpolation — the value at sorted
+    position floor(q·(n−1)) among the n non-null values (of each ``by``
+    group; one set of rows per group, ordered by (by…, q)).
 
     Scale shape: never sorts the raw rows. One group-by collapses the
-    input to its VALUE HISTOGRAM, the cumulative count comes from the
-    shared distributed prefix-sum (:func:`_hist_cumsum` — bucketed
-    windows, no single-partition stage even when distinct ≈ rows, e.g.
-    a continuous double), and each quantile picks the first value whose
-    cumulative count covers its target rank. For one-pass fixed-memory
-    estimates use ``quantiles_approx`` (GK sketch).
+    input to its (by…, value) HISTOGRAM, the cumulative count comes
+    from the shared distributed prefix-sum (:func:`_hist_cumsum` —
+    windows partitioned on (by…, value bucket), so neither group count
+    nor a continuous column's distinct ≈ rows lands on one task), and
+    each quantile picks the first value whose cumulative count covers
+    its target rank. For one-pass fixed-memory estimates use
+    ``quantiles_approx`` (GK sketch).
     """
     for q in qs:
         if not 0.0 <= q <= 1.0:
             raise ValueError(f"quantile must be in [0, 1], got {q}")
+    by = list(by or [])
     hist = (
         df.where(F.col(col).isNotNull())
-        .groupBy(F.col(col).alias("value"))
+        .groupBy(*by, F.col(col).alias("value"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    total = hist.agg(F.sum("cnt").alias("n"))
-    cum = (
-        _hist_cumsum(hist, "value", ["cnt"])
-        .select("value", F.col("__cum_cnt").alias("cum"))
-        .crossJoin(F.broadcast(total))
+    totals = hist.groupBy(*by).agg(F.sum("cnt").alias("n"))
+    cum = _hist_cumsum(hist, "value", ["cnt"], by=by).select(
+        *by, "value", F.col("__cum_cnt").alias("cum")
     )
+    cum = cum.join(totals, by) if by else cum.crossJoin(F.broadcast(totals))
     targets = F.explode(
         F.array(*[
             F.struct(
@@ -306,13 +309,13 @@ def quantiles_exact(
             for q in qs
         ])
     ).alias("t")
-    picked = (
-        cum.select("value", "cum", targets)
+    return (
+        cum.select(*by, "value", "cum", targets)
         .where(F.col("cum") >= F.col("t.rank"))
-        .groupBy(F.col("t.q").alias("q"))
+        .groupBy(*by, F.col("t.q").alias("q"))
         .agg(F.min("value").alias("value"))
+        .orderBy(*by, "q")
     )
-    return picked.orderBy("q")
 
 
 def quantiles_approx(
@@ -334,67 +337,32 @@ def quantiles_approx(
 
 
 def outliers_iqr(
-    df: DataFrame, col: str, factor: float = 1.5
+    df: DataFrame, col: str, factor: float = 1.5, *,
+    by: list[str] | None = None,
 ) -> DataFrame:
     """Tukey-fence outliers: rows where ``col`` falls outside
     [Q1 − factor·IQR, Q3 + factor·IQR], quartiles computed by the exact
-    histogram method above and broadcast back — the input scan stays a
-    narrow filter."""
-    qdf = quantiles_exact(df, col, [0.25, 0.75])
-    fences = qdf.agg(
+    histogram method above — the input scan stays a narrow filter.
+    With ``by`` each group gets its OWN fences (heteroscedastic
+    segments make global fences blind or trigger-happy per segment),
+    joined back on the group key, which then leads the output columns;
+    without it the one fence row is broadcast."""
+    by = list(by or [])
+    qdf = quantiles_exact(df, col, [0.25, 0.75], by=by)
+    fences = qdf.groupBy(*by).agg(
         F.min(F.when(F.col("q") == 0.25, F.col("value"))).alias("q1"),
         F.min(F.when(F.col("q") == 0.75, F.col("value"))).alias("q3"),
     ).select(
-        "q1", "q3",
+        *by,
         (F.col("q1") - factor * (F.col("q3") - F.col("q1"))).alias("lo"),
         (F.col("q3") + factor * (F.col("q3") - F.col("q1"))).alias("hi"),
     )
+    fenced = (
+        df.join(fences, by) if by else df.crossJoin(F.broadcast(fences))
+    )
     return (
-        df.crossJoin(F.broadcast(fences.select("lo", "hi")))
-        .where((F.col(col) < F.col("lo")) | (F.col(col) > F.col("hi")))
+        fenced.where((F.col(col) < F.col("lo")) | (F.col(col) > F.col("hi")))
         .drop("lo", "hi")
-    )
-
-
-def grouped_quantiles(
-    df: DataFrame, group_cols: list[str], col: str, qs: list[float]
-) -> DataFrame:
-    """Per-group EXACT quantiles: (group_cols…, q, value), same type-1
-    rank rule as :func:`quantiles_exact`. Cumulative counts via the
-    shared distributed prefix-sum (:func:`_hist_cumsum` with
-    ``by=group_cols``): windows are partitioned on (group…, value
-    bucket), so BOTH group count and per-group distinct-value
-    cardinality parallelize — one giant group with a continuous column
-    no longer lands on a single task."""
-    for q in qs:
-        if not 0.0 <= q <= 1.0:
-            raise ValueError(f"quantile must be in [0, 1], got {q}")
-    hist = (
-        df.where(F.col(col).isNotNull())
-        .groupBy(*group_cols, F.col(col).alias("value"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    totals = hist.groupBy(*group_cols).agg(F.sum("cnt").alias("n"))
-    cum = (
-        _hist_cumsum(hist, "value", ["cnt"], by=list(group_cols))
-        .select(*group_cols, "value", F.col("__cum_cnt").alias("cum"))
-        .join(totals, list(group_cols))
-    )
-    targets = F.explode(
-        F.array(*[
-            F.struct(
-                F.lit(q).alias("q"),
-                (F.floor(F.lit(q) * (F.col("n") - 1)) + 1).alias("rank"),
-            )
-            for q in qs
-        ])
-    ).alias("t")
-    return (
-        cum.select(*group_cols, "value", "cum", targets)
-        .where(F.col("cum") >= F.col("t.rank"))
-        .groupBy(*group_cols, F.col("t.q").alias("q"))
-        .agg(F.min("value").alias("value"))
-        .orderBy(*group_cols, "q")
     )
 
 
@@ -691,31 +659,6 @@ def spearman_corr(
     return agg.select(
         F.round(rho, decimals).alias("rho"),
         F.col("n").cast("long").alias("n"),
-    )
-
-
-def grouped_outliers_iqr(
-    df: DataFrame, group_cols: list[str], col: str,
-    factor: float = 1.5,
-) -> DataFrame:
-    """Per-group Tukey-fence outliers: each group gets its OWN exact
-    quartile fences (heteroscedastic data makes global fences either
-    blind or trigger-happy per segment). Fences from
-    :func:`grouped_quantiles` — everything stays under partitioned
-    windows — joined back on the group key as a narrow filter."""
-    qdf = grouped_quantiles(df, group_cols, col, [0.25, 0.75])
-    fences = qdf.groupBy(*group_cols).agg(
-        F.min(F.when(F.col("q") == 0.25, F.col("value"))).alias("q1"),
-        F.min(F.when(F.col("q") == 0.75, F.col("value"))).alias("q3"),
-    ).select(
-        *group_cols,
-        (F.col("q1") - factor * (F.col("q3") - F.col("q1"))).alias("lo"),
-        (F.col("q3") + factor * (F.col("q3") - F.col("q1"))).alias("hi"),
-    )
-    return (
-        df.join(fences, group_cols)
-        .where((F.col(col) < F.col("lo")) | (F.col(col) > F.col("hi")))
-        .drop("lo", "hi")
     )
 
 
@@ -1079,24 +1022,45 @@ def grouped_pearson(
     )
 
 
-def _ks_cumulative(
+def ks_statistic(
     df: DataFrame, value_col: str, group_col: str,
-    group_a, group_b, by: list[str], n_buckets: int, max_points: int | None,
-):
-    """Shared KS engine: per-(by…, value) cumulative a/b counts via the
-    library's distributed two-level prefix-sum (:func:`_hist_cumsum` —
-    bucketed windows, no task ever holds a whole distinct-value
-    surface), plus the per-(by…) totals.
+    group_a, group_b, decimals: int = 6,
+    n_buckets: int = 64, max_points: int | None = None, *,
+    by: list[str] | None = None,
+) -> DataFrame:
+    """EXACT two-sample Kolmogorov–Smirnov statistic between the value
+    distributions of two groups: ``max |F_a(x) − F_b(x)|`` over the
+    union of observed values — the standard drift test for a numeric
+    feature between two snapshots/cohorts (PSI's rank-free sibling;
+    unlike :func:`psi_drift` it needs no binning choice by default).
+    Output (by…, ks_stat, n_a, n_b); nulls excluded. Without ``by`` it
+    is ALWAYS exactly one row, even on empty input; with ``by`` (per
+    segment — country, model version — in ONE pass, no per-segment job
+    loop) one row per group that has any a/b rows, ordered by the
+    group. When either side has zero non-null values there is no
+    defined KS distance: ``ks_stat`` is null and the n counts say which
+    side was empty (0) — callers doing ``.first()["ks_stat"]`` get an
+    explicit None, never a missing row.
 
-    ``max_points`` quantizes values to equi-width bin left edges FIRST,
-    capping the distinct-value surface outright: the empirical CDFs are
-    then evaluated only at bin boundaries, which underestimates the
-    true D by at most the largest single-bin probability mass
-    (≈ 1/max_points for non-pathological distributions).
+    Engine shape: one hash-agg to the per-(by…, value) a/b counts, then
+    a DISTRIBUTED two-level prefix-sum over the distinct-value
+    histogram (equi-width range buckets + per-(by…, bucket) windows +
+    an ≤ n_buckets-row offset table — :func:`_hist_cumsum`), then a max
+    per group. No single task ever holds the whole distinct-value
+    surface, so the operator survives a continuous feature where
+    distinct ≈ rows — the exact case a drift test is pointed at. The
+    raw rows are never sorted. Pure integer counts divided once at the
+    end keep the doubles engine-reproducible (and identical to the
+    single-window construction this replaced — the route changed, not
+    the numbers).
 
-    Returns (cum, totals): ``cum`` has (by…, __cuma, __cumb); ``totals``
-    has (by…, __na, __nb) — 1 row (possibly null counts) when ``by`` is
-    empty."""
+    ``max_points`` (optional) quantizes values to that many equi-width
+    bin LEFT EDGES first, bounding the histogram outright: the CDFs are
+    then evaluated only at bin boundaries, which underestimates D by at
+    most the largest single-bin probability mass (≈ 1/max_points for
+    non-pathological distributions) — the psi_drift-style escape hatch
+    for adversarially skewed value distributions."""
+    by = list(by or [])
     t = df.where(
         F.col(group_col).isin(group_a, group_b)
         & F.col(value_col).isNotNull()
@@ -1134,113 +1098,28 @@ def _ks_cumulative(
         F.sum("__a").alias("__ca"),
         F.sum(F.lit(1) - F.col("__a")).alias("__cb"),
     )
+    totals = hist.groupBy(*by).agg(
+        F.sum("__ca").alias("__na"), F.sum("__cb").alias("__nb")
+    )
     cum = _hist_cumsum(hist, "__v", ["__ca", "__cb"], by=by,
-                       n_buckets=n_buckets).select(
-        *by,
-        F.col("__cum___ca").alias("__cuma"),
-        F.col("__cum___cb").alias("__cumb"),
+                       n_buckets=n_buckets)
+    joined = (
+        cum.join(totals, by) if by else cum.crossJoin(F.broadcast(totals))
     )
-    if by:
-        totals = hist.groupBy(*by).agg(
-            F.sum("__ca").alias("__na"), F.sum("__cb").alias("__nb")
-        )
-    else:
-        totals = hist.agg(
-            F.sum("__ca").alias("__na"), F.sum("__cb").alias("__nb")
-        )
-    return cum, totals
-
-
-def ks_statistic(
-    df: DataFrame, value_col: str, group_col: str,
-    group_a, group_b, decimals: int = 6,
-    n_buckets: int = 64, max_points: int | None = None,
-) -> DataFrame:
-    """EXACT two-sample Kolmogorov–Smirnov statistic between the value
-    distributions of two groups: ``max |F_a(x) − F_b(x)|`` over the
-    union of observed values — the standard drift test for a numeric
-    feature between two snapshots/cohorts (PSI's rank-free sibling;
-    unlike :func:`psi_drift` it needs no binning choice by default).
-    Output is ALWAYS exactly one row (ks_stat, n_a, n_b); nulls
-    excluded. When either group has zero non-null values there is no
-    defined KS distance: ``ks_stat`` is null and the n counts say which
-    side was empty (0) — callers doing ``.first()["ks_stat"]`` get an
-    explicit None, never a missing row.
-
-    Engine shape: one hash-agg to the per-(value) a/b counts, then a
-    DISTRIBUTED two-level prefix-sum over the distinct-value histogram
-    (equi-width range buckets + per-bucket windows + an ≤ n_buckets-row
-    offset table — see :func:`_ks_cumulative`), then a global max. No
-    single task ever holds the whole distinct-value surface, so the
-    operator survives a continuous feature where distinct ≈ rows — the
-    exact case a drift test is pointed at. The raw rows are never
-    sorted. Pure integer counts divided once at the end keep the
-    doubles engine-reproducible (and identical to the single-window
-    construction this replaced — the route changed, not the numbers).
-
-    ``max_points`` (optional) bins values to that many equi-width bin
-    edges first, bounding the histogram outright at the cost of
-    underestimating D by at most the largest single-bin probability
-    mass — the psi_drift-style escape hatch for adversarially skewed
-    value distributions."""
-    cum, totals = _ks_cumulative(
-        df, value_col, group_col, group_a, group_b, [], n_buckets, max_points,
-    )
-    dmax = cum.crossJoin(F.broadcast(totals)).agg(
+    out = joined.groupBy(*by).agg(
         F.round(
             F.max(
                 F.abs(
-                    F.col("__cuma") / F.col("__na")
-                    - F.col("__cumb") / F.col("__nb")
+                    F.col("__cum___ca") / F.col("__na")
+                    - F.col("__cum___cb") / F.col("__nb")
                 )
             ),
             decimals,
-        ).alias("ks_stat")
+        ).alias("ks_stat"),
+        F.coalesce(F.first("__na"), F.lit(0)).cast("long").alias("n_a"),
+        F.coalesce(F.first("__nb"), F.lit(0)).cast("long").alias("n_b"),
     )
-    return dmax.crossJoin(F.broadcast(totals)).select(
-        "ks_stat",
-        F.coalesce(F.col("__na"), F.lit(0)).cast("long").alias("n_a"),
-        F.coalesce(F.col("__nb"), F.lit(0)).cast("long").alias("n_b"),
-    )
-
-
-def ks_statistic_grouped(
-    df: DataFrame, value_col: str, group_col: str,
-    group_a, group_b, by: list[str], decimals: int = 6,
-    n_buckets: int = 64, max_points: int | None = None,
-) -> DataFrame:
-    """Per-segment two-sample KS in ONE pass — the drift-monitor shape
-    (:func:`ks_statistic` per ``by`` group, e.g. per country or per
-    model version) without a per-segment job loop. Output one row per
-    ``by`` group that has any a/b rows: (by…, ks_stat, n_a, n_b);
-    ``ks_stat`` is null for a group where either side is empty (the n
-    counts say which). Shares the bounded two-level prefix-sum of
-    :func:`_ks_cumulative` — every window is partitioned on
-    (by…, bucket), so segment count AND value cardinality both
-    parallelize."""
-    if not by:
-        raise ValueError("by must name at least one grouping column")
-    cum, totals = _ks_cumulative(
-        df, value_col, group_col, group_a, group_b, list(by), n_buckets,
-        max_points,
-    )
-    gaps = cum.join(totals, list(by)).select(
-        *by,
-        F.abs(
-            F.col("__cuma") / F.col("__na")
-            - F.col("__cumb") / F.col("__nb")
-        ).alias("__d"),
-        "__na", "__nb",
-    )
-    return (
-        gaps.groupBy(*by)
-        .agg(
-            F.round(F.max("__d"), decimals).alias("ks_stat"),
-            F.first("__na").cast("long").alias("n_a"),
-            F.first("__nb").cast("long").alias("n_b"),
-        )
-        .orderBy(*by)
-    )
+    return out.orderBy(*by) if by else out
 
 
 def mad_grouped(
@@ -1296,7 +1175,7 @@ def ks_drift_report(
 
     Engine shape: melt the columns into (column, value) long form with
     one narrow explode — no per-column job loop — then
-    :func:`ks_statistic_grouped` with ``by=["column"]``, so all
+    :func:`ks_statistic` with ``by=["column"]``, so all
     columns share the same bounded two-level prefix-sum
     (:func:`_hist_cumsum`). Values are cast to double for the shared
     value axis (the melt needs one type); exact counts are unaffected.
@@ -1316,9 +1195,10 @@ def ks_drift_report(
         ).alias("__s"),
     ).select(group_col, F.col("__s.column").alias("column"),
              F.col("__s.__val").alias("__val"))
-    report = ks_statistic_grouped(
-        stacked, "__val", group_col, group_a, group_b, ["column"],
+    report = ks_statistic(
+        stacked, "__val", group_col, group_a, group_b,
         decimals=decimals, n_buckets=n_buckets, max_points=max_points,
+        by=["column"],
     )
     # groups where a column had a/b rows but ALL values null can drop
     # out of the melt-filter entirely; restore the guaranteed

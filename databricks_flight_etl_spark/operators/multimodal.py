@@ -105,9 +105,6 @@ def _byte_stat_features(payload: bytes, n_features: int) -> list[float]:
     return out
 
 
-# Backwards-compatible alias (pre-round-2 the kernel was a hash stub).
-_decode_stub = _byte_stat_features
-
 # Real-codec optionality: when PIL is installed (not in this
 # container), decode_features(kernel="auto") decodes actual images;
 # the byte-stat kernel remains the certified fallback and the

@@ -28,10 +28,9 @@ __all__ = [
     "hll_build", "hll_merge", "hll_estimate",
     "bloom_build", "bloom_might_contain", "bloom_semi_join",
     "heavy_hitters",
-    "hll_build_grouped", "hll_estimate_grouped",
     "cms_inner_product",
     "mrl_sketch", "mrl_merge", "mrl_quantiles",
-    "mrl_sketch_grouped", "mrl_merge_grouped", "mrl_quantiles_grouped",
+    "mrl_sketch_grouped",
 ]
 
 
@@ -145,11 +144,19 @@ def _md5_long(col: Column, salt: str = "") -> Column:
     ).cast("long")
 
 
-def hll_build(df: DataFrame, col: str, p: int = 12) -> DataFrame:
+def hll_build(
+    df: DataFrame, col: str, p: int = 12, *, by: list[str] | None = None
+) -> DataFrame:
     """HyperLogLog register table of ``col``: one row per NON-EMPTY
-    register, (bucket, rho). One narrow projection + one group-by on a
-    small int — output bounded by m = 2^p rows regardless of input
-    size. Null values are skipped (SQL COUNT DISTINCT semantics)."""
+    register, (by…, bucket, rho). One narrow projection + one group-by
+    on (by…, small int) — output bounded by |groups|·2^p rows regardless
+    of input size. Null values are skipped (SQL COUNT DISTINCT
+    semantics). With ``by`` it is the 'distinct users per day' table at
+    sketch cost: sketches for different groups MERGE by max over the
+    same registers, so per-day tables roll up to per-week/whole-corpus
+    cardinalities without rescanning (the rollup-identity
+    certification)."""
+    by = list(by or [])
     if not 4 <= p <= 18:
         raise ValueError(f"p must be in [4, 18], got {p}")
     w = _HLL_HASH_BITS - p
@@ -163,8 +170,8 @@ def hll_build(df: DataFrame, col: str, p: int = 12) -> DataFrame:
     ).cast("int")
     return (
         df.where(F.col(col).isNotNull())
-        .select(bucket.alias("bucket"), rho.alias("rho"))
-        .groupBy("bucket")
+        .select(*by, bucket.alias("bucket"), rho.alias("rho"))
+        .groupBy(*by, "bucket")
         .agg(F.max("rho").alias("rho"))
     )
 
@@ -179,25 +186,30 @@ def hll_merge(*sketches: DataFrame) -> DataFrame:
     return out.groupBy("bucket").agg(F.max("rho").alias("rho"))
 
 
-def hll_estimate(sketch: DataFrame, p: int = 12) -> DataFrame:
-    """One-row (estimate: long) from a register table. Standard HLL
-    estimator: E = alpha_m·m²/Z with Z = Σ 2^-M[j] (absent registers
-    contribute 2^0 = 1), linear counting E = m·ln(m/V) when E ≤ 2.5m
-    and V = # zero registers > 0. Aggregates ≤ m rows — driver cost nil."""
+def hll_estimate(
+    sketch: DataFrame, p: int = 12, *, by: list[str] | None = None
+) -> DataFrame:
+    """(by…, estimate: long) from a register table: exactly one row
+    without ``by`` (even for an empty table), one per group of a
+    grouped table (:func:`hll_build` with the same ``by``) with it.
+    Standard HLL estimator: E = alpha_m·m²/Z with Z = Σ 2^-M[j] (absent
+    registers contribute 2^0 = 1), linear counting E = m·ln(m/V) when
+    E ≤ 2.5m and V = # zero registers > 0. One hash aggregate over
+    ≤ |groups|·m rows — driver cost nil."""
+    by = list(by or [])
     m = 2 ** p
     alpha = 0.7213 / (1 + 1.079 / m)
-    agg = sketch.agg(
+    agg = sketch.groupBy(*by).agg(
         F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("z_present"),
         F.count(F.lit(1)).alias("n_present"),
     )
-    z = F.coalesce(F.col("z_present"), F.lit(0.0)) + (
-        F.lit(float(m)) - F.coalesce(F.col("n_present"), F.lit(0)).cast("double")
-    )
+    # an empty table's one row has a null sum and a zero count
+    zeros = F.lit(float(m)) - F.col("n_present").cast("double")
+    z = F.coalesce(F.col("z_present"), F.lit(0.0)) + zeros
     raw = F.lit(alpha * m * m) / z
-    zeros = F.lit(float(m)) - F.coalesce(F.col("n_present"), F.lit(0)).cast("double")
     linear = F.lit(float(m)) * F.log(F.lit(float(m)) / zeros)
     est = F.when((raw <= 2.5 * m) & (zeros > 0), linear).otherwise(raw)
-    return agg.select(F.round(est).cast("long").alias("estimate"))
+    return agg.select(*by, F.round(est).cast("long").alias("estimate"))
 
 
 # ---------------------------------------------------------------------------
@@ -374,56 +386,6 @@ def heavy_hitters(
     )
 
 
-def hll_build_grouped(
-    df: DataFrame, group_cols: list[str], col: str, p: int = 12
-) -> DataFrame:
-    """Per-group HyperLogLog registers: (group…, bucket, rho) — the
-    'distinct users per day' table at sketch cost. Output bounded by
-    |groups|·2^p; one shuffle on (group, bucket). Sketches for
-    different groups MERGE by max over the same registers, so per-day
-    tables roll up to per-week/whole-corpus cardinalities without
-    rescanning (the rollup-identity certification)."""
-    if not 4 <= p <= 18:
-        raise ValueError(f"p must be in [4, 18], got {p}")
-    w = _HLL_HASH_BITS - p
-    h = _md5_long(F.col(col).cast("string"))
-    bucket = F.shiftright(h, w).cast("int")
-    rem = h % (2 ** w)
-    rho = F.when(rem == 0, F.lit(w + 1)).otherwise(
-        F.lit(w) - F.length(F.bin(rem)) + 1
-    ).cast("int")
-    return (
-        df.where(F.col(col).isNotNull())
-        .select(*group_cols, bucket.alias("bucket"), rho.alias("rho"))
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
-
-
-def hll_estimate_grouped(
-    sketch: DataFrame, group_cols: list[str], p: int = 12
-) -> DataFrame:
-    """Per-group cardinality estimates from a grouped register table:
-    (group…, estimate). Same estimator as :func:`hll_estimate`,
-    evaluated per group in one hash aggregate."""
-    m = 2 ** p
-    alpha = 0.7213 / (1 + 1.079 / m)
-    agg = sketch.groupBy(*group_cols).agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("z_present"),
-        F.count(F.lit(1)).alias("n_present"),
-    )
-    z = F.col("z_present") + (
-        F.lit(float(m)) - F.col("n_present").cast("double")
-    )
-    raw = F.lit(alpha * m * m) / z
-    zeros = F.lit(float(m)) - F.col("n_present").cast("double")
-    linear = F.lit(float(m)) * F.log(F.lit(float(m)) / zeros)
-    est = F.when((raw <= 2.5 * m) & (zeros > 0), linear).otherwise(raw)
-    return agg.select(
-        *group_cols, F.round(est).cast("long").alias("estimate")
-    )
-
-
 def cms_inner_product(
     a: DataFrame, b: DataFrame, width: int = 2048, depth: int = 4
 ) -> DataFrame:
@@ -530,19 +492,28 @@ def mrl_sketch(df: DataFrame, col: str, k: int = 256) -> DataFrame:
     return src.mapInPandas(kernel, schema)
 
 
-def mrl_merge(sketch: DataFrame, k: int = 256) -> DataFrame:
+def mrl_merge(
+    sketch: DataFrame, k: int = 256, *, by: list[str] | None = None
+) -> DataFrame:
     """Re-compact pooled sketch rows (a union of :func:`mrl_sketch`
     outputs) into one bounded sketch: per level ascending, sort the
     pooled items and collapse 2k-item blocks upward until fewer than 2k
     remain. Runs as ONE task over O(k·log n · n_partitions) sketch rows
     — bounded input by construction (the corpus never enters), the same
-    driver-sized footprint as hll_merge's register table."""
+    driver-sized footprint as hll_merge's register table. With ``by``
+    (pooled :func:`mrl_sketch_grouped` outputs — e.g. 7 daily tables
+    rolling up to a week) it is one such task PER GROUP, and the group
+    columns lead the output."""
     import numpy as np
     import pandas as pd
 
-    schema = "level int, value double, weight long"
+    by = list(by or [])
+    schema = ", ".join(
+        [f"`{c}` {sketch.schema[c].dataType.simpleString()}" for c in by]
+        + ["level int, value double, weight long"]
+    )
 
-    def merge_fn(_key, pdf):
+    def merge_fn(key, pdf):
         by_level: dict[int, list] = {}
         for lvl, grp in pdf.groupby("level"):
             by_level[int(lvl)] = [grp["value"].to_numpy()]
@@ -563,36 +534,40 @@ def mrl_merge(sketch: DataFrame, k: int = 256) -> DataFrame:
                 promote = np.concatenate([promote, block[off::2]])
             out.extend((lvl, float(v), 1 << lvl) for v in items)
             lvl += 1
-        return pd.DataFrame(out, columns=["level", "value", "weight"])
+        res = pd.DataFrame(out, columns=["level", "value", "weight"])
+        for name, val in zip(by, key):
+            res[name] = val
+        return res[[*by, "level", "value", "weight"]]
 
-    return (
-        sketch.groupBy(F.lit(1).alias("__g"))
-        .applyInPandas(merge_fn, schema)
-    )
+    return sketch.groupBy(*by).applyInPandas(merge_fn, schema)
 
 
 def mrl_quantiles(
-    sketch: DataFrame, qs: list[float]
+    sketch: DataFrame, qs: list[float], *, by: list[str] | None = None
 ) -> DataFrame:
     """Type-1 quantile readout from sketch rows: weighted value
     histogram → cumulative weight → first value whose cum ≥
     floor(q·(n−1))+1 — the IDENTICAL rank formula as quantiles_exact,
     over weights instead of row counts (so the k ≥ n degenerate is
-    bit-equal to the exact operator). Output (q, value), ordered."""
+    bit-equal to the exact operator, with or without ``by``). Output
+    (by…, q, value), ordered; with ``by`` every window is partitioned
+    by the group (no single-partition stage at any group count)."""
     from pyspark.sql import Window
 
     for q in qs:
         if not 0.0 <= q <= 1.0:
             raise ValueError(f"quantile must be in [0, 1], got {q}")
-    hist = sketch.groupBy("value").agg(F.sum("weight").alias("cnt"))
-    # unpartitioned window is SAFE here: hist is the sketch's value
-    # histogram, bounded by construction at <= k * n_levels rows (the
-    # sketch's own compaction invariant) — never corpus-sized
-    w = Window.orderBy("value").rowsBetween(
+    by = list(by or [])
+    hist = sketch.groupBy(*by, "value").agg(F.sum("weight").alias("cnt"))
+    # an unpartitioned window (no ``by``) is SAFE here: hist is the
+    # sketch's value histogram, bounded by construction at
+    # <= k * n_levels rows (the sketch's own compaction invariant) —
+    # never corpus-sized
+    w = Window.partitionBy(*by).orderBy("value").rowsBetween(
         Window.unboundedPreceding, 0)
-    wall = Window.partitionBy()
+    wall = Window.partitionBy(*by)
     cum = hist.select(
-        "value",
+        *by, "value",
         F.sum("cnt").over(w).alias("cum"),
         F.sum("cnt").over(wall).alias("n"),
     )
@@ -606,11 +581,11 @@ def mrl_quantiles(
         ])
     ).alias("t")
     return (
-        cum.select("value", "cum", targets)
+        cum.select(*by, "value", "cum", targets)
         .where(F.col("cum") >= F.col("t.rank"))
-        .groupBy(F.col("t.q").alias("q"))
+        .groupBy(*by, F.col("t.q").alias("q"))
         .agg(F.min("value").alias("value"))
-        .orderBy("q")
+        .orderBy(*by, "q")
     )
 
 
@@ -644,91 +619,4 @@ def mrl_sketch_grouped(
 
     return gdf.groupBy(*group_cols).applyInPandas(
         fn, f"{fields}, {schema_tail}"
-    )
-
-
-def mrl_merge_grouped(
-    sketch: DataFrame, group_cols: list[str], k: int = 256
-) -> DataFrame:
-    """Re-compact pooled per-group sketch rows (unions of
-    :func:`mrl_sketch_grouped` outputs — e.g. 7 daily tables rolling
-    up to a week): one bounded applyInPandas task PER GROUP."""
-    import numpy as np
-    import pandas as pd
-
-    fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in sketch.schema.fields
-        if f.name in group_cols
-    )
-
-    def fn(key, pdf):
-        by_level: dict[int, list] = {}
-        for lvl, grp in pdf.groupby("level"):
-            by_level[int(lvl)] = [grp["value"].to_numpy()]
-        out: list = []
-        promote = np.array([], dtype="float64")
-        lvl = 0
-        max_lvl = max(by_level) if by_level else 0
-        n_coll = 0
-        while lvl <= max_lvl or len(promote):
-            items = np.sort(
-                np.concatenate(by_level.get(lvl, []) + [promote])
-            )
-            promote = np.array([], dtype="float64")
-            while len(items) >= 2 * k:
-                block, items = items[: 2 * k], items[2 * k:]
-                off = n_coll % 2
-                n_coll += 1
-                promote = np.concatenate([promote, block[off::2]])
-            out.extend((lvl, float(v), 1 << lvl) for v in items)
-            lvl += 1
-        res = pd.DataFrame(out, columns=["level", "value", "weight"])
-        for name, val in zip(group_cols, key):
-            res.insert(0, name, val)
-        return res[[*group_cols, "level", "value", "weight"]]
-
-    return sketch.groupBy(*group_cols).applyInPandas(
-        fn, f"{fields}, level int, value double, weight long"
-    )
-
-
-def mrl_quantiles_grouped(
-    sketch: DataFrame, group_cols: list[str], qs: list[float]
-) -> DataFrame:
-    """Per-group type-1 readout: (group…, q, value) — grouped_quantiles'
-    exact rank formula over sketch weights, all windows PARTITIONED by
-    the group (no single-partition stage; scales to any group count).
-    The k ≥ n degenerate is bit-equal to grouped_quantiles."""
-    from pyspark.sql import Window
-
-    for q in qs:
-        if not 0.0 <= q <= 1.0:
-            raise ValueError(f"quantile must be in [0, 1], got {q}")
-    hist = sketch.groupBy(*group_cols, "value").agg(
-        F.sum("weight").alias("cnt")
-    )
-    w = Window.partitionBy(*group_cols).orderBy("value").rowsBetween(
-        Window.unboundedPreceding, 0)
-    wall = Window.partitionBy(*group_cols)
-    cum = hist.select(
-        *group_cols, "value",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(wall).alias("n"),
-    )
-    targets = F.explode(
-        F.array(*[
-            F.struct(
-                F.lit(q).alias("q"),
-                (F.floor(F.lit(q) * (F.col("n") - 1)) + 1).alias("rank"),
-            )
-            for q in qs
-        ])
-    ).alias("t")
-    return (
-        cum.select(*group_cols, "value", "cum", targets)
-        .where(F.col("cum") >= F.col("t.rank"))
-        .groupBy(*group_cols, F.col("t.q").alias("q"))
-        .agg(F.min("value").alias("value"))
-        .orderBy(*group_cols, "q")
     )

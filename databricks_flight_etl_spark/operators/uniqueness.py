@@ -19,7 +19,6 @@ __all__ = [
     "duplicate_groups",
     "exact_duplicate_count",
     "dedup",
-    "key_duplicate_groups",
     "key_duplicate_count",
     "row_hash",
     "dedup_by_hash",
@@ -38,8 +37,10 @@ _NULL = "\x00N"
 
 def duplicate_groups(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
     """Rows (key columns + n) for groups occurring more than once —
-    reference NB:249 ``groupBy(df.columns).count().where(count>1)``.
-    Key names are taken verbatim (dots and backticks included)."""
+    reference NB:249 ``groupBy(df.columns).count().where(count>1)``;
+    with ``subset``, the compound-key duplicate groups (NB:258,
+    293–294). Key names are taken verbatim (dots and backticks
+    included)."""
     keys = subset or df.columns
     return (
         df.groupBy(*[_quote(k) for k in keys])
@@ -60,13 +61,8 @@ def dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
     return df.dropDuplicates(subset) if subset else df.dropDuplicates()
 
 
-def key_duplicate_groups(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Compound-key duplicate groups (reference NB:258, 293–294)."""
-    return duplicate_groups(df, subset=keys)
-
-
 def key_duplicate_count(df: DataFrame, keys: list[str]) -> int:
-    return key_duplicate_groups(df, keys).count()
+    return duplicate_groups(df, subset=keys).count()
 
 
 def row_hash(df: DataFrame, cols: list[str] | None = None) -> Column:

@@ -150,7 +150,7 @@ def run_flight_pipeline(
         value_frequencies=consistency.value_frequencies(cleaned),
         exact_dup_groups=uniqueness.duplicate_groups(cleaned),
         key_dup_groups=(
-            uniqueness.key_duplicate_groups(cleaned, dedup_keys)
+            uniqueness.duplicate_groups(cleaned, subset=dedup_keys)
             if dedup_keys
             else None
         ),

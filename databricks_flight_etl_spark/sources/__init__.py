@@ -32,7 +32,6 @@ __all__ = [
     "read_avro",
     "write_orc",
     "load_table",
-    "load_tables",
     "write_parquet",
     "write_bucketed",
     "write_partitioned",
@@ -203,10 +202,6 @@ def normalize_timestamp(df: DataFrame, cols: list[str]) -> DataFrame:
     return df
 
 
-# Backwards-compatible alias (pre-round-2 name).
-ns_long_to_timestamp = normalize_timestamp
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table (TESTDATA.md), normalizing
     timestamp columns to session-TZ TimestampType.
@@ -219,10 +214,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = read_parquet(spark, path) if schema is None else spark.read.schema(schema).parquet(path)
     ts_cols = [c for c in _NORMALIZE_TS_COLS.get(name, []) if c in df.columns]
     return normalize_timestamp(df, ts_cols) if ts_cols else df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def write_parquet(

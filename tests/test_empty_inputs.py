@@ -139,11 +139,12 @@ def test_empty_inputs_round3_ops(spark):
         sketches.bloom_might_contain(empty_bloom, F.col("id"), 64, 5))
     assert flagged.count() == 0  # empty filter matches nothing
     assert sketches.heavy_hitters(ev, "event_id", 0.5).count() == 0
-    assert sketches.hll_build_grouped(ev, ["user_id"], "event_id").count() == 0
+    assert sketches.hll_build(ev, "event_id", by=["user_id"]).count() == 0
 
     # quantiles / stats
     assert accuracy.quantiles_exact(ev, "value", [0.5]).count() == 0
-    assert accuracy.grouped_quantiles(ev, ["user_id"], "value", [0.5]).count() == 0
+    assert accuracy.quantiles_exact(
+        ev, "value", [0.5], by=["user_id"]).count() == 0
     assert accuracy.outliers_iqr(ev, "value").count() == 0
     assert accuracy.histogram_equidepth(ev, "value").count() == 0
     assert accuracy.rank_normalize(ev, "value", ["event_id"]).count() == 0
@@ -262,11 +263,11 @@ def test_empty_inputs_round4_ops(spark):
     sk = sketches.mrl_merge(sketches.mrl_sketch(ev, "value", k=8), k=8)
     assert sk.count() == 0
     assert sketches.mrl_quantiles(sk, [0.5]).count() == 0
-    gsk = sketches.mrl_merge_grouped(
+    gsk = sketches.mrl_merge(
         sketches.mrl_sketch_grouped(ev, ["user_id"], "value", k=8),
-        ["user_id"], k=8)
+        k=8, by=["user_id"])
     assert gsk.count() == 0
-    assert sketches.mrl_quantiles_grouped(gsk, ["user_id"], [0.5]).count() == 0
+    assert sketches.mrl_quantiles(gsk, [0.5], by=["user_id"]).count() == 0
 
     assert graph.triangle_counts(edges).count() == 0
     assert graph.triangle_total(edges).first()["n_triangles"] == 0
@@ -298,7 +299,7 @@ def test_empty_inputs_round6_ops(spark):
     """Round-6 additions on empty/degenerate inputs: defined rows, no
     crashes."""
     from databricks_flight_etl_spark.operators.accuracy import (
-        ks_drift_report, ks_statistic, ks_statistic_grouped,
+        ks_drift_report, ks_statistic,
     )
     from databricks_flight_etl_spark.operators.multimodal import (
         media_fingerprint,
@@ -312,7 +313,7 @@ def test_empty_inputs_round6_ops(spark):
     r = ks_statistic(ev, "x", "g", "a", "b").collect()
     assert len(r) == 1 and r[0]["ks_stat"] is None
     # grouped: empty in, empty out
-    assert ks_statistic_grouped(ev, "x", "g", "a", "b", ["g"]).count() == 0
+    assert ks_statistic(ev, "x", "g", "a", "b", by=["g"]).count() == 0
     # report: one row per requested column even on empty input
     rep = ks_drift_report(ev, ["x", "y"], "g", "a", "b").collect()
     assert [(r["column"], r["ks_stat"], r["n_a"]) for r in rep] == [

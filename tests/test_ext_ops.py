@@ -1521,8 +1521,7 @@ def test_hll_grouped_estimates_and_rollup(spark):
 
     from databricks_flight_etl_spark.operators.sketches import (
         hll_build,
-        hll_build_grouped,
-        hll_estimate_grouped,
+        hll_estimate,
     )
 
     df = spark.range(6000).select(
@@ -1533,9 +1532,9 @@ def test_hll_grouped_estimates_and_rollup(spark):
     exact = {r["g"]: r["n"] for r in
              df.groupBy("g").agg(F.count_distinct("u").alias("n"))
              .collect()}
-    sk = hll_build_grouped(df, ["g"], "u", p=11)
+    sk = hll_build(df, "u", p=11, by=["g"])
     est = {r["g"]: r["estimate"] for r in
-           hll_estimate_grouped(sk, ["g"], p=11).collect()}
+           hll_estimate(sk, p=11, by=["g"]).collect()}
     for g in exact:
         assert abs(est[g] - exact[g]) / exact[g] < 0.08
     merged = sorted(
@@ -2421,16 +2420,16 @@ def test_triangle_counts_random_vs_bruteforce(spark):
 
 def test_mrl_grouped_exact_degenerate_and_rollup(spark):
     """Per-group k >= n sketches must read out exactly
-    grouped_quantiles, and two 'daily' sketch tables pooled through
-    mrl_merge_grouped must read out the same as one whole-corpus
+    quantiles_exact(by=), and two 'daily' sketch tables pooled through
+    mrl_merge(by=) must read out the same as one whole-corpus
     sketch (the per-day -> per-week rollup identity)."""
     import random
 
     from databricks_flight_etl_spark.operators.accuracy import (
-        grouped_quantiles,
+        quantiles_exact,
     )
     from databricks_flight_etl_spark.operators.sketches import (
-        mrl_merge_grouped, mrl_quantiles_grouped, mrl_sketch_grouped,
+        mrl_merge, mrl_quantiles, mrl_sketch_grouped,
     )
 
     rng = random.Random(5)
@@ -2444,26 +2443,26 @@ def test_mrl_grouped_exact_degenerate_and_rollup(spark):
     whole = mrl_sketch_grouped(df, ["g"], "value", k=k)
     got = [
         (r["g"], r["q"], r["value"])
-        for r in mrl_quantiles_grouped(whole, ["g"], qs).collect()
+        for r in mrl_quantiles(whole, qs, by=["g"]).collect()
     ]
     exact = [
         (r["g"], r["q"], r["value"])
-        for r in grouped_quantiles(df, ["g"], "value", qs).collect()
+        for r in quantiles_exact(df, "value", qs, by=["g"]).collect()
     ]
     assert got == exact
 
     day1 = mrl_sketch_grouped(df.where("id % 2 = 0"), ["g"], "value", k=k)
     day2 = mrl_sketch_grouped(df.where("id % 2 = 1"), ["g"], "value", k=k)
-    rolled = mrl_merge_grouped(day1.unionByName(day2), ["g"], k=k)
+    rolled = mrl_merge(day1.unionByName(day2), k=k, by=["g"])
     got2 = [
         (r["g"], r["q"], r["value"])
-        for r in mrl_quantiles_grouped(rolled, ["g"], qs).collect()
+        for r in mrl_quantiles(rolled, qs, by=["g"]).collect()
     ]
     assert got2 == exact
 
     # production k actually compacts and stays bounded
-    small = mrl_merge_grouped(
-        mrl_sketch_grouped(df, ["g"], "value", k=64), ["g"], k=64
+    small = mrl_merge(
+        mrl_sketch_grouped(df, ["g"], "value", k=64), k=64, by=["g"]
     )
     assert small.count() < 3 * 2 * 64 * 10
 

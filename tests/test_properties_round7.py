@@ -183,15 +183,13 @@ def _quantiles_exact(spark):
 
 
 def _grouped_quantiles(spark):
-    from databricks_flight_etl_spark.operators.accuracy import (
-        grouped_quantiles,
-    )
+    from databricks_flight_etl_spark.operators.accuracy import quantiles_exact
 
     rows = [("a", v) for v in [5.0, 1.0, 9.0, 3.0, 7.0, 3.0]] + [
         ("b", v) for v in [30.0, 10.0, 20.0]
     ]
     df = spark.createDataFrame(rows, "g string, x double")
-    out = grouped_quantiles(df, ["g"], "x", [0.5, 0.9])
+    out = quantiles_exact(df, "x", [0.5, 0.9], by=["g"])
     return {(r["g"], float(r["q"])): r["value"] for r in out.collect()}, {
         ("a", 0.5): 3.0, ("a", 0.9): 7.0, ("b", 0.5): 20.0, ("b", 0.9): 20.0}
 
@@ -225,13 +223,11 @@ def _ks_statistic(spark):
 
 
 def _ks_statistic_grouped(spark):
-    from databricks_flight_etl_spark.operators.accuracy import (
-        ks_statistic_grouped,
-    )
+    from databricks_flight_etl_spark.operators.accuracy import ks_statistic
 
     rows = [("s1", g, v) for g, v in _KS_ROWS] + [("s2", "a", 1.0)]
     df = spark.createDataFrame(rows, "seg string, g string, x double")
-    out = ks_statistic_grouped(df, "x", "g", "a", "b", ["seg"])
+    out = ks_statistic(df, "x", "g", "a", "b", by=["seg"])
     return {r["seg"]: (r["ks_stat"], r["n_a"], r["n_b"])
             for r in out.collect()}, {"s1": (0.5, 4, 4), "s2": (None, 1, 0)}
 

@@ -116,7 +116,7 @@ def test_compound_key_duplicates(spark, dup_df):
     assert uniqueness.key_duplicate_count(dup_df, keys) == 3
     groups = {
         (r["Origin"], r["n"])
-        for r in uniqueness.key_duplicate_groups(dup_df, keys).collect()
+        for r in uniqueness.duplicate_groups(dup_df, subset=keys).collect()
     }
     assert groups == {("ORD", 2), ("SFO", 2), ("JFK", 2)}
 
@@ -267,17 +267,16 @@ def test_outliers_iqr_fences(spark):
 
 
 def test_grouped_quantiles_matches_global_per_group(spark):
-    """grouped_quantiles on a key equals quantiles_exact run on each
-    group's slice independently."""
+    """quantiles_exact with by= on a key equals quantiles_exact run on
+    each group's slice independently."""
     from databricks_flight_etl_spark.operators.accuracy import (
-        grouped_quantiles,
         quantiles_exact,
     )
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     qs = [0.25, 0.5, 0.9]
     got = {(r["event_type"], float(r["q"])): r["value"]
-           for r in grouped_quantiles(ev, ["event_type"], "value", qs)
+           for r in quantiles_exact(ev, "value", qs, by=["event_type"])
            .collect()}
     types = [r["event_type"] for r in
              ev.select("event_type").distinct().collect()]
@@ -559,7 +558,7 @@ def test_null_drift_detects_regression(spark):
 
 def test_grouped_outliers_and_trailing_range(spark):
     from databricks_flight_etl_spark.operators.accuracy import (
-        grouped_outliers_iqr,
+        outliers_iqr,
         trailing_range_agg,
     )
 
@@ -569,7 +568,7 @@ def test_grouped_outliers_and_trailing_range(spark):
             + [("b", float(v)) for v in [0, 50, 100, 150, 200]])
     df = spark.createDataFrame(rows, "g string, x double")
     out = [(r["g"], r["x"])
-           for r in grouped_outliers_iqr(df, ["g"], "x").collect()]
+           for r in outliers_iqr(df, "x", by=["g"]).collect()]
     assert out == [("a", 100.0)]
 
     import datetime as dt
@@ -1070,13 +1069,13 @@ def test_ks_statistic_max_points_bound(spark):
 
 
 def test_ks_statistic_grouped_matches_per_group(spark):
-    """ks_statistic_grouped == one ks_statistic per segment, in one
+    """ks_statistic with by= == one ks_statistic per segment, in one
     pass; a segment with one side empty keeps its row with a null
     stat."""
     import random
 
     from databricks_flight_etl_spark.operators.accuracy import (
-        ks_statistic, ks_statistic_grouped,
+        ks_statistic,
     )
 
     rng = random.Random(5)
@@ -1090,8 +1089,8 @@ def test_ks_statistic_grouped_matches_per_group(spark):
     df = spark.createDataFrame(rows, "seg string, g string, x double")
     got = {
         r["seg"]: (r["ks_stat"], r["n_a"], r["n_b"])
-        for r in ks_statistic_grouped(
-            df, "x", "g", "a", "b", ["seg"]
+        for r in ks_statistic(
+            df, "x", "g", "a", "b", by=["seg"]
         ).collect()
     }
     assert set(got) == {"s1", "s2", "s3"}

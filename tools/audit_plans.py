@@ -52,6 +52,16 @@ def generate(sf_dir: str, out=None) -> None:
     w("expression per row), not the 15x regexp-per-position shape the")
     w("tripwire exists for.")
     w()
+    w("Every column reads the physical plan BEFORE execution, so before")
+    w("AQE's run-time exchange reuse: `scan cols` lists one entry per")
+    w("consumer of a file scan and `pushed` counts that consumer's")
+    w("filters, even where the run shares one scan among several")
+    w("consumers. A multi-consumer plan over a file source (a value")
+    w("histogram read by its bounds, bucket sums and window join) thus")
+    w("reads as more I/O than it does: `q_ks_drift` lists 5 scans")
+    w("here, while its executed plan at sf0.1 holds 2 file scans and")
+    w("3 reused exchanges.")
+    w()
     w("| query | shuffles | bcast joins | SMJ | topk | pushed | scan cols | λfilt |")
     w("|---|---|---|---|---|---|---|---|")
 

@@ -4,10 +4,15 @@ same statusTracker mechanism ad hoc; this pins it as a tool).
 
 Usage: python tools/count_jobs.py [--sf DIR] [--reps N] q_name [...]
 
-Prints per query: jobs for the FULL run (build + count action),
-plus the median, min and max wall of the reps — single runs cannot
-adjudicate a regression (host noise), so compare medians. Job ids are counted via a fresh
-job group per rep, so concurrent sessions don't pollute the count.
+Prints per query: jobs for the FULL run (build + ``collect()``), the
+median, min and max wall of the reps, and every rep's wall — single
+runs cannot adjudicate a regression (host noise), so compare medians
+against the spread. The action is ``collect()``, as in the benchmark
+and ``tools/check_oracle.py``: a ``count()`` lets Catalyst prune every
+column the count does not need (a histogram query's whole prefix-sum
+can vanish), so it would not measure the work the query's result
+costs. Job ids are counted via a fresh job group per rep, so
+concurrent sessions don't pollute the count.
 """
 
 from __future__ import annotations
@@ -47,7 +52,7 @@ def main() -> None:
             group = str(uuid.uuid4())
             sc.setJobGroup(group, name)
             t0 = time.time()
-            fn(spark, args.sf).count()
+            fn(spark, args.sf).collect()
             walls.append(time.time() - t0)
             sc.setJobGroup(None, None)
             jids = sc.statusTracker().getJobIdsForGroup(group)
@@ -56,7 +61,8 @@ def main() -> None:
         print(
             f"{name}: jobs={n_jobs} wall_median="
             f"{statistics.median(walls):.2f}s min={min(walls):.2f} "
-            f"max={max(walls):.2f} reps={args.reps}"
+            f"max={max(walls):.2f} reps={args.reps} "
+            f"walls=[{' '.join(f'{w:.2f}' for w in walls)}]"
         )
 
 
