@@ -32,13 +32,14 @@ def test_query_runs(spark, name):
 
 def test_driver_window_queries_scalar_only(spark):
     """The driver's pandas canonicalizer crashes on array/struct/map
-    cells — every query inside its 50-entry evaluation window (first 50
-    insertion-order keys) must emit only scalar columns. Schema-only:
+    cells — every query inside its 50-entry evaluation window
+    (DRIVER_WINDOW, the first 50 queries() keys) must emit only scalar
+    columns. Schema-only:
     building the DataFrame analyzes the plan without running it."""
     from pyspark.sql import types as T
 
     qs = entrymod.queries()
-    for name in list(qs)[:50]:
+    for name in entrymod.DRIVER_WINDOW:
         df = qs[name](spark, SF_DIR)
         bad = [
             f"{f.name}:{f.dataType.simpleString()}"
@@ -114,10 +115,12 @@ def test_stage_parity_halves_contract(spark, tmp_path):
     import pytest
     from pyspark.sql import functions as F
 
-    import __spark_entry__ as entry
+    from databricks_flight_etl_spark.registry.streaming import (
+        _stage_parity_halves,
+    )
 
     df = spark.range(100).select(F.col("id").alias("k"))
-    stage = entry._stage_parity_halves(df, "k", str(tmp_path / "a"))
+    stage = _stage_parity_halves(df, "k", str(tmp_path / "a"))
     even, odd = f"{stage}/even.parquet", f"{stage}/odd.parquet"
     assert os.path.exists(even) and os.path.exists(odd)
     assert os.stat(even).st_mtime < os.stat(odd).st_mtime
@@ -128,11 +131,11 @@ def test_stage_parity_halves_contract(spark, tmp_path):
     # pmod membership: negative odd keys land in the ODD half (a raw
     # `% 2 == 1` filter would have dropped them)
     neg = spark.createDataFrame([(-3,), (-2,), (4,), (5,)], "k long")
-    stage = entry._stage_parity_halves(neg, "k", str(tmp_path / "b"))
+    stage = _stage_parity_halves(neg, "k", str(tmp_path / "b"))
     got_odd = {r["k"] for r in
                spark.read.parquet(f"{stage}/odd.parquet").collect()}
     assert got_odd == {-3, 5}
     # all-null key -> both halves empty -> the broadened error
     nulls = spark.createDataFrame([(None,), (None,)], "k long")
     with pytest.raises(RuntimeError, match="NULL"):
-        entry._stage_parity_halves(nulls, "k", str(tmp_path / "c"))
+        _stage_parity_halves(nulls, "k", str(tmp_path / "c"))

@@ -9,15 +9,16 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-import __spark_entry__ as entrymod  # noqa: E402
+from __spark_entry__ import queries  # noqa: E402
 
 from databricks_flight_etl_spark import plans  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
+QUERIES = queries()
 
 
 def test_scan_project_pushdown_and_pruning(spark):
-    df = entrymod.q_scan_project(spark, SF)
+    df = QUERIES["q_scan_project"](spark, SF)
     pf = plans.pushed_filters(df)
     assert any("GreaterThanOrEqual(l_quantity" in f for f in pf), pf
     assert any("LessThanOrEqual(l_quantity" in f for f in pf), pf
@@ -28,12 +29,12 @@ def test_scan_project_pushdown_and_pruning(spark):
 
 
 def test_multiway_join_broadcasts_dims(spark):
-    audit = plans.plan_audit(entrymod.q_join_multiway(spark, SF))
+    audit = plans.plan_audit(QUERIES["q_join_multiway"](spark, SF))
     assert audit["n_broadcast_joins"] >= 1, audit
 
 
 def test_topk_is_take_ordered(spark):
-    df = entrymod.q_topk(spark, SF)
+    df = QUERIES["q_topk"](spark, SF)
     assert plans.has_operator(df, "TakeOrderedAndProject")
     # global sort never materializes for a limit-k
     assert not plans.has_operator(df, "Sort ")
@@ -41,18 +42,18 @@ def test_topk_is_take_ordered(spark):
 
 def test_agg_is_partial_final(spark):
     # partial (map-side) + final HashAggregate around one shuffle
-    df = entrymod.q_groupby_count(spark, SF)
+    df = QUERIES["q_groupby_count"](spark, SF)
     assert plans.count_operator(df, "HashAggregate") >= 2
 
 
 def test_tpch_q1_filter_pushed(spark):
-    df = entrymod.q_tpch_q1(spark, SF)
+    df = QUERIES["q_tpch_q1"](spark, SF)
     pf = plans.pushed_filters(df)
     assert any("l_shipdate" in f for f in pf), pf
 
 
 def test_semi_join_no_row_widening(spark):
-    df = entrymod.q_join_semi(spark, SF)
+    df = QUERIES["q_join_semi"](spark, SF)
     p = plans.explain_str(df)
     assert "LeftSemi" in p
 
@@ -80,9 +81,9 @@ def test_partitioned_write_prunes(spark, tmp_path):
 
 
 def test_exists_decorrelates_to_semi_anti(spark):
-    p4 = plans.explain_str(entrymod.q_tpch_q4(spark, SF))
+    p4 = plans.explain_str(QUERIES["q_tpch_q4"](spark, SF))
     assert "LeftSemi" in p4, p4
-    p21 = plans.explain_str(entrymod.q_tpch_q21_shape(spark, SF))
+    p21 = plans.explain_str(QUERIES["q_tpch_q21_shape"](spark, SF))
     assert "LeftSemi" in p21 and "LeftAnti" in p21, p21
 
 
@@ -92,7 +93,7 @@ def test_spread_satisfies_downstream_clustering(spark):
     distinct's ClusteredDistribution(id, fp), so Catalyst must not add
     a second shuffle. Guards the partitioning-reuse property the text
     pipeline's shuffle budget relies on."""
-    df = entrymod.q_winnow(spark, SF)
+    df = QUERIES["q_winnow"](spark, SF)
     audit = plans.plan_audit(df)
     assert audit["n_shuffles"] == 1, audit
 
@@ -102,14 +103,14 @@ def test_tfidf_spread_reuses_partitioning(spark):
     the exploded token table) + one token-df shuffle of the already-
     aggregated tf table = exactly 2 non-broadcast exchanges. The df
     join back must broadcast."""
-    df = entrymod.q_tfidf(spark, SF)
+    df = QUERIES["q_tfidf"](spark, SF)
     audit = plans.plan_audit(df)
     assert audit["n_shuffles"] == 2, audit
     assert audit["n_broadcast_joins"] >= 1, audit
 
 
 def test_contamination_broadcasts_probe_side(spark):
-    df = entrymod.q_contamination(spark, SF)
+    df = QUERIES["q_contamination"](spark, SF)
     p = plans.explain_str(df)
     assert "BroadcastHashJoin" in p
     # the corpus side must never sort-merge against the probe set
@@ -119,13 +120,13 @@ def test_contamination_broadcasts_probe_side(spark):
 def test_pack_shards_never_single_partition(spark):
     # THE distributed-prefix-sum property: a naive global running sum
     # plans Exchange SinglePartition; the bucketed form must not
-    df = entrymod.q_pack_shards(spark, SF)
+    df = QUERIES["q_pack_shards"](spark, SF)
     p = plans.explain_str(df)
     assert "SinglePartition" not in p
 
 
 def test_dedup_survivors_broadcasts_losers(spark):
-    df = entrymod.q_dedup_survivors(spark, SF)
+    df = QUERIES["q_dedup_survivors"](spark, SF)
     p = plans.explain_str(df)
     assert "BroadcastHashJoin" in p and "LeftAnti" in p
 
@@ -162,7 +163,7 @@ def test_semantic_dedup_survivor_plan(spark):
     """semantic_dedup's returned plan: one broadcast anti-join of the
     drop list against the corpus — no sort-merge, no extra exchange
     beyond the survivors' own spread."""
-    df = entrymod.q_semantic_dedup(spark, SF)
+    df = QUERIES["q_semantic_dedup"](spark, SF)
     audit = plans.plan_audit(df)
     p = plans.explain_str(df)
     assert audit["n_sortmerge_joins"] == 0, audit
@@ -173,7 +174,7 @@ def test_semantic_dedup_survivor_plan(spark):
 def test_textprep_full_funnel_shuffle_budget(spark):
     """The 7-stage certified funnel's shuffle budget is 4 (PLANS.md);
     a regression that adds an Exchange must fail loudly here."""
-    df = entrymod.q_textprep_full_certified(spark, SF)
+    df = QUERIES["q_textprep_full_certified"](spark, SF)
     audit = plans.plan_audit(df)
     assert audit["n_shuffles"] <= 4, audit
     assert audit["n_sortmerge_joins"] == 0, audit
@@ -185,7 +186,7 @@ def test_textprep_pipeline_verify_stage_shape(spark):
     extra shuffles (explode → per-pair agg → size joins) were the real
     cost behind the r4 q_textprep_pipeline regression. If an Exchange
     or SortMergeJoin creeps back into the production funnel, fail."""
-    df = entrymod.q_textprep_pipeline(spark, SF)
+    df = QUERIES["q_textprep_pipeline"](spark, SF)
     audit = plans.plan_audit(df)
     assert audit["n_sortmerge_joins"] == 0, audit
     assert audit["n_shuffles"] <= 4, audit
@@ -205,7 +206,7 @@ def test_textprep_pipeline_verify_stage_shape(spark):
 def test_jl_project_is_narrow(spark):
     """The JL projection must stay a narrow map over the scan: no
     joins, at most the spread exchange, null-vector filter pushed."""
-    df = entrymod.q_jl_project(spark, SF)
+    df = QUERIES["q_jl_project"](spark, SF)
     audit = plans.plan_audit(df)
     assert audit["n_shuffles"] <= 1, audit
     assert audit["n_broadcast_joins"] == 0, audit
@@ -216,7 +217,7 @@ def test_jl_project_is_narrow(spark):
 def test_k_anonymize_broadcast_anti_join(spark):
     """Suppression must be a BROADCAST anti-join of the (gated,
     bounded) violating-class list — the corpus never sort-merges."""
-    df = entrymod.q_k_anonymize(spark, SF)
+    df = QUERIES["q_k_anonymize"](spark, SF)
     p = plans.explain_str(df)
     audit = plans.plan_audit(df)
     assert "LeftAnti" in p
@@ -227,7 +228,7 @@ def test_triangle_counts_no_cartesian(spark):
     """Degree-ordered triangle counting: every join is an equi-join
     (no cartesian/broadcast-nested-loop), and the wedge work happens
     on the checkpointed oriented edges."""
-    df = entrymod.q_triangle_counts(spark, SF)
+    df = QUERIES["q_triangle_counts"](spark, SF)
     p = plans.explain_str(df)
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
@@ -236,7 +237,7 @@ def test_triangle_counts_no_cartesian(spark):
 def test_benford_is_narrow_single_agg(spark):
     """Benford: one narrow projection + a 9-group aggregate + the
     broadcast total — no sort-merge join, at most 2 shuffles."""
-    df = entrymod.q_benford(spark, SF)
+    df = QUERIES["q_benford"](spark, SF)
     audit = plans.plan_audit(df)
     assert audit["n_sortmerge_joins"] == 0, audit
     assert audit["n_shuffles"] <= 2, audit
@@ -245,7 +246,7 @@ def test_benford_is_narrow_single_agg(spark):
 def test_interpolate_windows_are_partitioned(spark):
     """Gap interpolation must never fall into a global (unpartitioned)
     window — the repartition key is the series key."""
-    df = entrymod.q_interpolate_gaps(spark, SF)
+    df = QUERIES["q_interpolate_gaps"](spark, SF)
     p = plans.explain_str(df)
     import re
 

@@ -128,6 +128,9 @@ def test_stops_supplied_local_relation_matches_inline_max_df(spark):
     from databricks_flight_etl_spark.operators.dedup import (
         minhash_dedup_pairs,
     )
+    from databricks_flight_etl_spark.registry._common import (
+        _docs_near_dup_base,
+    )
 
     sf = "/root/testdata/sf0.001"
     supplied = sorted(
@@ -136,7 +139,7 @@ def test_stops_supplied_local_relation_matches_inline_max_df(spark):
             spark, sf
         ).collect()
     )
-    docs = entry._docs_near_dup_base(spark, sf).where(
+    docs = _docs_near_dup_base(spark, sf).where(
         (F.col("doc_id") % 200000) < 1500
     )
     b = docs.select(

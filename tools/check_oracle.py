@@ -37,9 +37,8 @@ TABLES = (
     "documents embeddings".split()
 )
 
-# The driver certifies the first DRIVER_WINDOW insertion-order
-# queries() keys — single definition exported by __spark_entry__
-# (duplicating the literal here was a round-8 drift-risk note).
+# The driver certifies the first 50 queries() keys: the names in
+# __spark_entry__.DRIVER_WINDOW, the one hand-kept list of them.
 from __spark_entry__ import DRIVER_WINDOW  # noqa: E402
 
 
@@ -89,9 +88,9 @@ def main() -> int:
     # The DRIVER's canonicalizer pandas-sorts every output column and
     # crashes on array/struct/map cells ("unhashable type: ndarray") —
     # our tolist() path would hide that locally. Any query inside the
-    # driver's evaluation window (first WINDOW insertion-order keys of
+    # driver's evaluation window (DRIVER_WINDOW, the first 50 keys of
     # queries()) must therefore emit only scalar columns.
-    window_keys = set(list(qs)[:DRIVER_WINDOW])
+    window_keys = set(DRIVER_WINDOW)
 
     for name, fn in qs.items():
         if only and name not in only:
