@@ -67,20 +67,24 @@ DRIVER_WINDOW = (
     "q_sql_surface",
     # 21-50 rotate each round: newly registered oracle-bearing queries
     # first, then the oldest-certified (latest windowed round, from
-    # CORRECTNESS_r*.json). r14: the r13 per-group model-eval queries,
-    # then the r04, r05 and r06 cohorts and the first 11 of r07
-    "q_auc_roc_grouped", "q_calibration_grouped",
-    "q_threshold_sweep_grouped",
-    "q_tfidf", "q_triangle_counts",
-    "q_association_pairs", "q_bpe_merges", "q_diff_cells",
-    "q_grouped_corr", "q_ngram_jaccard", "q_period_over_period",
-    "q_quality_signals", "q_transition_matrix",
-    "q_hamming_near_dup", "q_leakage_safe_split", "q_line_dedup",
-    "q_mad_grouped", "q_ohlc_bars", "q_repetition_signals",
-    "q_chunk_documents", "q_contamination", "q_corpus_release",
-    "q_cosine_topk", "q_decode_features", "q_dedup_clusters",
-    "q_dedup_exact", "q_deterministic_sample", "q_domain_caps",
-    "q_join_inner", "q_join_outer",
+    # CORRECTNESS_r*.json), alphabetically within a round.
+    # the two oracle-bearing queries never windowed before
+    "q_auc_drift", "q_ece_drift",
+    # changed in r15
+    "q_chi_square", "q_pagerank", "q_set_similarity_join",
+    "q_containment_join",
+    # kept for X2 (similarity), X5 (joins) and X6 (sampling) coverage
+    "q_cosine_topk", "q_join_inner", "q_deterministic_sample",
+    # the r07 cohort, last certified in r07
+    "q_ks_drift", "q_ks_drift_grouped", "q_ks_drift_report",
+    "q_linear_scorer", "q_streaming_drift", "q_strip_html",
+    "q_streaming_heavy_hitters", "q_token_counts", "q_text_quality",
+    "q_lang_id", "q_minhash_certified", "q_simhash_certified",
+    "q_multimodal_meta", "q_pii_redact", "q_winnow_certified",
+    "q_pack_shards", "q_textprep_exact", "q_textprep_full_certified",
+    "q_streaming_day_counts",
+    # the oldest of the r08 cohort
+    "q_binary_file_source", "q_bloom_semi_join",
 )
 
 

@@ -30,25 +30,6 @@ def test_query_runs(spark, name):
     df.limit(5).collect()
 
 
-def test_driver_window_queries_scalar_only(spark):
-    """The driver's pandas canonicalizer crashes on array/struct/map
-    cells — every query inside its 50-entry evaluation window
-    (DRIVER_WINDOW, the first 50 queries() keys) must emit only scalar
-    columns. Schema-only:
-    building the DataFrame analyzes the plan without running it."""
-    from pyspark.sql import types as T
-
-    qs = entrymod.queries()
-    for name in entrymod.DRIVER_WINDOW:
-        df = qs[name](spark, SF_DIR)
-        bad = [
-            f"{f.name}:{f.dataType.simpleString()}"
-            for f in df.schema.fields
-            if isinstance(f.dataType, (T.ArrayType, T.StructType, T.MapType))
-        ]
-        assert not bad, (name, bad)
-
-
 def test_all_exports_exist():
     """Every name in every module's __all__ must resolve — a missing
     comma in the list silently concatenates two names into one bogus
