@@ -27,7 +27,6 @@ __all__ = [
     "count_operator",
     "lambda_filters",
     "plan_audit",
-    "observe_quality",
 ]
 
 
@@ -253,23 +252,3 @@ def plan_audit(df: DataFrame) -> dict:
         "has_take_ordered": has_operator(df, "TakeOrderedAndProject"),
         "n_lambda_filters": lambda_filters(df),
     }
-
-
-def observe_quality(df: DataFrame, name: str, metrics: dict | None = None):
-    """Attach an in-flight metrics observation to ``df`` — production
-    monitoring without a second scan: the metrics are accumulated
-    DURING whatever action next runs the frame (the `df.observe`
-    surface), so a 100 TB write also yields its row count and null
-    tallies for free.
-
-    ``metrics`` maps output name → aggregate Column; default is a row
-    count. Returns (instrumented_df, observation); read
-    ``observation.get`` AFTER an action has run.
-    """
-    from pyspark.sql import Observation
-
-    if metrics is None:
-        metrics = {"n_rows": F.count(F.lit(1))}
-    obs = Observation(name)
-    cols = [v.alias(k) for k, v in metrics.items()]
-    return df.observe(obs, *cols), obs

@@ -508,21 +508,6 @@ def test_stateless_text_ops_compose_with_streams(spark, tmp_path):
     assert quality_signals(stream, "text", "doc_id").isStreaming
 
 
-def test_observe_quality_metrics_free_with_action(spark):
-    from databricks_flight_etl_spark import plans as P
-
-    df = spark.createDataFrame(
-        [(1, None), (2, "x"), (3, "y")], "id long, s string"
-    )
-    inst, obs = P.observe_quality(
-        df, "q",
-        {"n_rows": F.count(F.lit(1)),
-         "n_null_s": F.sum(F.col("s").isNull().cast("long"))},
-    )
-    assert inst.count() == 3          # the action that feeds the observation
-    assert obs.get == {"n_rows": 3, "n_null_s": 1}
-
-
 def test_compact_parquet(spark, tmp_path):
     src = str(tmp_path / "frag")
     dst = str(tmp_path / "compacted")

@@ -300,13 +300,16 @@ def _interleaved(spark):
 ], ids=lambda f: f.__name__.lstrip("_"))
 def test_hist_cumsum_callers_pin_nothing(spark, case):
     """Every _hist_cumsum caller returns one lazy plan: building and
-    collecting it leaves the session's persistent RDDs as they were,
-    and the result equals the hand-checked reference."""
+    collecting it persists no new RDD, and the result equals the
+    hand-checked reference. Only ids ADDED during the case count: an
+    RDD persisted by an earlier test may be released while the case
+    runs (the ContextCleaner unpersists it once its Python frame is
+    collected), which is not a pin this case made."""
     def rdd_ids():
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         return {int(k) for k in jmap.keySet().toArray()}
 
     before = rdd_ids()
     got, want = case(spark)
-    assert rdd_ids() == before
+    assert rdd_ids() - before == set()
     assert got == want

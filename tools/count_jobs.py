@@ -13,6 +13,12 @@ column the count does not need (a histogram query's whole prefix-sum
 can vanish), so it would not measure the work the query's result
 costs. Job ids are counted via a fresh job group per rep, so
 concurrent sessions don't pollute the count.
+
+Each query first runs one untimed warm-up rep: the first run of a
+query in a session is 1.5-3.5x slower than the second (JIT and codegen
+of that plan), so without it the median of a few reps straddles one
+cold run and warm ones. Jobs are counted on every timed rep, not on
+the warm-up.
 """
 
 from __future__ import annotations
@@ -47,6 +53,8 @@ def main() -> None:
     qs = entrymod.queries()
     for name in args.queries:
         fn = qs[name]
+        fn(spark, args.sf).collect()  # untimed warm-up (docstring)
+        spark.catalog.clearCache()
         n_jobs, walls = [], []
         for _ in range(args.reps):
             group = str(uuid.uuid4())
