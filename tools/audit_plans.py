@@ -1,6 +1,8 @@
 """Generate PLANS.md: a physical-plan audit of every harness query.
 
-For each ``queries()`` entry, build the DataFrame at the given sf_dir
+For each ``queries()`` entry (the ``@query`` registry in
+``databricks_flight_etl_spark/registry/``, read through
+``__spark_entry__``), build the DataFrame at the given sf_dir
 (default sf0.001 — plan SHAPE, not data, is what's audited; shapes match
 at higher SFs except where AQE swaps broadcast⇄SMJ by size) and record
 plans.plan_audit: shuffle count, join strategies, pushed filters, scan

@@ -2,7 +2,9 @@
 
 Runs every ``queries()`` entry from ``__spark_entry__`` on Spark and the
 matching ``oracle_sql()`` on DuckDB (tables pre-registered as views over
-the same parquet), then compares:
+the same parquet). Both are derived from the ``@query`` registry in
+``databricks_flight_etl_spark/registry/``, where each ``q_`` function
+carries its oracle SQL. The run compares:
 
 - row count
 - sorted column-name list

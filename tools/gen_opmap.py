@@ -1,9 +1,13 @@
 """Generate OPMAP.md: the auditable query → oracle-type → description
-map for every harness query in `__spark_entry__.py`.
+map for every harness query.
 
-Run `python tools/gen_opmap.py` after adding queries; the table is
-derived from queries()/oracle_sql() themselves so it can't drift from
-the code. README links here instead of restating 200+ rows in prose.
+Run `python tools/gen_opmap.py` after adding queries. The table is read
+through the driver contract (`__spark_entry__.queries()` and
+`oracle_sql()`, both derived from the `@query` registry in
+`databricks_flight_etl_spark/registry/`), in `queries()` order: the 50
+driver-window queries first. Each description is the query's docstring,
+so the table can't drift from the code. README links here instead of
+restating 200+ rows in prose.
 """
 
 from __future__ import annotations
