@@ -53,8 +53,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # The driver's correctness gate evaluates only the first 50
 # insertion-order queries() keys, so they must all be oracle-certified
-# and scalar-only (tests/test_registry.py checks both). This tuple is
-# the only hand-kept list of query names.
+# and scalar-only (tests/test_registry.py checks the window). This
+# tuple is the only hand-kept list of query names.
 DRIVER_WINDOW = (
     # 1-20: SURVEY §2 reference parity (scan, quality suite, derive,
     # validity, sinks, SQL surface) — pinned, never rotated
@@ -70,12 +70,12 @@ DRIVER_WINDOW = (
     # CORRECTNESS_r*.json), alphabetically within a round.
     # the two oracle-bearing queries never windowed before
     "q_auc_drift", "q_ece_drift",
-    # changed in r15
+    # changed in r15, re-certified
     "q_chi_square", "q_pagerank", "q_set_similarity_join",
     "q_containment_join",
     # kept for X2 (similarity), X5 (joins) and X6 (sampling) coverage
     "q_cosine_topk", "q_join_inner", "q_deterministic_sample",
-    # the r07 cohort, last certified in r07
+    # the 19 queries last certified in r07
     "q_ks_drift", "q_ks_drift_grouped", "q_ks_drift_report",
     "q_linear_scorer", "q_streaming_drift", "q_strip_html",
     "q_streaming_heavy_hitters", "q_token_counts", "q_text_quality",

@@ -20,13 +20,13 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry  # noqa: E402
 from databricks_flight_etl_spark.registry import REGISTRY  # noqa: E402
 from databricks_flight_etl_spark.registry._common import query  # noqa: E402
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 GOLDEN = os.path.join(ROOT, "tests", "registry_golden.json")
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -57,14 +57,6 @@ def test_queries_order_and_freshness():
     assert all(qs[name] is REGISTRY[name][0] for name in qs)
     qs.clear()
     assert len(entry.queries()) == len(REGISTRY)
-
-
-def test_oracle_sql_is_the_oracle_bearing_queries():
-    oracles = entry.oracle_sql()
-    assert oracles == {
-        name: sql for name, (_, sql) in REGISTRY.items() if sql is not None
-    }
-    assert all(isinstance(sql, str) and sql.strip() for sql in oracles.values())
 
 
 def test_query_decorator_contract():
